@@ -31,11 +31,42 @@ final case class IngestResult(loaded: Long, quarantined: Long,
   * loaded. We derive it from the incoming batch's earliest new pickup,
   * which is the behavior the README documents.
   *
-  * Scale posture: one scan of the incoming batch feeds both the
-  * in-window append and the quarantine split (Ops.windowSplit);
-  * bronze is partitioned by pickup_month so the watermark recompute
-  * (A2) and all downstream month-ranged reads prune partitions; the
-  * quarantine anti-join is broadcast + month-pruned (MetaStore).
+  * Scale posture: a month with out-of-window rows costs about nine
+  * Spark jobs, a re-ingest three, whatever the quarantine's history.
+  * In order:
+  *  1. the watermark, read driver-side from the ledger (no job);
+  *  2. the quarantine keys of the watermark's month and later, one
+  *     partition-pruned scan whose months come from a driver-side
+  *     listing, held on the driver ([[MetaStore.quarantinedKeysFrom]]);
+  *     skipped when no such partition exists;
+  *  3. one count of the new rows (newer than the watermark, anti-
+  *     joined against those keys) by pickup month, each partition
+  *     counting its own and the driver summing them: the earliest
+  *     month is the window, its count is `loaded`, and any later month
+  *     holds rows to quarantine;
+  *  4. the bronze append of the window month, then the watermark
+  *     recompute, a top-1 job over the window month's bronze
+  *     partition;
+  *  5. beside step 4, on a second thread that is joined before step 6
+  *     (`Ops.alongside`), and only when step 3 saw a later month: the
+  *     quarantine append, which counts its rows through an
+  *     `Observation` on the write;
+  *  6. the ledger row, written driver-side (no job).
+  * A re-ingest stops after step 3 and writes the ledger row. Only
+  * steps 3-5 read the batch; each of them also runs one small job that
+  * broadcasts the driver-held keys of step 2. Steps 4 and 5 write
+  * different tables and neither reads what the other writes, so
+  * overlapping them changes no result; a failure in either fails the
+  * call once both are done. The one partial state this adds, the
+  * quarantine written and bronze not, re-runs cleanly: the anti-join
+  * skips the quarantined rows, and they never lie in the window month.
+  * Listing-derived months are equivalent to the batch's own: the
+  * quarantine key contains `tpep_pickup_datetime`, so a new row can
+  * only collide with a quarantined row of its own pickup month, and no
+  * new row is older than the watermark's month. The window is "the
+  * earliest pickup month of the new rows" in the session timezone —
+  * the `yyyy-MM` key the partition values use, and the month
+  * `date_trunc("month", …)` starts for the earliest new row.
   */
 final class BronzeIngest(spark: SparkSession, warehouse: String,
                          meta: MetaStore) {
@@ -65,61 +96,40 @@ final class BronzeIngest(spark: SparkSession, warehouse: String,
       // them — breaking idempotency (C4). The PG reference gets this
       // for free from the invalid_records composite PK; our analog is
       // the same left-anti join used for ON CONFLICT (J3), against the
-      // small (broadcast) quarantine table.
-      val candidates =
-        batch.filter(col("tpep_pickup_datetime") > lit(lld))
-      // Months spanned by the candidates — a map-side-combined
-      // distinct over one or two values per monthly batch — so the
-      // anti-join below reads only those quarantine partitions
-      // (PartitionFilters, locked by PlanSpec) instead of the whole
-      // ever-growing table.
-      val candMonths = candidates
-        .select(date_format(col("tpep_pickup_datetime"), "yyyy-MM")
-          .as("pickup_month"))
-        .distinct().collect().map(_.getString(0)).toSeq
-      val newRows = Ops.insertIfAbsent(
-        candidates, meta.invalidRecordsForMonths(candMonths),
-        Schemas.invalidRecordsKey, broadcastExisting = true)
+      // driver-held keys of the quarantine months a new row can hit.
+      val newRows = batch.filter(col("tpep_pickup_datetime") > lit(lld))
+        .join(broadcast(meta.quarantinedKeysFrom(meta.monthOf(lld))),
+          Schemas.invalidRecordsKey, "left_anti")
+        .withColumn("pickup_month",
+          date_format(col("tpep_pickup_datetime"), "yyyy-MM"))
 
-      // Window = calendar month of the earliest new row in the batch
-      // (min is a cheap scalar agg on the already-staged batch).
-      val minNew = newRows
-        .agg(min(col("tpep_pickup_datetime"))).first().get(0)
-      val result = minNew match {
-        case null => // nothing newer than the watermark: idempotent no-op
+      // (month, rows) of the new rows, earliest month first: the
+      // first is the window, the rest are out of window.
+      val months = BronzeIngest.rowsPerMonth(newRows)
+      val result = months.headOption match {
+        case None => // nothing newer than the watermark: idempotent no-op
           IngestResult(0L, 0L, lld, 0.0)
-        case ts: Timestamp =>
-          val winStart = date_trunc("month", lit(ts))
-          val winEnd = add_months(winStart, 1)
-          val (inWin, outWin) = Ops.windowSplit(
-            newRows, "tpep_pickup_datetime", lit(lld), winStart, winEnd)
-
-          val loaded = inWin.count()
-          if (loaded > 0)
-            inWin.withColumn("pickup_month",
-                date_format(col("tpep_pickup_datetime"), "yyyy-MM"))
+        case Some((window, loaded)) =>
+          val inWindow = col("pickup_month") === window
+          // The quarantine append touches neither bronze nor the
+          // ledger, so it runs beside the bronze append and the
+          // watermark recompute instead of after them.
+          val (wm, quarantined) = Ops.alongside(
+            if (months.length > 1) meta.quarantine(newRows.filter(!inWindow))
+            else 0L) {
+            newRows.filter(inWindow)
               .write.mode("append").partitionBy("pickup_month")
               .parquet(bronzePath)
-          val quarantined = meta.quarantine(outWin)
-
-          // Recompute the watermark from bronze *contents* within the
-          // window — not from the batch — so partial failures re-run
-          // cleanly (C4, bronze_incremental_load.sql:64-65). The
-          // pickup_month filter makes this a partition-pruned scan.
-          // The key is rendered in the SESSION timezone — the same
-          // zone date_format used to write the pickup_month partition
-          // values (SimpleDateFormat used the JVM default zone, which
-          // silently diverges on non-UTC hosts).
-          val monthKey = java.time.format.DateTimeFormatter
-            .ofPattern("yyyy-MM")
-            .withZone(java.time.ZoneId.of(
-              spark.sessionState.conf.sessionLocalTimeZone))
-            .format(ts.toInstant)
-          val wm = bronze.filter(col("pickup_month") === monthKey)
-            .agg(max(col("tpep_pickup_datetime"))).first().get(0) match {
+            // Recompute the watermark from bronze *contents* within the
+            // window — not from the batch — so partial failures re-run
+            // cleanly (C4, bronze_incremental_load.sql:64-65). The
+            // pickup_month filter makes this a partition-pruned scan.
+            Ops.maxOf(bronze.filter(col("pickup_month") === window),
+                "tpep_pickup_datetime") match {
               case t: Timestamp => t
               case _ => lld
             }
+          }
           IngestResult(loaded, quarantined, wm, 0.0)
       }
       val secs = (System.nanoTime() - t0) / 1e9
@@ -132,5 +142,21 @@ final class BronzeIngest(spark: SparkSession, warehouse: String,
           Some(Option(e.getMessage).getOrElse(e.getClass.getName)))
         throw e
     }
+  }
+}
+
+object BronzeIngest {
+
+  /** (pickup_month, rows) of `rows`, earliest month first. Each
+    * partition counts its own months and the driver sums the few
+    * (month, count) pairs: one Spark job, where a grouped aggregate
+    * costs adaptive execution a second one for its shuffle. */
+  private def rowsPerMonth(rows: DataFrame): Seq[(String, Long)] = {
+    import rows.sparkSession.implicits._
+    rows.select("pickup_month").as[String].mapPartitions { it =>
+      val n = scala.collection.mutable.HashMap.empty[String, Long]
+      it.foreach(m => n(m) = n.getOrElse(m, 0L) + 1)
+      n.iterator
+    }.collect().toSeq.groupMapReduce(_._1)(_._2)(_ + _).toSeq.sortBy(_._1)
   }
 }

@@ -2,8 +2,9 @@ package graft.meta
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.TinyParquetShim
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.Ops
@@ -27,9 +28,10 @@ object RunStatus {
   *   meta/invalid_records/           quarantine, partitioned by pickup_month
   * }}}
   * Quarantine is partitioned by month so the insert-if-absent anti-join
-  * prunes to the months actually present in the incoming batch instead
-  * of scanning the whole ever-growing table (SURVEY §7.5 risk 3) — the
-  * 100 TB posture for ON CONFLICT DO NOTHING.
+  * reads only the months a new row can collide with (the watermark's
+  * month and later, found by listing) instead of scanning the whole
+  * ever-growing table (SURVEY §7.5 risk 3) — the 100 TB posture for
+  * ON CONFLICT DO NOTHING.
   */
 final class MetaStore(spark: SparkSession, warehouse: String) {
   private val ledgerPath = s"$warehouse/meta/metadata_table"
@@ -62,50 +64,97 @@ final class MetaStore(spark: SparkSession, warehouse: String) {
     invalidRecords.filter(col("pickup_month").isin(months: _*))
 
   /** `COALESCE(MAX(last_load_date), '2024-01-01')` — A1/F1
-    * (bronze_incremental_load.sql:18-20). One tiny scalar agg over the
-    * ledger; the ledger stays kilobytes even after years of runs. */
+    * (bronze_incremental_load.sql:18-20). Read driver-side
+    * (TinyParquetShim), no Spark job: the ledger gains one row a run
+    * and stays kilobytes even after years of runs. */
   def watermark(): Timestamp =
-    ledger.agg(max(col("last_load_date"))).first().get(0) match {
-      case ts: Timestamp => ts
-      case _ => defaultWatermark
-    }
+    TinyParquetShim.readRows(spark, ledgerPath).getOrElse(Nil)
+      .flatMap(r => Option(r.getAs[Timestamp]("last_load_date")))
+      .reduceOption((a, b) => if (a.after(b)) a else b)
+      .getOrElse(defaultWatermark)
 
-  /** Append one run row — C3 (bronze_incremental_load.sql:67-78). */
+  /** Append one run row — C3 (bronze_incremental_load.sql:67-78).
+    * Written driver-side as one new part file (TinyParquetShim, the
+    * same file schema a DataFrame write produces): a one-row append
+    * needs no Spark job or commit protocol. */
   def appendRun(lastLoadDate: Timestamp, status: RunStatus,
-                runtimeSeconds: Double, errorMessage: Option[String]): Unit = {
-    val row = Row(lastLoadDate, status.value, runtimeSeconds,
-      errorMessage.orNull)
-    spark.createDataFrame(
-        java.util.List.of(row), Schemas.metadataTable)
-      .write.mode("append").parquet(ledgerPath)
+                runtimeSeconds: Double, errorMessage: Option[String]): Unit =
+    TinyParquetShim.appendDir(spark, Schemas.metadataTable,
+      Seq(Row(lastLoadDate, status.value, runtimeSeconds,
+        errorMessage.orNull)), ledgerPath)
+
+  /** The session-timezone `yyyy-MM` month of `ts` — the key that
+    * `date_format(…, "yyyy-MM")` writes as the `pickup_month` partition
+    * value and that `date_trunc("month", …)` bounds (a JVM-default-zone
+    * formatter would silently diverge on non-UTC hosts). */
+  private[graft] def monthOf(ts: Timestamp): String =
+    java.time.format.DateTimeFormatter.ofPattern("yyyy-MM")
+      .withZone(java.time.ZoneId.of(
+        spark.sessionState.conf.sessionLocalTimeZone))
+      .format(ts.toInstant)
+
+  /** Quarantine months at or after `fromMonth`, from a driver-side
+    * listing of the `pickup_month=…` partition directories — no Spark
+    * job, and the months come back sorted. */
+  private def quarantineMonthsFrom(fromMonth: String): Seq[String] = {
+    val root = new org.apache.hadoop.fs.Path(invalidPath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.filter(_.isDirectory)
+      .map(_.getPath.getName)
+      .collect { case s"pickup_month=$m" if m >= fromMonth => m }
+      .sorted
   }
 
-  /** Quarantine out-of-window rows with ON-CONFLICT-DO-NOTHING
-    * semantics on the 7-column composite key — J3
-    * (bronze_incremental_load.sql:46-62; key src/db_setup.py:129-137).
+  /** The distinct composite keys of every quarantine row whose pickup
+    * month is `fromMonth` or later, read once and held on the driver:
+    * the result is a LocalRelation, so every action that broadcasts it
+    * ships these rows instead of scanning the quarantine again.
     *
-    * The anti-join right side is restricted to the quarantine months
-    * present in the incoming batch (partition-pruned scan), and the
-    * incoming batch is itself key-deduplicated first so one batch
-    * cannot insert the same key twice. */
+    * The months come from [[quarantineMonthsFrom]], so the one scan (one
+    * Spark job; the keys are deduplicated on the driver) is
+    * partition-pruned (`PartitionFilters: [pickup_month IN (…)]`) to
+    * the listed months and skipped when there are none. Called with the
+    * watermark's month, this slice holds every key a row newer than the
+    * watermark can collide with: the key contains
+    * `tpep_pickup_datetime`, and a quarantined row lives in the
+    * partition of its own pickup month, which is never earlier than
+    * the watermark's month for a newer row. Older quarantine history is
+    * never read, so ingest cost stays flat as the table grows. */
+  private[graft] def quarantinedKeysFrom(fromMonth: String): DataFrame = {
+    val keys = Schemas.invalidRecordsKey
+    val months = quarantineMonthsFrom(fromMonth)
+    val rows =
+      if (months.isEmpty) Seq.empty[Row]
+      else invalidRecordsForMonths(months).select(keys.map(col): _*)
+        .collect().toSeq.distinct
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(keys.map(Schemas.bronze(_))))
+  }
+
+  /** Quarantine out-of-window rows — J3 (bronze_incremental_load.sql:
+    * 46-62; key src/db_setup.py:129-137). Returns the rows written.
+    *
+    * The rows must already be absent from the quarantine: the
+    * ON-CONFLICT-DO-NOTHING half of J3 is the anti-join
+    * `BronzeIngest.ingest` runs against [[quarantinedKeysFrom]] before
+    * it splits the batch, and that slice covers every month these rows
+    * can fall in. Here the rows are only key-deduplicated among
+    * themselves, so one batch cannot insert the same key twice.
+    *
+    * Scale posture: one Spark action, the partitioned append; the
+    * written-row count rides along as an `Observation` on that write
+    * instead of a separate `count()` re-running the plan. */
   def quarantine(outOfWindow: DataFrame): Long = {
     val withMonth = outOfWindow.withColumn("pickup_month",
       date_format(col("tpep_pickup_datetime"), "yyyy-MM"))
-    val batch = Ops.dedupFirst(withMonth, Schemas.invalidRecordsKey,
+    val fresh = Ops.dedupFirst(withMonth, Schemas.invalidRecordsKey,
       Seq(col("tpep_dropoff_datetime"), col("fare_amount")))
-    // Distinct months in the batch: a map-side-combined agg that
-    // returns a handful of values (out-of-window rows cluster around
-    // the window edges), bought once so the anti-join's quarantine
-    // scan is partition-pruned instead of full.
-    val months = batch.select("pickup_month").distinct()
-      .collect().map(_.getString(0)).toSeq
-    val fresh = Ops.insertIfAbsent(batch, invalidRecordsForMonths(months),
-      Schemas.invalidRecordsKey, broadcastExisting = true)
-    val n = fresh.count()
-    if (n > 0)
-      fresh.write.mode("append").partitionBy("pickup_month")
-        .parquet(invalidPath)
-    n
+    val written = Observation()
+    fresh.observe(written, count(lit(1)).as("n"))
+      .write.mode("append").partitionBy("pickup_month")
+      .parquet(invalidPath)
+    written.get("n").asInstanceOf[Long]
   }
 }
 

@@ -83,6 +83,35 @@ object Ops {
     (df.filter(newRows && inWindow), df.filter(newRows && !inWindow))
   }
 
+  /** `MAX(c)` over `df` in one Spark job: a top-1 ordered take keeps a
+    * per-partition top row and merges on the driver, where a global
+    * aggregate's single-partition exchange costs adaptive execution a
+    * second job. NULLs sort last, so the result is NULL only when every
+    * value is NULL or `df` is empty, as with `MAX`. */
+  def maxOf(df: DataFrame, c: String): Any =
+    df.select(col(c)).orderBy(col(c).desc_nulls_last).limit(1)
+      .collect().headOption.map(_.get(0)).orNull
+
+  /** Runs `side` on a thread of its own while `main` runs on the
+    * caller's, and returns (main's result, side's result) once both
+    * are done — for two Spark actions that share no output, so their
+    * driver-side planning and commits overlap. The thread is joined
+    * before this returns, also when `main` throws, so no work outlives
+    * the call; main's failure wins, then side's. A fresh thread rather
+    * than the shared pool behind `StoredIndex.async`: a new thread
+    * inherits the caller's Spark local properties (job group, call
+    * site) as they are now, where a pooled one keeps those of the
+    * caller that happened to create it. */
+  def alongside[A, B](side: => A)(main: => B): (B, A) = {
+    var sideResult: Either[Throwable, A] = null
+    val t = new Thread(() => sideResult =
+      try Right(side) catch { case e: Throwable => Left(e) })
+    t.setDaemon(true)
+    t.start()
+    val m = try main finally t.join()
+    (m, sideResult.fold(e => throw e, identity))
+  }
+
   /** Insert-if-absent, i.e. PG `ON CONFLICT (keys) DO NOTHING`
     * (reference src/sql/bronze_incremental_load.sql:61-62 with the
     * 7-column composite PK of src/db_setup.py:129-137; SURVEY §2.3 J3).

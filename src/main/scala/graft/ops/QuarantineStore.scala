@@ -77,8 +77,8 @@ object QuarantineStore {
     * that month's quarantine partitions. The filter on the partition
     * key becomes PartitionFilters at the scan (locked by PlanSpec),
     * so probe cost doesn't grow with quarantine history; the pruned
-    * slice is one month of rejects — bounded, so broadcast, exactly
-    * like the bronze ingest's candMonths anti-join. Semantically
+    * slice is one month of rejects — bounded, so broadcast, like the
+    * bronze ingest's slice of quarantine keys. Semantically
     * equal to the full anti-join because the key contains
     * o_orderdate: out-of-month quarantine rows can never match an
     * in-month candidate. */

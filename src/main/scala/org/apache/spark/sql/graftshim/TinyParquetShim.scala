@@ -15,6 +15,7 @@ import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType,
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.types._
 
@@ -143,6 +144,13 @@ object TinyParquetShim {
       .readFooter(conf, file)
     val mt = footer.getFileMetaData.getSchema
     val sparkSchema = toSparkSchema(mt)
+    // a LEGACY rebase mode writes hybrid-calendar timestamps, which
+    // only Spark's rebase decodes: refuse them rather than mis-decode
+    val legacy = Seq("org.apache.spark.legacyINT96",
+      "org.apache.spark.legacyDateTime")
+    require(!sparkSchema.exists(_.dataType == TimestampType) ||
+      !legacy.exists(footer.getFileMetaData.getKeyValueMetaData.containsKey),
+      s"TinyParquetShim: $file holds legacy-calendar timestamps")
     val reader = ParquetReader
       .builder(new GroupReadSupport(), file).withConf(conf).build()
     try {
@@ -165,7 +173,14 @@ object TinyParquetShim {
           "reads are for flat control-plane assets only")
       val p = f.asPrimitiveType()
       val dt = p.getPrimitiveTypeName match {
-        case PrimitiveType.PrimitiveTypeName.INT64 => LongType
+        case PrimitiveType.PrimitiveTypeName.INT96 => TimestampType
+        case PrimitiveType.PrimitiveTypeName.INT64 =>
+          p.getLogicalTypeAnnotation match {
+            case a: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+                if a.isAdjustedToUTC && a.getUnit !=
+                  LogicalTypeAnnotation.TimeUnit.NANOS => TimestampType
+            case _ => LongType
+          }
         case PrimitiveType.PrimitiveTypeName.INT32 =>
           p.getLogicalTypeAnnotation match {
             case a: LogicalTypeAnnotation.IntLogicalTypeAnnotation
@@ -199,6 +214,21 @@ object TinyParquetShim {
       if (g.getFieldRepetitionCount(i) == 0) null
       else schema.fields(i).dataType match {
         case LongType => g.getLong(i, 0)
+        case TimestampType => DateTimeUtils.toJavaTimestamp(
+          mt.getType(i).asPrimitiveType.getPrimitiveTypeName match {
+            case PrimitiveType.PrimitiveTypeName.INT96 =>
+              // Spark's INT96 layout: nanos of day, then the Julian day
+              val b = g.getInt96(i, 0).toByteBuffer
+                .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+              val nanos = b.getLong
+              DateTimeUtils.fromJulianDay(b.getInt, nanos)
+            case _ => mt.getType(i).getLogicalTypeAnnotation match {
+              case a: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+                  if a.getUnit == LogicalTypeAnnotation.TimeUnit.MILLIS =>
+                Math.multiplyExact(g.getLong(i, 0), 1000L)
+              case _ => g.getLong(i, 0)
+            }
+          })
         case IntegerType => g.getInteger(i, 0)
         case DoubleType => g.getDouble(i, 0)
         case FloatType => g.getFloat(i, 0)

@@ -202,4 +202,25 @@ class OpsSpec extends SparkTestBase {
       .as[(String, Long)].collect().toSet
     assert(agg == win)
   }
+
+  test("alongside runs both sides at once and joins the side before any failure escapes") {
+    // each side waits for the other to start: true on both only if they overlap
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val mainStarted, sideStarted = new CountDownLatch(1)
+    val both = Ops.alongside {
+      sideStarted.countDown(); mainStarted.await(10, TimeUnit.SECONDS)
+    } { mainStarted.countDown(); sideStarted.await(10, TimeUnit.SECONDS) }
+    assert(both == ((true, true)))
+    val sideDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val m = intercept[IllegalStateException] {
+      Ops.alongside { Thread.sleep(200); sideDone.set(true) } {
+        throw new IllegalStateException("main")
+      }
+    }
+    assert(m.getMessage == "main" && sideDone.get)
+    val s = intercept[IllegalArgumentException] {
+      Ops.alongside[Int, Int](throw new IllegalArgumentException("side"))(1)
+    }
+    assert(s.getMessage == "side")
+  }
 }

@@ -113,6 +113,30 @@ class PipelineSpec extends SparkTestBase {
     assert(spark.read.parquet(s"$wh/silver/ratecode").count() >= 6)
   }
 
+  test("watermark reads ledgers Spark wrote, in each timestamp encoding") {
+    import java.sql.Timestamp
+    import org.apache.spark.sql.Row
+    import graft.meta.MetaStore
+    import graft.schema.Schemas
+    val key = "spark.sql.parquet.outputTimestampType"
+    val previous = spark.conf.get(key)
+    val latest = Timestamp.valueOf("2024-03-31 23:59:58.123456")
+    try for (enc <- Seq("INT96", "TIMESTAMP_MICROS", "TIMESTAMP_MILLIS")) {
+      spark.conf.set(key, enc)
+      val wh = freshWarehouse()
+      val meta = new MetaStore(spark, wh)
+      assert(meta.watermark() == meta.defaultWatermark)
+      val rows = Seq(Timestamp.valueOf("2024-01-31 10:00:00"), latest, null)
+        .map(t => Row(t, "success", 1.0, null))
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+          Schemas.metadataTable).repartition(2)
+        .write.parquet(s"$wh/meta/metadata_table")
+      val want = if (enc == "TIMESTAMP_MILLIS") Timestamp.valueOf("2024-03-31 23:59:58.123")
+        else latest
+      assert(meta.watermark() == want, enc)
+    } finally spark.conf.set(key, previous)
+  }
+
   test("failed ingest appends a failed ledger row and rethrows (C2)") {
     val wh = freshWarehouse()
     val p = new Pipeline(spark, wh)

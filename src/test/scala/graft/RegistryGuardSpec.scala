@@ -145,13 +145,6 @@ class RegistryGuardSpec extends SparkTestBase {
     // and the bounded final rank window are k1's audited shapes)
     "k11g_keyword_filtered_global" ->
       Set("unconditional-nested-loop", "global-window"),
-    // k12: the threshold serve is join→score→filter — NO rank
-    // window; only the two one-row stat broadcasts remain
-    "k12_keyword_range" -> Set("unconditional-nested-loop"),
-    // k23: k12's shapes with the tenant gauge row as the one-row
-    // stats broadcast and the grant as a pushed id IN literal — no
-    // rank window, no new unbounded relation
-    "k23_keyword_tenant_range" -> Set("unconditional-nested-loop"),
     // k15/k16: k11's audited shapes with the subset-stats side now a
     // ONE-ROW tstats gauge slice (tenant = … filter over the tenant-
     // count-sized asset — 1 row by the one-gauge-row-per-tenant
@@ -162,16 +155,6 @@ class RegistryGuardSpec extends SparkTestBase {
       Set("unconditional-nested-loop", "global-window"),
     "k16_keyword_tenant_lifecycle" ->
       Set("unconditional-nested-loop", "global-window"),
-    // k13: the batched serve's windows are all qid-partitioned (no
-    // global-window allowance — that IS the row's point); only the
-    // one-row stats-gauge broadcast remains
-    "k13_keyword_multi" -> Set("unconditional-nested-loop"),
-    // k17: k13's shapes on the filtered batch serve — the one-row
-    // stats-gauge broadcast is the only flagged relation (the
-    // allowed restriction is a KEYED (qid, id) semi-join). k18 needs
-    // NO allowance: Catalyst pushes the score-threshold filter into
-    // the stats join as its condition (e13's conditioned-BNLJ shape)
-    "k17_keyword_multi_filtered" -> Set("unconditional-nested-loop"),
     // st20: the returned frame IS KeywordIndex.probe over the
     // stream-maintained index (the ingest/takedown side effects run
     // eagerly outside the probed plan) — k1's audited shapes
