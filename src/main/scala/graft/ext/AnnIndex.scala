@@ -535,10 +535,18 @@ object AnnIndex {
     *    invariant as build/append/compact. */
   def remove(removed: DataFrame, dir: String,
              vecCol: String = "embedding",
-             idCol: String = "vec_id"): Unit = {
+             idCol: String = "vec_id"): Unit =
+    removeHeld(removed, StoredIndex.holdIds(removed, idCol), dir,
+      vecCol, idCol)
+
+  /** [[remove]] with the batch's id set already held — a takedown
+    * resolved it once ([[StoredIndex.holdIds]]) and passes it down. */
+  private[graft] def removeHeld(removed: DataFrame,
+                                ids: StoredIndex.Tombstones, dir: String,
+                                vecCol: String = "embedding",
+                                idCol: String = "vec_id"): Unit = {
     val spark = removed.sparkSession
-    StoredIndex.removeIds(spark, dir,
-      idsOf(removed, idCol).distinct().localCheckpoint(),
+    StoredIndex.removeIds(spark, dir, ids,
       identity(removed, vecCol, idCol).head,
       livePostings(spark, dir).select(col("nid").as("id")),
       "AnnIndex.remove")

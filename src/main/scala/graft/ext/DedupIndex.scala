@@ -371,10 +371,18 @@ object DedupIndex {
     * materializes the removal. `removed` must carry (id, text) —
     * one row per id, every id live. */
   def remove(removed: DataFrame, dir: String,
-             textCol: String = "text", idCol: String = "doc_id"): Unit = {
+             textCol: String = "text", idCol: String = "doc_id"): Unit =
+    removeHeld(removed, StoredIndex.holdIds(removed, idCol), dir,
+      textCol, idCol)
+
+  /** [[remove]] with the batch's id set already held — a takedown
+    * resolved it once ([[StoredIndex.holdIds]]) and passes it down. */
+  private[graft] def removeHeld(removed: DataFrame,
+                                ids: StoredIndex.Tombstones, dir: String,
+                                textCol: String = "text",
+                                idCol: String = "doc_id"): Unit = {
     val spark = removed.sparkSession
-    StoredIndex.removeIds(spark, dir,
-      idsOf(removed, idCol).distinct().localCheckpoint(),
+    StoredIndex.removeIds(spark, dir, ids,
       identity(removed, textCol, idCol).head,
       liveIds(spark, dir), "DedupIndex.remove")
   }

@@ -1244,18 +1244,18 @@ object KeywordIndex {
   /** Subtract a retraction's per-tenant mass from the gauge asset —
     * runs inside [[remove]]'s commit window when the overlay exists.
     * The removed docs' tenants come from the stored assignment (the
-    * retraction frame does not carry them), id-IN-pruned under the
-    * cap; dl comes from the removed frame's text, the same
+    * retraction frame does not carry them), id-IN-pruned by the held
+    * id set's literals; dl comes from the removed frame's text, the same
     * (id, text)-identity contract the XOR un-mix already requires.
     * Untenanted removed docs simply have no assignment row and fold
     * nothing. The assignment rows themselves stay until [[compact]]
     * materializes the tombstones — every overlay read tombstone-
     * filters, exactly like doclens. */
   private def foldTenantRemoval(spark: SparkSession, dir: String,
-                                removed: DataFrame, textCol: String,
-                                idCol: String): Unit = {
+                                removed: DataFrame,
+                                rIds: StoredIndex.Tombstones,
+                                textCol: String, idCol: String): Unit = {
     if (!hasTenants(spark, dir)) return
-    val rIds = idsOf(removed, idCol).distinct()
     val tRaw = spark.read.parquet(s"$dir/tenants")
     // no INDEX-tombstone filter: remove() guards its ids are LIVE,
     // and a tombstoned id cannot re-enter the index before a compact
@@ -1264,10 +1264,7 @@ object KeywordIndex {
     // mass was already subtracted at unassign time, and a reassigned
     // doc's old row would subtract from the WRONG tenant.
     val tHit = filterTenantDels(spark, dir,
-      allowedIdLiterals(rIds, AllowedPushdownCap) match {
-        case Some(l) => tRaw.filter(col("id").isin(l: _*))
-        case None    => tRaw.join(broadcast(rIds), Seq("id"), "left_semi")
-      })
+      StoredIndex.semiIdFilter(rIds, tRaw, "id"))
     val delta = tenantGaugesOf(
         removed.select(col(idCol).cast("long").as("id"),
             size(TextAnalysis.tokens(col(textCol))).cast("long").as("dl"))
@@ -1795,7 +1792,17 @@ object KeywordIndex {
     * contract the XOR un-mix already requires. `removed` must carry
     * (id, text), one row per id, every id live. */
   def remove(removed: DataFrame, dir: String,
-             textCol: String = "text", idCol: String = "doc_id"): Unit = {
+             textCol: String = "text", idCol: String = "doc_id"): Unit =
+    removeHeld(removed, StoredIndex.holdIds(removed, idCol), dir,
+      textCol, idCol)
+
+  /** [[remove]] with the batch's id set already held — a takedown
+    * resolved it once ([[StoredIndex.holdIds]]) and passes it down,
+    * the tenant-gauge fold included. */
+  private[graft] def removeHeld(removed: DataFrame,
+                                ids: StoredIndex.Tombstones, dir: String,
+                                textCol: String = "text",
+                                idCol: String = "doc_id"): Unit = {
     val spark = removed.sparkSession
     val oldStats = readStatsRow(spark, dir)
     // identity fingerprint + stats delta in ONE batch pass (was two
@@ -1808,15 +1815,13 @@ object KeywordIndex {
         expr("bit_xor(xxhash64(__id, __t))").as("fingerprint"),
         coalesce(sum(size(TextAnalysis.tokens(col("__t"))).cast("long")),
           lit(0L)).as("sum_dl")).head
-    StoredIndex.removeIds(spark, dir,
-      idsOf(removed, idCol).distinct().localCheckpoint(),
-      gone,
+    StoredIndex.removeIds(spark, dir, ids, gone,
       liveIndexedIds(spark, dir), "KeywordIndex.remove",
       beforeMeta = () => {
         writeStats(spark, dir,
           oldStats.getLong(0) - gone.getLong(0),
           oldStats.getLong(1) - gone.getLong(3))
-        foldTenantRemoval(spark, dir, removed, textCol, idCol)
+        foldTenantRemoval(spark, dir, removed, ids, textCol, idCol)
       })
   }
 

@@ -3,10 +3,11 @@ package graft.ext
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream,
   FileNotFoundException}
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row,
   SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** The shared construction style of the stored-index family
@@ -67,9 +68,12 @@ object StoredIndex {
     * The handle rethrows the original failure (unwrapped), and every
     * caller joins BEFORE its commit marker lands — a crash or error
     * anywhere leaves the same invalidated-index state as the former
-    * sequential order. */
+    * sequential order. The task runs under the SUBMITTER's session
+    * and local properties (job group, call site), captured here —
+    * a reused pool thread would otherwise carry its creator's. */
   def async[T](f: => T): () => T = {
-    val task = new java.util.concurrent.FutureTask[T](() => f)
+    val run = org.apache.spark.sql.graftshim.ThreadContextShim.captured(f)
+    val task = new java.util.concurrent.FutureTask[T](() => run())
     overlapPool.execute(task)
     () => try task.get() catch {
       case e: java.util.concurrent.ExecutionException =>
@@ -85,7 +89,9 @@ object StoredIndex {
     * overlapped folds) with no cap and a fresh thread per action.
     * Capped at 6 live threads; overflow runs on the SUBMITTING
     * thread (CallerRuns), so nested use degrades to the former
-    * sequential order instead of deadlocking on an exhausted pool. */
+    * sequential order instead of deadlocking on an exhausted pool.
+    * Threads are reused for up to 30 s, so [[async]] hands each task
+    * its submitter's Spark context rather than the creator's. */
   private val overlapPool: java.util.concurrent.ThreadPoolExecutor = {
     val p = new java.util.concurrent.ThreadPoolExecutor(
       0, 6, 30L, java.util.concurrent.TimeUnit.SECONDS,
@@ -515,28 +521,108 @@ object StoredIndex {
     readIdAsset(spark, s"$dir/deletes", "id")
   }
 
-  /** Shared driver-literal-or-frame read of a flat long-id asset
-    * (tombstones, takedown ledgers): None iff missing/empty. */
+  /** Shared driver-literal-or-frame read of a long-id asset
+    * (tombstones, takedown ledgers): None iff missing or holding only
+    * `_`/`.` marker files. Flat `*.parquet` files under the caps read
+    * driver-side as literals; any other layout (nested or partitioned
+    * dirs, files without the suffix) falls back to the DataFrame read
+    * — never to None, which would silently drop every tombstone or
+    * ledgered id it holds. */
   def readIdAsset(spark: SparkSession, path: String,
-                  idCol: String): Option[Tombstones] = {
+                  idCol: String): Option[Tombstones] =
+    assetFiles(spark, path).map { files =>
+      val frame = () => spark.read.parquet(path).select(idCol)
+      val lits =
+        if (files.isEmpty || files.map(_.getLen).sum > TombstoneLitBytes) None
+        else org.apache.spark.sql.graftshim.TinyParquetShim
+          .readRows(spark, path)
+          .filter(_.forall(r => !r.isNullAt(r.fieldIndex(idCol))))
+          .map(_.map(_.getAs[Long](idCol)).sorted)
+          .filter(_.size <= TombstoneLitIds)
+      Tombstones(lits, frame)
+    }
+
+  /** The flat `*.parquet` data files of an id asset: None when the
+    * asset is missing or holds only `_`/`.` markers; Some(Nil) when
+    * it holds data in any other layout (the caller reads the frame). */
+  private def assetFiles(spark: SparkSession, path: String)
+      : Option[Seq[FileStatus]] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return None
-    val files = fs.listStatus(p).filter { st =>
+    val entries = fs.listStatus(p).toSeq.filter { st =>
       val n = st.getPath.getName
-      st.isFile && n.endsWith(".parquet") && !n.startsWith(".") &&
-        !n.startsWith("_")
+      !n.startsWith(".") && !n.startsWith("_")
     }
-    if (files.isEmpty) return None
-    val frame = () => spark.read.parquet(path).select(idCol)
-    val lits =
-      if (files.map(_.getLen).sum > TombstoneLitBytes) None
-      else org.apache.spark.sql.graftshim.TinyParquetShim
-        .readRows(spark, path)
-        .filter(_.forall(r => !r.isNullAt(r.fieldIndex(idCol))))
-        .map(_.map(_.getAs[Long](idCol)).sorted)
-        .filter(_.size <= TombstoneLitIds)
-    Some(Tombstones(lits, frame))
+    if (entries.isEmpty) None
+    else if (entries.forall(st =>
+        st.isFile && st.getPath.getName.endsWith(".parquet"))) Some(entries)
+    else Some(Nil)
+  }
+
+  /** A request's id set resolved ONCE into [[Tombstones]] form — the
+    * held set a retraction hands down its layers, so no layer
+    * re-derives it: sorted distinct driver literals when at most
+    * `cap` rows name it (one bounded collect; none for a local
+    * relation), otherwise the distinct frame, materialized once.
+    * Null ids name no row and are dropped. `cap <= 0` forces the
+    * frame form. */
+  private[graft] def holdIds(ids: DataFrame, idCol: String,
+                             cap: Int = HeldIdCap): Tombstones = {
+    val keys = ids.select(col(idCol).cast("long").as("id"))
+      .filter(col("id").isNotNull)
+    val rows = if (cap <= 0) None else {
+      val r = keys.limit(cap + 1).collect()
+      if (r.length > cap) None else Some(r.map(_.getLong(0)))
+    }
+    rows match {
+      case Some(r) => heldLiterals(ids.sparkSession, r.toSeq)
+      case None =>
+        val frame = keys.distinct().localCheckpoint()
+        Tombstones(None, () => frame)
+    }
+  }
+
+  /** Driver ids as a held set: sorted, distinct, with a local
+    * relation (column `id`) for the places that need a frame. */
+  private[graft] def heldLiterals(spark: SparkSession,
+                                  ids: Seq[Long]): Tombstones = {
+    val lits = ids.distinct.sorted.toIndexedSeq
+    Tombstones(Some(lits), () => spark.createDataFrame(
+      java.util.Arrays.asList(lits.map(Row(_)): _*),
+      StructType(Seq(StructField("id", LongType, nullable = false)))))
+  }
+
+  /** Literal-id cap of a held request ([[holdIds]]) — the takedown
+    * pushdown cap: below it the ids become an `IN` predicate the
+    * parquet reader prunes row groups with. */
+  private[graft] val HeldIdCap = 10000
+
+  /** Append a held id set to an id asset (ledger or tombstones) as
+    * column `idCol`: driver-side for literals (no write job), a Spark
+    * append for the frame form. An empty set writes nothing. */
+  private[graft] def appendHeldIds(spark: SparkSession, ids: Tombstones,
+                                   idCol: String,
+                                   dir: String): Unit = ids.litIds match {
+    case Some(l) if l.isEmpty => ()
+    case Some(l) =>
+      org.apache.spark.sql.graftshim.TinyParquetShim.appendDir(spark,
+        StructType(Seq(StructField(idCol, LongType))), l.map(Row(_)), dir)
+    case None =>
+      val f = ids.frame().toDF(idCol)
+      if (!f.isEmpty) f.write.mode("append").parquet(dir)
+  }
+
+  /** The semi filter of a [[Tombstones]] set over `df` — the rows
+    * whose `idCol` is in the set: a literal IN the parquet reader
+    * prunes row groups with (it lands in PushedFilters), the
+    * broadcast semi-join above the caps. */
+  def semiIdFilter(ts: Tombstones, df: DataFrame,
+                   idCol: String): DataFrame = ts.litIds match {
+    case Some(ids) if ids.isEmpty => df.filter(lit(false))
+    case Some(ids) => df.filter(col(idCol).isin(ids: _*))
+    case None => df.join(
+      broadcast(ts.frame().toDF(idCol)), Seq(idCol), "left_semi")
   }
 
   /** The anti filter of a [[Tombstones]] set over `df` — a literal
@@ -553,37 +639,29 @@ object StoredIndex {
       broadcast(ts.frame().toDF(idCol)), Seq(idCol), "left_anti")
   }
 
-  /** Driver-literal-or-frame read of a flat (id, tenant) PAIR asset
-    * (the families' overlay tombstones): Left(pairs) under the caps,
-    * Right(frame) above, None when absent/empty — [[readIdAsset]]'s
-    * two-column sibling. */
+  /** Driver-literal-or-frame read of an (id, tenant) PAIR asset (the
+    * families' overlay tombstones): Left(pairs) for flat files under
+    * the caps, Right(frame) above them or for any other layout, None
+    * when absent or markers-only — [[readIdAsset]]'s two-column
+    * sibling. */
   def readPairAsset(spark: SparkSession, path: String)
-      : Option[Either[Seq[(Long, String)], DataFrame]] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val files = fs.listStatus(p).filter { st =>
-      val n = st.getPath.getName
-      st.isFile && n.endsWith(".parquet") && !n.startsWith(".") &&
-        !n.startsWith("_")
+      : Option[Either[Seq[(Long, String)], DataFrame]] =
+    assetFiles(spark, path).map { files =>
+      val lits =
+        if (files.isEmpty || files.map(_.getLen).sum > TombstoneLitBytes) None
+        else org.apache.spark.sql.graftshim.TinyParquetShim
+          .readRows(spark, path)
+          .filter(_.forall(r => !r.isNullAt(r.fieldIndex("id")) &&
+            !r.isNullAt(r.fieldIndex("tenant"))))
+          .map(_.map(r =>
+            (r.getAs[Long]("id"), r.getAs[String]("tenant"))).sorted)
+          .filter(ps => ps.size <= TombstoneLitIds &&
+            ps.map(_._2).distinct.size <= 64)
+      lits match {
+        case Some(ps) => Left(ps)
+        case None => Right(spark.read.parquet(path).select("id", "tenant"))
+      }
     }
-    if (files.isEmpty) return None
-    val lits =
-      if (files.map(_.getLen).sum > TombstoneLitBytes) None
-      else org.apache.spark.sql.graftshim.TinyParquetShim
-        .readRows(spark, path)
-        .filter(_.forall(r => !r.isNullAt(r.fieldIndex("id")) &&
-          !r.isNullAt(r.fieldIndex("tenant"))))
-        .map(_.map(r =>
-          (r.getAs[Long]("id"), r.getAs[String]("tenant"))).sorted)
-        .filter(ps => ps.size <= TombstoneLitIds &&
-          ps.map(_._2).distinct.size <= 64)
-    lits match {
-      case Some(ps) => Some(Left(ps))
-      case None => Some(Right(
-        spark.read.parquet(path).select("id", "tenant")))
-    }
-  }
 
   /** Anti filter of a literal (id, tenant) pair set — per-tenant
     * id-IN terms OR'd and negated, with the same null-row-keeping
@@ -600,13 +678,6 @@ object StoredIndex {
         }.reduce(_ || _)
       df.filter(!coalesce(hit, lit(false)))
     }
-
-  /** Append a retraction batch to the tombstone asset (inside the
-    * caller's commit-marker window). */
-  def appendDeleteIds(spark: SparkSession, dir: String,
-                      ids: DataFrame): Unit =
-    ids.select(col("id"))
-      .write.mode("append").parquet(s"$dir/deletes")
 
   /** Apply the tombstone filter to a frame keyed by `idCol`: the
     * no-deletes case returns the frame UNTOUCHED (same plan, same
@@ -631,43 +702,54 @@ object StoredIndex {
   /** The shared retraction protocol — [[AnnIndex.remove]] and
     * [[DedupIndex.remove]] differ only in their live-id view and
     * identity columns, so the guards, the commit-marker ordering,
-    * and the meta algebra live here once. `liveIds` is the family's
-    * live indexed id set ("id" column), read ONCE (localCheckpoint)
-    * and reused for the not-live guard AND the live-max recompute —
-    * one keys-only pass per retraction, not two. `beforeMeta` runs
+    * and the meta algebra live here once. `ids` is the retraction's
+    * held id set ([[holdIds]]), so its size and distinctness are
+    * known without a Spark action. `liveIds` is the family's live
+    * indexed id set ("id" column), read in ONE keys-only pass for the
+    * not-live guard AND the live-max recompute. `beforeMeta` runs
     * INSIDE the commit window (after the tombstone append, before
     * the meta write) — the hook a family with extra additive gauge
     * assets ([[KeywordIndex]]'s `stats/`) uses to fold the removal
     * into them without breaking the meta-written-last invariant. */
-  def removeIds(spark: SparkSession, dir: String, ids: DataFrame,
-                removedMeta: Row, liveIds: DataFrame,
-                what: String, beforeMeta: () => Unit = () => ()): Unit = {
+  private[graft] def removeIds(spark: SparkSession, dir: String,
+                               ids: Tombstones, removedMeta: Row,
+                               liveIds: DataFrame, what: String,
+                               beforeMeta: () => Unit = () => ()): Unit = {
     val storedMeta = readMeta(spark, dir).getOrElse(
       throw new IllegalStateException(
         s"$what: no committed meta at $dir"))
     require(removedMeta.getLong(0) > 0L,
       s"$what: retraction batch is empty — nothing to remove at $dir")
-    val nIds = ids.count()
+    // the held set is distinct by construction: its size is the
+    // batch's distinct id count (driver-known for literals)
+    val nIds = ids.litIds.map(_.size.toLong).getOrElse(ids.frame().count())
     require(removedMeta.getLong(0) == nIds,
       s"$what: retraction batch must carry exactly one row per id " +
         "(duplicate ids would over-subtract the meta)")
-    // ONE broadcast-left pass over the live id set answers both the
-    // all-live guard (matched count vs the batch size — live ids are
-    // unique by construction in every family, so matches never
-    // multiply) and the post-retraction max_id (max over the
-    // unmatched rows) — previously a checkpoint job plus two
-    // separate live scans (an anti-join probe and the max aggregate)
-    val g = liveIds
-      .join(broadcast(ids.select(col("id"), lit(1L).as("__d"))),
-        Seq("id"), "left")
-      .agg(count(col("__d")).as("n_matched"),
-        max(when(col("__d").isNull, col("id"))).as("live_max")).head
+    // ONE pass over the live id set answers both the all-live guard
+    // (matched count vs the batch size — live ids are unique by
+    // construction in every family, so matches never multiply) and
+    // the post-retraction max_id (max over the unmatched rows): a
+    // literal IN for driver-held ids, the broadcast-left join above
+    // the cap
+    val g = (ids.litIds match {
+      case Some(l) =>
+        val hit = col("id").isin(l: _*)
+        liveIds.agg(count(when(hit, lit(1L))).as("n_matched"),
+          max(when(!hit, col("id"))).as("live_max"))
+      case None =>
+        liveIds
+          .join(broadcast(ids.frame().toDF("id")
+            .select(col("id"), lit(1L).as("__d"))), Seq("id"), "left")
+          .agg(count(col("__d")).as("n_matched"),
+            max(when(col("__d").isNull, col("id"))).as("live_max"))
+    }).head
     require(g.getLong(0) == nIds,
       s"$what: retraction batch names id(s) not live in the index " +
         s"at $dir — already retracted, or never indexed; XORing " +
         "them out would corrupt the fingerprint")
     invalidate(spark, dir) // commit marker
-    appendDeleteIds(spark, dir, ids)
+    appendHeldIds(spark, ids, "id", s"$dir/deletes")
     beforeMeta()
     writeRemovedMeta(spark, dir, storedMeta, removedMeta,
       if (g.isNullAt(1)) null else java.lang.Long.valueOf(g.getLong(1)))

@@ -97,11 +97,9 @@ object Ops {
     * are done — for two Spark actions that share no output, so their
     * driver-side planning and commits overlap. The thread is joined
     * before this returns, also when `main` throws, so no work outlives
-    * the call; main's failure wins, then side's. A fresh thread rather
-    * than the shared pool behind `StoredIndex.async`: a new thread
+    * the call; main's failure wins, then side's. A fresh thread
     * inherits the caller's Spark local properties (job group, call
-    * site) as they are now, where a pooled one keeps those of the
-    * caller that happened to create it. */
+    * site) as they are now. */
   def alongside[A, B](side: => A)(main: => B): (B, A) = {
     var sideResult: Either[Throwable, A] = null
     val t = new Thread(() => sideResult =

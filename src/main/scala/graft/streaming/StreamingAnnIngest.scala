@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType,
   StructField, StructType}
 
-import graft.ext.AnnIndex
+import graft.ext.{AnnIndex, StoredIndex}
 
 /** Continuous ANN-index ingestion: a file-source stream watches a
   * staging directory for embedding parquet drops and maintains a
@@ -175,14 +175,20 @@ final class StreamingAnnIngest(spark: SparkSession, indexDir: String,
     * batch is a no-op that leaves the ledger untouched. A takedown
     * arriving before any batch was ingested completes as a
     * ledger-only retraction. */
-  def retract(ids: DataFrame): Unit = {
+  def retract(ids: DataFrame): Unit =
+    retractHeld(StoredIndex.holdIds(ids, "vec_id"))
+
+  /** [[retract]] of a held id set ([[StoredIndex.holdIds]], resolved
+    * once by the caller). */
+  private[streaming] def retractHeld(
+      want: StoredIndex.Tombstones): Unit = {
     val dir = requireStore("retract")
-    Takedown.retract(spark, ids, "vec_id", Seq("embedding"),
+    Takedown.retract(spark, want, "vec_id", Seq("embedding"),
       ledgerDir = dir + "_retracted",
       primaryStore = dir, extraStores = Nil,
       liveIds = AnnIndex.liveIndexedIds(spark, indexDir)
         .withColumnRenamed("id", "vec_id"),
-      removeRows = rows => AnnIndex.remove(rows, indexDir),
+      removeRows = (rows, ids) => AnnIndex.removeHeld(rows, ids, indexDir),
       rebuild = () => AnnIndex.build(store(), indexDir))
   }
 
@@ -210,7 +216,7 @@ final class StreamingAnnIngest(spark: SparkSession, indexDir: String,
 
   // id-sorted within each part file so parquet row-group id stats
   // are tight — what makes a takedown's pushed IN predicate skip
-  // unaffected row groups on footers alone (Takedown.idLiterals)
+  // unaffected row groups on footers alone (StoredIndex.semiIdFilter)
   private def writePartition(df: DataFrame, root: String,
                              batchId: Long): Unit =
     df.select("vec_id", "embedding").sortWithinPartitions("vec_id")

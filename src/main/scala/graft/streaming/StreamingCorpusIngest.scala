@@ -3,6 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ext.StoredIndex
+import graft.ext.StoredIndex.Tombstones
+
 /** The JOINT training-corpus ingest: one coordinator maintaining BOTH
   * serving families over the same document ids — the near-dup-gated
   * text corpus + stored dedup index ([[StreamingDedupIngest]]) and
@@ -258,11 +261,19 @@ final class StreamingCorpusIngest(spark: SparkSession, root: String,
       return
     }
     val live = KeywordIndex.liveIndexedIds(spark, keywordDir)
-      .withColumnRenamed("id", "doc_id").localCheckpoint()
+      .withColumnRenamed("id", "doc_id")
+    // text-ledgered ids still live in the index: only ledgered ids
+    // the index has not tombstoned (a driver diff for literal sets)
+    // are candidates, and only candidates cost a keys-only pass
     val pending = Takedown
-      .ledgeredIds(spark, s"$root/corpus_retracted", "doc_id")
-      .map(l => l.join(live, Seq("doc_id"), "left_semi"))
-    if (pending.exists(!_.limit(1).isEmpty)) {
+      .ledgerSet(spark, s"$root/corpus_retracted", "doc_id")
+      .exists { ledger =>
+        val candidates = StoredIndex.readDeleteIds(spark, keywordDir)
+          .fold(ledger)(Takedown.minus(spark, ledger, _))
+        !Takedown.isEmpty(candidates) &&
+          !StoredIndex.semiIdFilter(candidates, live, "doc_id").isEmpty
+      }
+    if (pending) {
       KeywordIndex.rebuildStaged(text.corpus(), keywordDir)
     } else {
       // defense-in-depth: a tombstoned-but-in-corpus id is
@@ -505,27 +516,23 @@ final class StreamingCorpusIngest(spark: SparkSession, root: String,
     * between them is converged by re-running — or by
     * [[repairAlignment]], which finishes the vector half from the
     * text ledger. */
-  def retract(ids: DataFrame): Unit = {
-    val want = ids.select(col("doc_id").cast("long").as("doc_id"))
-      .distinct().localCheckpoint()
+  def retract(ids: DataFrame): Unit =
+    retractHeld(StoredIndex.holdIds(ids, "doc_id"))
+
+  /** [[retract]] of a held id set: the request is resolved ONCE
+    * ([[StoredIndex.holdIds]]) and both families' takedowns, the
+    * lexical un-mix and every guard below them work from it. */
+  private[streaming] def retractHeld(want: Tombstones): Unit = {
+    val kwIndexed = keywordServing &&
+      fs.exists(new org.apache.hadoop.fs.Path(s"$keywordDir/meta"))
     // the keyword un-mix needs the retracted rows' (id, text)
-    // identity, and text.retract purges exactly that — fetch first
-    // (driver-internal; nothing is served from this frame), remove
-    // AFTER the text half so the compliance ordering stays
-    // text-first. A crash between the halves strands a live kw
-    // entry; repairKeywords rebuilds from the purged corpus.
-    val kwRows =
-      if (keywordServing && fs.exists(
-          new org.apache.hadoop.fs.Path(s"$keywordDir/meta"))) {
-        import graft.ext.KeywordIndex
-        val live = KeywordIndex.liveIndexedIds(spark, keywordDir)
-          .withColumnRenamed("id", "doc_id")
-        Some(text.corpus()
-          .join(want, Seq("doc_id"), "left_semi")
-          .join(live, Seq("doc_id"), "left_semi")
-          .localCheckpoint())
-      } else None
-    text.retract(want)
+    // identity, and the text half purges exactly that — it returns
+    // the corpus rows it fetched BEFORE its purge (driver-internal;
+    // nothing is served from them), and the lexical remove runs
+    // AFTER it so the compliance ordering stays text-first. A crash
+    // between the halves strands a live kw entry; repairKeywords
+    // rebuilds from the purged corpus.
+    val fetched = text.retractHeld(want)
     // downstream of the text purge, the lexical un-mix and the
     // vector takedown touch disjoint stores and were never ordered
     // relative to EACH OTHER (only text-first mattered) — overlap
@@ -533,9 +540,19 @@ final class StreamingCorpusIngest(spark: SparkSession, root: String,
     // window still converges via re-run / repairKeywords /
     // repairAlignment exactly as before
     inParallel(
-      () => kwRows.filter(!_.isEmpty).foreach(rows =>
-        graft.ext.KeywordIndex.remove(rows, keywordDir)),
-      () => vectors.retract(want.select(col("doc_id").as("vec_id"))))
+      () => if (kwIndexed) fetched.foreach(removeKeywords),
+      () => vectors.retractHeld(want))
+  }
+
+  /** Un-mix fetched corpus rows from the keyword index — only those
+    * it holds live (one keys-only pass over the request's ids). */
+  private def removeKeywords(f: Takedown.Fetched): Unit = {
+    import graft.ext.KeywordIndex
+    val ids = Takedown.liveOf(spark, f.ids,
+      KeywordIndex.liveIndexedIds(spark, keywordDir), "id")
+    if (!Takedown.isEmpty(ids))
+      KeywordIndex.removeHeld(
+        StoredIndex.semiIdFilter(ids, f.rows, "doc_id"), ids, keywordDir)
   }
 
   /** Joint predicate takedown: resolve against the text stores
@@ -556,8 +573,13 @@ final class StreamingCorpusIngest(spark: SparkSession, root: String,
     * vector half goes through [[repairAlignment]] — the generic
     * converger — rather than a special-cased stage: a crash anywhere
     * in between is fixed by re-running repairAlignment alone. */
-  def readmit(ids: DataFrame, embeddings: DataFrame): Unit = {
-    text.readmit(ids)
+  def readmit(ids: DataFrame, embeddings: DataFrame): Unit =
+    readmitHeld(StoredIndex.holdIds(ids, "doc_id"), embeddings)
+
+  /** [[readmit]] of a held id set ([[StoredIndex.holdIds]]). */
+  private[streaming] def readmitHeld(want: Tombstones,
+                                     embeddings: DataFrame): Unit = {
+    text.readmitHeld(want)
     repairAlignment(embeddings)
     if (keywordServing) repairKeywords()
   }
@@ -582,18 +604,14 @@ final class StreamingCorpusIngest(spark: SparkSession, root: String,
     * stores, surfaced by [[alignment]] and left to the operator
     * rather than silently deleted. */
   def repairAlignment(embeddings: DataFrame): Unit = {
-    // 1. finish any half-applied joint takedown
-    Takedown.ledgeredIds(spark, s"$root/corpus_retracted", "doc_id")
+    // 1. finish any half-applied joint takedown: text-ledgered ids
+    // the vector ledger lacks (a driver diff for literal ledgers)
+    Takedown.ledgerSet(spark, s"$root/corpus_retracted", "doc_id")
       .foreach { textLedger =>
-        val vecLedger = Takedown.ledgeredIds(spark,
-            s"$root/vectors_retracted", "vec_id")
-          .getOrElse(spark.range(0).select(col("id").as("vec_id")))
-        val pending = textLedger
-          .join(vecLedger.withColumnRenamed("vec_id", "doc_id"),
-            Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        if (!pending.isEmpty)
-          vectors.retract(pending.select(col("doc_id").as("vec_id")))
+        val pending = Takedown
+          .ledgerSet(spark, s"$root/vectors_retracted", "vec_id")
+          .fold(textLedger)(Takedown.minus(spark, textLedger, _))
+        if (!Takedown.isEmpty(pending)) vectors.retractHeld(pending)
       }
     // 2. admit vectors the corpus has accepted but the store lacks
     val corpusPath = new org.apache.hadoop.fs.Path(s"$root/corpus")

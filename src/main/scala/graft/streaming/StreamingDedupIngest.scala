@@ -371,7 +371,7 @@ final class StreamingDedupIngest(spark: SparkSession, indexDir: String,
 
   // id-sorted within each part file so parquet row-group id stats
   // are tight — what makes a takedown's pushed IN predicate skip
-  // unaffected row groups on footers alone (Takedown.idLiterals)
+  // unaffected row groups on footers alone (StoredIndex.semiIdFilter)
   private def writePartition(df: DataFrame, root: String,
                              batchId: Long): Unit =
     df.select("doc_id", "text").sortWithinPartitions("doc_id")
@@ -391,32 +391,20 @@ final class StreamingDedupIngest(spark: SparkSession, indexDir: String,
     * the row), with the sticky ledger keeping any re-delivery out.
     * A takedown arriving before any batch was ingested completes as
     * a ledger-only retraction. */
-  def retract(ids: DataFrame): Unit = {
-    import graft.ext.DedupIndex
-    // snapshot the retracted rows' length mass BEFORE the purge
-    // (the corpus store is the only source of their text — the hist
-    // gauge tracks the LIVE accepted corpus, so the takedown must
-    // subtract it exactly). A RE-RUN reads an already-purged store,
-    // snapshots nothing, and subtracts nothing — idempotent; the
-    // crash window between the purge and the subtract below leaves
-    // the gauge over-counting, healed by reseedHist.
-    val wantIds = ids.select(col("doc_id").cast("long").as("doc_id"))
-      .distinct().localCheckpoint()
-    val corpusPath = new org.apache.hadoop.fs.Path(corpusDir)
-    val histGone =
-      if (graft.ext.Sketches.kmvHeal(spark, histDir) &&
-          corpusPath.getFileSystem(
-            spark.sparkContext.hadoopConfiguration).exists(corpusPath))
-        Some(corpus()
-          .join(broadcast(wantIds), Seq("doc_id"), "left_semi")
-          .localCheckpoint())
-      else None
-    Takedown.retract(spark, ids, "doc_id", Seq("text"),
+  def retract(ids: DataFrame): Unit =
+    retractHeld(StoredIndex.holdIds(ids, "doc_id"))
+
+  /** [[retract]] of a held id set ([[StoredIndex.holdIds]], resolved
+    * once by the caller); returns the corpus rows of the request as they
+    * were before the purge ([[Takedown.retract]]). */
+  private[streaming] def retractHeld(
+      want: StoredIndex.Tombstones): Option[Takedown.Fetched] = {
+    val fetched = Takedown.retract(spark, want, "doc_id", Seq("text"),
       ledgerDir = retractedDir,
       primaryStore = corpusDir, extraStores = Seq(quarantineDir),
       liveIds = DedupIndex.liveIndexedIds(spark, indexDir)
         .withColumnRenamed("id", "doc_id"),
-      removeRows = rows => DedupIndex.remove(rows, indexDir),
+      removeRows = (rows, ids) => DedupIndex.removeHeld(rows, ids, indexDir),
       rebuild = () => DedupIndex.build(corpus(), indexDir))
     // the document SAMPLE stores content, so the takedown must purge
     // it too — idempotent (a key not sampled purges vacuously), so a
@@ -424,10 +412,19 @@ final class StreamingDedupIngest(spark: SparkSession, indexDir: String,
     // re-run, exactly like the ledger/stores/index windows
     if (graft.ext.Sketches.kmvHeal(spark, sampleDir))
       graft.ext.Sketches.sampleRemove(spark, sampleDir,
-        ids.select(col("doc_id").cast("long").as("doc_id")), "doc_id")
-    histGone.filter(!_.isEmpty).foreach(rows =>
-      graft.ext.Sketches.histRemoveMarked(spark, histDir, rows,
-        histValue, histBinWidth))
+        want.frame().toDF("doc_id"), "doc_id")
+    // the hist gauge tracks the LIVE accepted corpus, so the takedown
+    // subtracts the retracted rows' length mass exactly — from the
+    // rows fetched BEFORE the purge (the corpus store was their only
+    // source of text). A RE-RUN fetches from an already-purged store,
+    // gets nothing, and subtracts nothing — idempotent; the crash
+    // window between the purge and this subtract leaves the gauge
+    // over-counting, healed by reseedHist.
+    fetched.filter(f => !Takedown.isEmpty(f.ids)).foreach(f =>
+      if (graft.ext.Sketches.kmvHeal(spark, histDir))
+        graft.ext.Sketches.histRemoveMarked(spark, histDir, f.rows,
+          histValue, histBinWidth))
+    fetched
   }
 
   /** Predicate takedown: resolve `cond` against the durable stores
@@ -441,8 +438,8 @@ final class StreamingDedupIngest(spark: SparkSession, indexDir: String,
       .map(_.localCheckpoint()).filter(!_.isEmpty)
       .foreach(ids => retract(ids))
 
-  /** [[Takedown.purgeStore]] bound to this family's columns — also
-    * the crash-simulation hook StreamingSpec drives by reflection. */
+  /** [[Takedown.purgeStore]] bound to this family's columns — the
+    * crash-simulation hook StreamingSpec drives by reflection. */
   private def purgeStore(root: String, ids: DataFrame): Unit =
     Takedown.purgeStore(spark, root, ids, "doc_id", Seq("text"))
 
@@ -475,12 +472,13 @@ final class StreamingDedupIngest(spark: SparkSession, indexDir: String,
     * document in at least one durable store and a re-run completes
     * the move. Serial per-affected-batch rewrites, same bound as
     * [[Takedown.purgeStore]]: review-scale id lists, not corpora. */
-  def readmit(ids: DataFrame): Unit = {
-    import graft.ext.DedupIndex
-    val want = ids.select(col("doc_id").cast("long").as("doc_id"))
-      .distinct().localCheckpoint()
-    Takedown.ledgeredIds(spark, retractedDir, "doc_id").foreach { r =>
-      require(want.join(r, Seq("doc_id"), "left_semi").limit(1).isEmpty,
+  def readmit(ids: DataFrame): Unit =
+    readmitHeld(StoredIndex.holdIds(ids, "doc_id"))
+
+  /** [[readmit]] of a held id set ([[StoredIndex.holdIds]]). */
+  private[streaming] def readmitHeld(want: StoredIndex.Tombstones): Unit = {
+    Takedown.ledgerSet(spark, retractedDir, "doc_id").foreach { r =>
+      require(Takedown.isEmpty(Takedown.intersect(spark, want, r)),
         "readmit: request names retraction-ledgered ids — a taken-" +
           "down document cannot be readmitted (sticky compliance " +
           "guarantee); ingest genuinely-returning content under a " +
@@ -491,17 +489,25 @@ final class StreamingDedupIngest(spark: SparkSession, indexDir: String,
         spark.sparkContext.hadoopConfiguration).exists(quarPath),
       s"readmit: no quarantine store at $quarantineDir")
     // the quarantined rows, with the batch each arrived in
-    val rows = spark.read.parquet(quarantineDir)
-      .select(col("doc_id"), col("text"),
-        col("batch").cast("long").as("batch"))
-      .join(want, Seq("doc_id"), "left_semi").localCheckpoint()
-    val nMissing = want.count() - rows.count()
+    val rows = StoredIndex.semiIdFilter(want, spark.read.parquet(quarantineDir)
+        .select(col("doc_id"), col("text"),
+          col("batch").cast("long").as("batch")), "doc_id")
+      .localCheckpoint()
+    // their (doc_id, batch) keys: the missing count, the corpus
+    // partitions to re-enter and the quarantine partitions to purge
+    val (nMissing, affected) = want.litIds match {
+      case Some(l) =>
+        val keys = rows.select("doc_id", "batch").collect()
+        (l.size - keys.map(_.getLong(0)).distinct.length,
+          keys.map(_.getLong(1)).distinct.toSeq)
+      case None =>
+        (want.frame().count() - rows.select("doc_id").distinct().count(),
+          rows.select("batch").distinct().collect().map(_.getLong(0)).toSeq)
+    }
     require(nMissing == 0L,
       s"readmit: $nMissing requested id(s) are not quarantined — " +
         "only currently-quarantined documents can be readmitted")
     // 1. corpus partitions FIRST, idempotent per batch dir
-    val affected = rows.select("batch").distinct()
-      .collect().map(_.getLong(0))
     affected.foreach { b =>
       val pdir = s"$corpusDir/batch=$b"
       val pPath = new org.apache.hadoop.fs.Path(pdir)
@@ -509,9 +515,9 @@ final class StreamingDedupIngest(spark: SparkSession, indexDir: String,
         .select("doc_id", "text")
       val merged = (if (pPath.getFileSystem(
           spark.sparkContext.hadoopConfiguration).exists(pPath))
-        spark.read.option("basePath", corpusDir).parquet(pdir)
-          .select("doc_id", "text")
-          .join(want, Seq("doc_id"), "left_anti")
+        StoredIndex.antiIdFilter(want,
+            spark.read.option("basePath", corpusDir).parquet(pdir)
+              .select("doc_id", "text"), "doc_id")
           .unionByName(incoming)
       else incoming).localCheckpoint() // materialize before overwrite
       merged.write.mode("overwrite").parquet(pdir)
@@ -540,7 +546,8 @@ final class StreamingDedupIngest(spark: SparkSession, indexDir: String,
     }
     // 3. quarantine purge LAST: until here a crash leaves the doc
     // quarantined (and possibly also accepted) — re-run converges
-    purgeStore(quarantineDir, want)
+    Takedown.purgeStore(spark, quarantineDir, want, "doc_id", Seq("text"),
+      Some(affected))
   }
 
   /** Operational health of the WHOLE ingest — the index family's

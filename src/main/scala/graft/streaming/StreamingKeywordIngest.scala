@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
 
-import graft.ext.KeywordIndex
+import graft.ext.{KeywordIndex, StoredIndex}
 
 /** Continuous keyword-index ingestion: a file-source stream watches a
   * staging directory for document parquet drops and maintains a
@@ -139,12 +139,14 @@ final class StreamingKeywordIngest(spark: SparkSession, indexDir: String,
     * before any ingest completes as a ledger-only retraction. */
   def retract(ids: DataFrame): Unit = {
     val dir = requireStore("retract")
-    Takedown.retract(spark, ids, "doc_id", Seq("text"),
+    Takedown.retract(spark, StoredIndex.holdIds(ids, "doc_id"), "doc_id",
+      Seq("text"),
       ledgerDir = dir + "_retracted",
       primaryStore = dir, extraStores = Nil,
       liveIds = KeywordIndex.liveIndexedIds(spark, indexDir)
         .withColumnRenamed("id", "doc_id"),
-      removeRows = rows => KeywordIndex.remove(rows, indexDir),
+      removeRows = (rows, ids) =>
+        KeywordIndex.removeHeld(rows, ids, indexDir),
       rebuild = () => KeywordIndex.build(store(), indexDir))
   }
 

@@ -23,33 +23,42 @@ import org.apache.spark.sql.functions._
   * rebuilding from the purged store. Index-first ordering would
   * instead open a window where recovery rebuilds RESURRECT the
   * retracted content — the one failure a takedown must never have.
+  *
+  * The request's ids are resolved ONCE, at the entry of the public
+  * retract/readmit, and every layer below works from that
+  * held set ([[graft.ext.StoredIndex.holdIds]]): driver literals at
+  * compliance scale, the distinct frame above the cap. Per family, a literal
+  * [[retract]] then runs:
+  *  1. the ledger diff and append on the driver (no job);
+  *  2. one `IN`-pushed fetch of the primary store's rows (id,
+  *     payload, batch), materialized, and one collect of its
+  *     (id, batch) keys — the affected partitions come from it;
+  *  3. the purge: per affected partition, materialize + overwrite;
+  *     a store the fetch did not read (the quarantine) pays one
+  *     discovery collect first;
+  *  4. one keys-only collect of the request's live-indexed ids — the
+  *     rows to tombstone and the crash residue are driver set
+  *     operations on it;
+  *  5. the index remove: the rows' identity aggregate and one guard
+  *     pass over the live ids; the tombstones append driver-side.
+  * Parquet schema inference adds one small job per store read.
   */
 private[streaming] object Takedown {
-
-  /** Ledgered ids, or None when no takedown was ever recorded. The
-    * existence check is explicit and read errors PROPAGATE: a ledger
-    * that exists but cannot be read must fail the batch, not
-    * silently disable the retraction filter (failing open here is
-    * exactly the resurrection the ledger prevents). */
-  def ledgeredIds(spark: SparkSession, ledgerDir: String,
-                  idCol: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(ledgerDir)
-    if (!p.getFileSystem(
-        spark.sparkContext.hadoopConfiguration).exists(p)) None
-    else Some(spark.read.parquet(ledgerDir)
-      .select(col(idCol)).distinct())
-  }
-
-  /** [[ledgeredIds]] in [[graft.ext.StoredIndex.Tombstones]] form:
+  import graft.ext.StoredIndex
+  import graft.ext.StoredIndex.Tombstones
+  /** Ledgered ids, or None when no takedown was ever recorded:
     * driver literals when the ledger is small (the compliance-scale
-    * common case), the distinct frame above the caps — so the
-    * per-micro-batch sticky filter and the intent diff stop paying a
-    * broadcast-build job each. Ids are unique by construction (only
-    * not-yet-ledgered ids ever append), but the literal read
-    * dedupes defensively to mirror the frame's `.distinct()`. */
+    * common case), the distinct frame above the caps or in any layout
+    * other than flat parquet files. Read errors PROPAGATE: a ledger
+    * that exists but cannot be read must fail the batch, not silently
+    * disable the retraction filter (failing open here is exactly the
+    * resurrection the ledger prevents). Ids are unique by
+    * construction (only not-yet-ledgered ids ever append), but the
+    * literal read dedupes defensively to mirror the frame's
+    * `.distinct()`. */
   def ledgerSet(spark: SparkSession, ledgerDir: String,
-                idCol: String): Option[graft.ext.StoredIndex.Tombstones] =
-    graft.ext.StoredIndex.readIdAsset(spark, ledgerDir, idCol)
+                idCol: String): Option[Tombstones] =
+    StoredIndex.readIdAsset(spark, ledgerDir, idCol)
       .map(t => t.copy(
         litIds = t.litIds.map(_.distinct),
         frame = () => t.frame().distinct()))
@@ -65,7 +74,7 @@ private[streaming] object Takedown {
                    df: DataFrame, idCol: String): DataFrame =
     ledgerSet(spark, ledgerDir, idCol) match {
       case None => df
-      case Some(t) => graft.ext.StoredIndex.antiIdFilter(t, df, idCol)
+      case Some(t) => StoredIndex.antiIdFilter(t, df, idCol)
     }
 
   /** `(metric, value)` health row of the ledger's size — a
@@ -75,7 +84,7 @@ private[streaming] object Takedown {
                      idCol: String, name: String): DataFrame = {
     import graft.ext.StoredIndex.{litMetricRow, metricRow}
     ledgerSet(spark, ledgerDir, idCol) match {
-      case Some(graft.ext.StoredIndex.Tombstones(Some(ids), _)) =>
+      case Some(Tombstones(Some(ids), _)) =>
         litMetricRow(spark, name, ids.size.toDouble)
       case Some(t) => metricRow(name, t.frame(), count(lit(1L)))
       case None => litMetricRow(spark, name, 0d)
@@ -96,10 +105,7 @@ private[streaming] object Takedown {
   def idsMatching(spark: SparkSession, stores: Seq[String],
                   cond: Column, idCol: String,
                   cols: Seq[String]): Option[DataFrame] = {
-    val existing = stores.filter { s =>
-      val p = new org.apache.hadoop.fs.Path(s)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
+    val existing = stores.filter(exists(spark, _))
     if (existing.isEmpty) None
     else Some(existing.map(d =>
         spark.read.parquet(d).select(idCol, cols: _*))
@@ -109,131 +115,177 @@ private[streaming] object Takedown {
 
   /** The takedown id set as driver-side literals when the request is
     * small enough to become a pushdown-friendly predicate — None
-    * above the cap (fall back to the semi-join). A compliance
-    * takedown names few ids, so this is the overwhelmingly common
-    * path, and it changes the affected-batch discovery from a
-    * FULL-STORE scan (the semi-join reads every row of every batch
-    * at 100 TB) to a footer-bound one: an IN/min-max predicate
-    * reaches the parquet reader ([[purgeStore]] asserts it lands in
-    * PushedFilters), so row groups whose id-column stats exclude the
-    * request never decompress — and the per-batch id sort
-    * (`writePartition` in both ingests) keeps those stats tight. */
+    * above the cap (fall back to the semi-join). */
   private[streaming] def idLiterals(ids: DataFrame, idCol: String,
-                                    cap: Int): Option[Seq[Long]] = {
-    val rows = ids.select(col(idCol).cast("long")).distinct()
-      .limit(cap + 1).collect()
-    if (rows.length > cap) None
-    else Some(rows.map(_.getLong(0)).toIndexedSeq)
+                                    cap: Int): Option[Seq[Long]] =
+    StoredIndex.holdIds(ids, idCol, cap).litIds
+
+  /** `a` minus `b`: a driver diff when both are literals, otherwise a
+    * materialized anti-join. */
+  private[streaming] def minus(spark: SparkSession, a: Tombstones,
+                               b: Tombstones): Tombstones =
+    (a.litIds, b.litIds) match {
+      case (Some(x), Some(y)) =>
+        StoredIndex.heldLiterals(spark, x.filterNot(y.toSet))
+      case _ =>
+        framed(StoredIndex.antiIdFilter(b, a.frame().toDF("id"), "id"))
+    }
+
+  /** `a` ∩ `b`: a driver intersection when both are literals,
+    * otherwise a materialized semi-join. */
+  private[streaming] def intersect(spark: SparkSession, a: Tombstones,
+                                   b: Tombstones): Tombstones =
+    (a.litIds, b.litIds) match {
+      case (Some(x), Some(y)) =>
+        StoredIndex.heldLiterals(spark, x.filter(y.toSet))
+      case _ =>
+        framed(StoredIndex.semiIdFilter(b, a.frame().toDF("id"), "id"))
+    }
+
+  /** The ids of `want` that `liveIds` (an index's live id set)
+    * holds: ONE keys-only pass, at most |want| ids collected for a
+    * literal request. */
+  private[streaming] def liveOf(spark: SparkSession, want: Tombstones,
+                                liveIds: DataFrame,
+                                idCol: String): Tombstones = {
+    val hit = StoredIndex.semiIdFilter(want, liveIds, idCol).select(idCol)
+    if (want.litIds.isEmpty) framed(hit)
+    else StoredIndex.heldLiterals(spark,
+      hit.collect().map(_.getLong(0)).toSeq)
+  }
+
+  private[streaming] def isEmpty(t: Tombstones): Boolean =
+    t.litIds.fold(t.frame().isEmpty)(_.isEmpty)
+
+  private def framed(df: DataFrame): Tombstones = {
+    val f = df.localCheckpoint()
+    Tombstones(None, () => f)
+  }
+
+  private def exists(spark: SparkSession, dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** Rewrite ONLY the per-batch partition dirs that hold any of the
     * purged ids (partition-pruned: untouched batches never rewrite).
-    * The affected-partition list is a bounded driver read — batch
-    * ids, not rows — and for requests under `pushdownCap` ids the
-    * discovery scan itself is footer-bound ([[idLiterals]]): the id
-    * predicate pushes to parquet, so unaffected row groups are
-    * skipped on stats instead of read.
+    * `batches`, when the caller already knows them from rows it
+    * fetched, replaces the discovery scan; otherwise discovery is one
+    * bounded driver read of batch ids, footer-bound for literal ids:
+    * the `IN` predicate lands in PushedFilters, so row groups whose
+    * id stats exclude the request (the ingests id-sort each batch
+    * file) never decompress.
+    *
+    * Scale note, measured locally over growing batch counts: literal
+    * and semi-join discovery run close, because Catalyst's runtime
+    * bloom filter already drops most non-matching rows at the
+    * semi-join's scan; the pushdown's remaining edge is the decode it
+    * skips on row-group stats, which grows with payload width and IO
+    * latency.
     *
     * Cost note: the affected partitions rewrite SERIALLY on the
-    * driver, one small Spark job each — bounded by the takedown
-    * batch's distinct staged-batch partitions, which is the right
-    * price at compliance scale (a takedown names few documents
-    * across few batches). A takedown naming millions of rows across
-    * thousands of batches would serialize thousands of small jobs;
-    * batch such requests through a full store rewrite + index
-    * rebuild instead. */
-  def purgeStore(spark: SparkSession, root: String, ids: DataFrame,
+    * driver, two small jobs each (materialize, write) — bounded by
+    * the request's distinct batch partitions, the right price at
+    * compliance scale (a takedown names few documents across few
+    * batches). A takedown naming millions of rows across thousands
+    * of batches would serialize thousands of small jobs; batch such
+    * requests through a full store rewrite + index rebuild
+    * instead. */
+  def purgeStore(spark: SparkSession, root: String, ids: Tombstones,
                  idCol: String, cols: Seq[String],
-                 pushdownCap: Int = 10000): Unit = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    if (!rootPath.getFileSystem(
-        spark.sparkContext.hadoopConfiguration).exists(rootPath)) return
-    val lits = idLiterals(ids, idCol, pushdownCap)
-    if (lits.exists(_.isEmpty)) return // nothing to purge
-    def hits(df: DataFrame): DataFrame = lits match {
-      case Some(l) => df.filter(col(idCol).isin(l: _*))
-      case None    => df.join(ids, Seq(idCol), "left_semi")
-    }
-    def drops(df: DataFrame): DataFrame = lits match {
-      case Some(l) => df.filter(!col(idCol).isin(l: _*))
-      case None    => df.join(ids, Seq(idCol), "left_anti")
-    }
-    val affected = hits(spark.read.parquet(root))
-      .select(col("batch").cast("long")).distinct()
-      .collect().map(_.getLong(0))
+                 batches: Option[Seq[Long]]): Unit = {
+    if (!exists(spark, root) || ids.litIds.exists(_.isEmpty)) return
+    val affected = batches.getOrElse(
+      StoredIndex.semiIdFilter(ids, spark.read.parquet(root), idCol)
+        .select(col("batch").cast("long")).distinct()
+        .collect().map(_.getLong(0)).toSeq)
     affected.foreach { b =>
       val pdir = s"$root/batch=$b"
       // materialize BEFORE overwriting the dir being read
-      val remaining = drops(
-          spark.read.option("basePath", root).parquet(pdir))
+      val remaining = StoredIndex.antiIdFilter(ids,
+          spark.read.option("basePath", root).parquet(pdir), idCol)
         .select(idCol, cols: _*).localCheckpoint()
       remaining.write.mode("overwrite").parquet(pdir)
     }
   }
 
-  /** End-to-end takedown: record the ids in the durable intent
-    * ledger (making the retraction STICKY against any replay), purge
-    * them from every durable store, and un-mix them from the index —
-    * tombstone the ids whose rows were still stored (`removeRows`),
-    * or rebuild from the purged store (`rebuild`) when crash residue
-    * makes the XOR un-mix impossible. See the object scaladoc for
-    * why this ordering, and only this ordering, survives a crash at
-    * every point.
+  /** [[purgeStore]] of a request frame, resolved here (`pushdownCap`
+    * 0 forces the semi-join form) — the families' crash-simulation
+    * hooks and the specs call this form. */
+  def purgeStore(spark: SparkSession, root: String, ids: DataFrame,
+                 idCol: String, cols: Seq[String],
+                 pushdownCap: Int = StoredIndex.HeldIdCap): Unit =
+    purgeStore(spark, root, StoredIndex.holdIds(ids, idCol, pushdownCap),
+      idCol, cols, None)
+
+  /** The primary store's rows of a request, fetched before the purge:
+    * `rows` (idCol +: cols, materialized) and their held id set. */
+  final case class Fetched(rows: DataFrame, ids: Tombstones)
+
+  /** End-to-end takedown of a held id set: record the ids in the
+    * durable intent ledger (making the retraction STICKY against any
+    * replay), purge them from every durable store, and un-mix them
+    * from the index — tombstone the ids whose rows were still stored
+    * (`removeRows`, handed the rows and their held ids), or rebuild
+    * from the purged store (`rebuild`) when crash residue makes the
+    * XOR un-mix impossible. See the object scaladoc for why this
+    * ordering, and only this ordering, survives a crash at every
+    * point. Returns the primary store's rows of the request as they
+    * were before the purge (None when no primary store exists).
     *
     * A takedown that arrives BEFORE any batch was ever ingested
     * (no primary store yet) completes as a ledger-only retraction:
     * the sticky ledger already guarantees the ids can never be
     * admitted, which IS the correct end state — not an error. */
-  def retract(spark: SparkSession, ids: DataFrame, idCol: String,
+  def retract(spark: SparkSession, want: Tombstones, idCol: String,
               cols: Seq[String], ledgerDir: String,
               primaryStore: String, extraStores: Seq[String],
               liveIds: => DataFrame,
-              removeRows: DataFrame => Unit,
-              rebuild: () => Unit): Unit = {
-    val want = ids.select(col(idCol).cast("long").as(idCol))
-      .distinct().localCheckpoint()
+              removeRows: (DataFrame, Tombstones) => Unit,
+              rebuild: () => Unit): Option[Fetched] = {
     // durable intent FIRST: once recorded, no replayed micro-batch
     // or future drop can re-admit these ids. Only ids NOT already
     // ledgered append, so idempotent takedown replays leave the
     // ledger untouched — it grows with distinct retractions (the
     // compliance history), never with retries
-    val newIntent = ledgerSet(spark, ledgerDir, idCol) match {
-      case None => want
-      case Some(t) => graft.ext.StoredIndex
-        .antiIdFilter(t, want, idCol).localCheckpoint()
-    }
-    if (!newIntent.isEmpty)
-      newIntent.write.mode("append").parquet(ledgerDir)
+    val newIntent = ledgerSet(spark, ledgerDir, idCol)
+      .fold(want)(minus(spark, want, _))
+    StoredIndex.appendHeldIds(spark, newIntent, idCol, ledgerDir)
     // early takedown: nothing was ever ingested — the ledger entry
     // is the complete, correct retraction (see scaladoc)
-    val primaryPath = new org.apache.hadoop.fs.Path(primaryStore)
-    if (!primaryPath.getFileSystem(
-        spark.sparkContext.hadoopConfiguration).exists(primaryPath))
-      return
-    // fetch the rows BEFORE purging: the index un-mix needs them.
-    // Same pushdown split as purgeStore: a compliance-scale request
-    // becomes an IN predicate the parquet reader prunes row groups
-    // with, instead of a full-store semi-join scan
-    val rows = (idLiterals(want, idCol, 10000) match {
-        case Some(l) if l.nonEmpty => spark.read.parquet(primaryStore)
-          .filter(col(idCol).isin(l: _*))
-        case Some(_) => spark.read.parquet(primaryStore)
-          .filter(lit(false))
-        case None => spark.read.parquet(primaryStore)
-          .join(want, Seq(idCol), "left_semi")
-      }).select(idCol, cols: _*)
+    if (!exists(spark, primaryStore)) return None
+    // resolve a crashed store compaction first: a batch mid-swap
+    // must be neither missed by the fetch nor left unpurged
+    (primaryStore +: extraStores).foreach(StoreMaintenance.heal(spark, _))
+    // fetch the rows BEFORE purging: the index un-mix needs them,
+    // and their batch column names the primary store's affected
+    // partitions (no second discovery scan)
+    val rows = StoredIndex
+      .semiIdFilter(want, spark.read.parquet(primaryStore), idCol)
+      .select(col(idCol) +: cols.map(col) :+
+        col("batch").cast("long").as("batch"): _*)
       .localCheckpoint()
-    (primaryStore +: extraStores).foreach(st =>
-      purgeStore(spark, st, want, idCol, cols))
-    val live = liveIds.localCheckpoint()
-    val toTombstone = rows.join(live, Seq(idCol), "left_semi")
-      .localCheckpoint()
+    val (fetched, batches) = want.litIds match {
+      case Some(_) =>
+        val keys = rows.select(idCol, "batch").collect()
+        (StoredIndex.heldLiterals(spark, keys.map(_.getLong(0)).toSeq),
+          keys.map(_.getLong(1)).distinct.toSeq)
+      case None =>
+        (framed(rows.select(idCol)),
+          rows.select("batch").distinct().collect().map(_.getLong(0)).toSeq)
+    }
+    purgeStore(spark, primaryStore, want, idCol, cols, Some(batches))
+    extraStores.foreach(st =>
+      purgeStore(spark, st, want, idCol, cols, None))
+    // the guards below are set operations on the request's live ids
+    val live = liveOf(spark, want, liveIds, idCol)
+    val toTombstone = intersect(spark, fetched, live)
     // live-indexed ids in the request with NO stored row = residue
     // of a crash between a previous purge and its index remove
-    val unmixable = live.join(want, Seq(idCol), "left_semi")
-      .join(toTombstone.select(idCol), Seq(idCol), "left_anti")
-      .limit(1).count()
-    if (unmixable > 0L) rebuild()
-    else if (!toTombstone.isEmpty) removeRows(toTombstone)
+    if (!isEmpty(minus(spark, live, toTombstone))) rebuild()
+    else if (!isEmpty(toTombstone))
+      removeRows(StoredIndex.semiIdFilter(toTombstone, rows, idCol)
+        .select(idCol, cols: _*), toTombstone)
+    Some(Fetched(rows.select(idCol, cols: _*), fetched))
   }
 }

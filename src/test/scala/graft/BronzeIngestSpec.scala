@@ -5,17 +5,11 @@ import java.sql.Timestamp
 import java.time.{ZoneId, ZonedDateTime}
 import java.time.format.DateTimeFormatter
 import java.time.temporal.ChronoUnit
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.bronze.{BronzeIngest, IngestResult}
 import graft.meta.MetaStore
@@ -27,57 +21,10 @@ import graft.taxi.TaxiFixtures
   * newer rows are quarantined once per 7-column key, the watermark is
   * recomputed from bronze), its Spark job budget, and the partition
   * pruning of its one quarantine read. */
-class BronzeIngestSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
-  import BronzeIngestSpec.Traced
+class BronzeIngestSpec extends SparkTestBase {
 
   private def freshWarehouse(): String =
     Files.createTempDirectory("graft_bronze_").toString
-
-  /** Runs `f` and reports the Spark jobs it started (its job group's)
-    * and the parquet scans of the queries it ran. Listener events
-    * arrive asynchronously but in order, so a marker query run after
-    * `f` fences them: once the marker's job and query events have
-    * arrived, so have all of `f`'s. */
-  private def traced[T](f: => T): Traced[T] = {
-    val sc = spark.sparkContext
-    val group = s"bronze-spec-${java.util.UUID.randomUUID()}"
-    val fence = s"$group-fence"
-    val jobs = new AtomicInteger
-    val fenced = new CountDownLatch(2)
-    val scans = mutable.ArrayBuffer.empty[FileSourceScanExec]
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`fence`) => fenced.countDown()
-          case _ =>
-        }
-    }
-    val queryListener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution,
-                    durationNs: Long): Unit =
-        if (qe.analyzed.output.map(_.name) == Seq(fence)) fenced.countDown()
-        else scans.synchronized {
-          scans ++= collect(qe.executedPlan) { case s: FileSourceScanExec => s }
-        }
-      def onFailure(funcName: String, qe: QueryExecution,
-                    e: Exception): Unit = ()
-    }
-    sc.addSparkListener(jobListener)
-    spark.listenerManager.register(queryListener)
-    try {
-      sc.setJobGroup(group, "traced", interruptOnCancel = false)
-      val result = f
-      sc.setJobGroup(fence, "fence", interruptOnCancel = false)
-      spark.range(1).select(col("id").as(fence)).collect()
-      assert(fenced.await(60, TimeUnit.SECONDS), "listener events never arrived")
-      Traced(result, jobs.get, scans.synchronized(scans.toSeq))
-    } finally {
-      sc.clearJobGroup()
-      spark.listenerManager.unregister(queryListener)
-      sc.removeSparkListener(jobListener)
-    }
-  }
 
   private def rowsOf(df: DataFrame): Seq[Row] = df.collect().toSeq
 
@@ -229,9 +176,4 @@ class BronzeIngestSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       assert(!filters.contains(m), s"$m not pruned by $filters"))
     assert(reads.head.metrics("numPartitions").value == 2)
   }
-}
-
-object BronzeIngestSpec {
-  final case class Traced[T](result: T, jobs: Int,
-                             scans: Seq[FileSourceScanExec])
 }

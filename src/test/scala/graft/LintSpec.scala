@@ -31,8 +31,7 @@ class LintSpec extends AnyFunSuite {
     "Bench.scala", "Verify.scala", "Pipeline.scala", "Setup.scala",
     "StageLog.scala", "ScaleUp.scala", "TimeQuery.scala",
     "ScalingProbe.scala", "CentroidCapProbe.scala",
-    "QuarantineDepthProbe.scala", "TakedownScaleProbe.scala",
-    "ProfileQuery.scala")
+    "QuarantineDepthProbe.scala", "ProfileQuery.scala")
 
   /** One walk, one read per file, shared by every rule (the walk
     * stream is closed eagerly — Files.walk holds directory handles). */

@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ext.{AnnIndex, DedupIndex}
+import graft.ext.{AnnIndex, DedupIndex, StoredIndex}
 import graft.streaming.StreamingDedupIngest.stage
 
 /** The joint text+vector coordinator ([[StreamingCorpusIngest]]):
@@ -621,6 +622,75 @@ class CorpusIngestSpec extends graft.SparkTestBase {
     }
     assert(nQuar >= 4 && nRetract >= 4 && nReadmit >= 2,
       s"weak seed: quar=$nQuar retract=$nRetract readmit=$nReadmit")
+  }
+
+  test("joint retract and readmit job budget (keyword serving): at " +
+      "most 50 and 62 Spark jobs") {
+    // one document each; observed 45 and 56 jobs (111 and 82 before
+    // each request's ids were resolved once on the driver)
+    val root = Files.createTempDirectory("graft_jbudget_").toString
+    val joint = new StreamingCorpusIngest(spark, root,
+      keywordServing = true)
+    val e = embsWithCopies
+    joint.seed(docs.filter($"doc_id" < 200), e)
+    stage(docs.filter($"doc_id" < 10)
+        .select(($"doc_id" + 20000L).as("doc_id"), $"text"),
+      s"$root/staging", "copies")
+    joint.ingestAvailable(s"$root/staging", s"$root/ckpt", e)
+    val retract = traced(joint.retract(Seq(5L).toDF("doc_id")))
+    val readmit = traced(joint.readmit(Seq(20003L).toDF("doc_id"), e))
+    info(s"retract ${retract.jobs} jobs: ${retract.bySite}")
+    info(s"readmit ${readmit.jobs} jobs: ${readmit.bySite}")
+    assert(!ids(joint.text.corpus()).contains(5L))
+    assert(ids(joint.text.corpus()).contains(20003L))
+    assert(joint.alignment().isEmpty)
+    assert(retract.jobs <= 50, retract.bySite)
+    assert(readmit.jobs <= 62, readmit.bySite)
+  }
+
+  test("joint retract and readmit: literal ids ≡ the over-cap frame form") {
+    val e = embsWithCopies
+    def setUp(name: String): (String, StreamingCorpusIngest) = {
+      val root = Files.createTempDirectory(name).toString
+      val joint = new StreamingCorpusIngest(spark, root,
+        keywordServing = true)
+      joint.seed(docs.filter($"doc_id" < 150), e)
+      stage(docs.filter($"doc_id" < 10)
+          .select(($"doc_id" + 20000L).as("doc_id"), $"text"),
+        s"$root/staging", "copies")
+      joint.ingestAvailable(s"$root/staging", s"$root/ckpt", e)
+      joint.registerTenants(docs.filter($"doc_id" < 150).select($"doc_id",
+        concat(lit("t"), ($"doc_id" % 3).cast("string")).as("tenant")))
+      (root, joint)
+    }
+    // 99999 was never ingested (ledger-only); the replay is a no-op
+    val gone = Seq(5L, 120L, 99999L).toDF("doc_id")
+    val back = Seq(20003L, 20007L).toDF("doc_id")
+    val runs = Seq(StoredIndex.HeldIdCap, 0).map { cap =>
+      val (root, joint) = setUp(s"graft_jeq${cap}_")
+      joint.retractHeld(StoredIndex.holdIds(gone, "doc_id", cap))
+      joint.retractHeld(StoredIndex.holdIds(gone, "doc_id", cap))
+      joint.readmitHeld(StoredIndex.holdIds(back, "doc_id", cap), e)
+      assert(joint.alignment().isEmpty, s"cap $cap: families misaligned")
+      root
+    }
+    def same(what: String)(read: String => DataFrame): Unit = {
+      val Seq(a, b) = runs.map(read)
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+        s"$what differs between the literal and the frame form")
+    }
+    Seq("corpus", "quarantine", "vectors").foreach(st =>
+      same(st)(r => spark.read.parquet(s"$r/$st")))
+    Seq("corpus_retracted", "vectors_retracted").foreach(l =>
+      same(l)(r => spark.read.parquet(s"$r/$l")))
+    Seq("dedup_index", "ann_index", "keyword_index").foreach(ix =>
+      same(s"$ix meta")(r => spark.read.parquet(s"$r/$ix/meta")))
+    same("tenant gauges")(r =>
+      spark.read.parquet(s"$r/keyword_index/tstats"))
+    assert(ids(spark.read.parquet(s"${runs.head}/corpus_retracted")) ==
+      Set(5L, 120L, 99999L))
+    val corpus = ids(spark.read.parquet(s"${runs.head}/corpus"))
+    assert(corpus.contains(20003L) && !corpus.contains(5L))
   }
 
   test("missed sync converges through repairAlignment; absent " +
