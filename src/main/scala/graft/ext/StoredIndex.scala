@@ -562,19 +562,22 @@ object StoredIndex {
 
   /** A request's id set resolved ONCE into [[Tombstones]] form — the
     * held set a retraction hands down its layers, so no layer
-    * re-derives it: sorted distinct driver literals when at most
-    * `cap` rows name it (one bounded collect; none for a local
-    * relation), otherwise the distinct frame, materialized once.
+    * re-derives it: sorted distinct driver literals when it holds at
+    * most `cap` distinct ids (one bounded collect, none for a local
+    * relation; a second, distinct one when more than `cap` rows name
+    * them), otherwise the distinct frame, materialized once.
     * Null ids name no row and are dropped. `cap <= 0` forces the
     * frame form. */
   private[graft] def holdIds(ids: DataFrame, idCol: String,
                              cap: Int = HeldIdCap): Tombstones = {
     val keys = ids.select(col(idCol).cast("long").as("id"))
       .filter(col("id").isNotNull)
-    val rows = if (cap <= 0) None else {
-      val r = keys.limit(cap + 1).collect()
-      if (r.length > cap) None else Some(r.map(_.getLong(0)))
-    }
+    // the plain collect runs no job for a local relation; a request
+    // naming its ids more than `cap` times retries on distinct ids
+    def bounded(df: DataFrame) = Some(df.limit(cap + 1).collect())
+      .filter(_.length <= cap).map(_.map(_.getLong(0)))
+    val rows =
+      if (cap <= 0) None else bounded(keys).orElse(bounded(keys.distinct()))
     rows match {
       case Some(r) => heldLiterals(ids.sparkSession, r.toSeq)
       case None =>

@@ -99,7 +99,9 @@ object Ops {
     * before this returns, also when `main` throws, so no work outlives
     * the call; main's failure wins, then side's. A fresh thread
     * inherits the caller's Spark local properties (job group, call
-    * site) as they are now. */
+    * site) as they are now; it is kept here rather than routed through
+    * `StoredIndex.async`'s pool because `graft.ops` sits below
+    * `graft.ext` and does not depend on it. */
   def alongside[A, B](side: => A)(main: => B): (B, A) = {
     var sideResult: Either[Throwable, A] = null
     val t = new Thread(() => sideResult =

@@ -493,20 +493,24 @@ final class StreamingDedupIngest(spark: SparkSession, indexDir: String,
         .select(col("doc_id"), col("text"),
           col("batch").cast("long").as("batch")), "doc_id")
       .localCheckpoint()
-    // their (doc_id, batch) keys: the missing count, the corpus
-    // partitions to re-enter and the quarantine partitions to purge
-    val (nMissing, affected) = want.litIds match {
-      case Some(l) =>
-        val keys = rows.select("doc_id", "batch").collect()
-        (l.size - keys.map(_.getLong(0)).distinct.length,
-          keys.map(_.getLong(1)).distinct.toSeq)
-      case None =>
-        (want.frame().count() - rows.select("doc_id").distinct().count(),
-          rows.select("batch").distinct().collect().map(_.getLong(0)).toSeq)
-    }
+    // their keys: the missing count, the corpus partitions to
+    // re-enter and the quarantine partitions to purge
+    val found = Takedown.keysOf(spark, want, rows, "doc_id")
+    val nFound = Takedown.size(found.ids)
+    val nMissing = Takedown.size(want) - nFound
     require(nMissing == 0L,
       s"readmit: $nMissing requested id(s) are not quarantined — " +
         "only currently-quarantined documents can be readmitted")
+    // a quarantined document a later drop re-delivered is quarantined
+    // again under that drop's batch: its original batch is ambiguous,
+    // and readmitting every copy would write it into two corpus
+    // partitions and append it to the index twice
+    val nRepeated = found.rows() - nFound
+    require(nRepeated == 0L,
+      s"readmit: $nRepeated surplus quarantine row(s) repeat requested " +
+        "ids in more than one batch (a quarantined document re-" +
+        "delivered later) — such a document cannot be readmitted")
+    val affected = found.batches
     // 1. corpus partitions FIRST, idempotent per batch dir
     affected.foreach { b =>
       val pdir = s"$corpusDir/batch=$b"

@@ -157,6 +157,33 @@ private[streaming] object Takedown {
   private[streaming] def isEmpty(t: Tombstones): Boolean =
     t.litIds.fold(t.frame().isEmpty)(_.isEmpty)
 
+  private[streaming] def size(t: Tombstones): Long =
+    t.litIds.fold(t.frame().count())(_.size.toLong)
+
+  /** The keys of a held request's fetched rows: the ids found, the
+    * distinct batches they sit in, and the number of rows, which
+    * exceeds the ids' count when an id sits in more than one batch. */
+  private[streaming] final case class Keys(ids: Tombstones,
+                                           batches: Seq[Long],
+                                           rows: () => Long)
+
+  /** [[Keys]] of `rows` (`idCol` and a long `batch`, materialized)
+    * fetched for `want`: one collect of the (id, batch) keys for a
+    * literal request; for the frame form the distinct ids as a frame,
+    * one batch collect, and the row count only when asked for. */
+  private[streaming] def keysOf(spark: SparkSession, want: Tombstones,
+                                rows: DataFrame, idCol: String): Keys =
+    want.litIds match {
+      case Some(_) =>
+        val keys = rows.select(idCol, "batch").collect()
+        Keys(StoredIndex.heldLiterals(spark, keys.map(_.getLong(0)).toSeq),
+          keys.map(_.getLong(1)).distinct.toSeq, () => keys.length.toLong)
+      case None =>
+        Keys(framed(rows.select(idCol).distinct()),
+          rows.select("batch").distinct().collect().map(_.getLong(0)).toSeq,
+          () => rows.count())
+    }
+
   private def framed(df: DataFrame): Tombstones = {
     val f = df.localCheckpoint()
     Tombstones(None, () => f)
@@ -265,16 +292,9 @@ private[streaming] object Takedown {
       .select(col(idCol) +: cols.map(col) :+
         col("batch").cast("long").as("batch"): _*)
       .localCheckpoint()
-    val (fetched, batches) = want.litIds match {
-      case Some(_) =>
-        val keys = rows.select(idCol, "batch").collect()
-        (StoredIndex.heldLiterals(spark, keys.map(_.getLong(0)).toSeq),
-          keys.map(_.getLong(1)).distinct.toSeq)
-      case None =>
-        (framed(rows.select(idCol)),
-          rows.select("batch").distinct().collect().map(_.getLong(0)).toSeq)
-    }
-    purgeStore(spark, primaryStore, want, idCol, cols, Some(batches))
+    val found = keysOf(spark, want, rows, idCol)
+    val fetched = found.ids
+    purgeStore(spark, primaryStore, want, idCol, cols, Some(found.batches))
     extraStores.foreach(st =>
       purgeStore(spark, st, want, idCol, cols, None))
     // the guards below are set operations on the request's live ids
