@@ -85,7 +85,7 @@ object AnnIndex {
     // and ensure() would serve the broken index
     StoredIndex.invalidate(spark, dir)
     StoredIndex.clearDeleteIds(spark, dir) // rebuild = clean live state
-    dropTenantOverlay(spark, dir) // assignments name the PREVIOUS
+    TenantOverlay.drop(spark, dir, None) // assignments name the PREVIOUS
     // generation's ids — re-register after an in-place rebuild
     // ([[rebuildStaged]] instead CARRIES survivors; see its scaladoc)
     // the commit-metadata aggregate is independent of the training/
@@ -161,13 +161,8 @@ object AnnIndex {
     * ensure() rebuilds — never a half-swapped mix of generations.
     *
     * A registered tenant overlay is CARRIED through the retrain
-    * ([[KeywordIndex.rebuildStaged]]'s posture): assignments whose
-    * id survives into the new corpus stage beside the fresh assets
-    * and swap in with them, so the tenant serve never goes dark
-    * across scheduled retrains. Ids present only in the NEW corpus
-    * are untenanted ([[assignTenants]] after); the overlay is pure
-    * id-keyed assignment (no derived statistics on this family), so
-    * the carry is one tombstone-filtered semi-join. */
+    * ([[TenantOverlay.carry]]): ids present only in the NEW corpus
+    * are untenanted ([[assignTenants]] after). */
   def rebuildStaged(corpus: DataFrame, dir: String, stride: Int = 20,
                     m: Int = 4, dim: Int = 64, maxCentroids: Int = 4096,
                     vecCol: String = "embedding",
@@ -177,22 +172,11 @@ object AnnIndex {
     val staging = StoredIndex.freshStaging(spark, dir)
     build(corpus, staging, stride, m, dim, maxCentroids, vecCol,
       idCol, version)
-    // the overlay stages after the staging meta marker — a crash
-    // anywhere before the swap leaves the LIVE index (old overlay
-    // included) fully serving ([[KeywordIndex.rebuildStaged]])
-    if (hasTenants(spark, dir)) {
-      val surviving = filterTenantDels(spark, dir,
-          StoredIndex.filterTombstones(
-            StoredIndex.readDeleteIds(spark, dir),
-            spark.read.parquet(s"$dir/tenants"), "id"))
-        .join(spark.read.parquet(s"$staging/postings")
-            .select(col("nid").as("id")),
-          Seq("id"), "left_semi")
-      clusterTenants(surviving)
-        .write.mode("overwrite").parquet(s"$staging/tenants")
-    }
+    TenantOverlay.carry(spark, dir, staging,
+      spark.read.parquet(s"$staging/postings").select(col("nid").as("id")),
+      None)
     StoredIndex.swapStaged(spark, dir,
-      Seq("centroids", "codebook", "postings", "tenants", "tdels"))
+      Seq("centroids", "codebook", "postings") ++ TenantOverlay.assets(None))
   }
 
   /** Incremental index maintenance: append a batch of NEW vectors to
@@ -402,13 +386,7 @@ object AnnIndex {
         s"$outDir/postings", s"s${i}_")
       StoredIndex.copyAssetFiles(spark, s"$d/deletes",
         s"$outDir/deletes", s"s${i}_")
-      // shard posting ids are disjoint (guard above), so overlay
-      // shards union without double-assignment; shards without one
-      // simply contribute untenanted vectors
-      StoredIndex.copyAssetFiles(spark, s"$d/tenants",
-        s"$outDir/tenants", s"s${i}_")
-      StoredIndex.copyAssetFiles(spark, s"$d/tdels",
-        s"$outDir/tdels", s"s${i}_")
+      TenantOverlay.copy(spark, d, outDir, s"s${i}_")
     }
     val blooms = shardDirs.map(d =>
       StoredIndex.readIdBloomAsset(spark, d))
@@ -469,12 +447,7 @@ object AnnIndex {
       s"$dir/postings", "ab_")
     StoredIndex.copyAssetFiles(spark, s"$shardDir/deletes",
       s"$dir/deletes", "ab_")
-    // the shard's assignments ride along (ids are disjoint by the
-    // guard above — the target's other docs are simply untenanted)
-    StoredIndex.copyAssetFiles(spark, s"$shardDir/tenants",
-      s"$dir/tenants", "ab_")
-    StoredIndex.copyAssetFiles(spark, s"$shardDir/tdels",
-      s"$dir/tdels", "ab_")
+    TenantOverlay.copy(spark, shardDir, dir, "ab_")
     (StoredIndex.readIdBloomAsset(spark, dir), shardBloom) match {
       case (None, _) => () // pre-bloom target stays pre-bloom
       case (Some(_), None) => // pre-bloom shard: drop the asset
@@ -568,18 +541,7 @@ object AnnIndex {
     * not the rewrite. */
   def compact(spark: SparkSession, dir: String): Unit = {
     val dels = StoredIndex.readDeleteIds(spark, dir)
-    // the tenant overlay compacts BEFORE the postings compact drops
-    // `deletes/` — its tombstone materialization reads the same list
-    // ([[KeywordIndex.compact]]'s ordering)
-    if (hasTenants(spark, dir)) {
-      StoredIndex.compactAsset(spark, dir, "tenants",
-        df => clusterTenants(filterTenantDels(spark, dir,
-          StoredIndex.filterTombstones(dels, df, "id"))))
-      // the rewrite materialized the overlay tombstones — drop the
-      // spent list (idempotent if a crash lands between)
-      StoredIndex.fsOf(spark, dir)
-        .delete(new org.apache.hadoop.fs.Path(s"$dir/tdels"), true)
-    }
+    TenantOverlay.compact(spark, dir, dels) // before `deletes/` drops
     StoredIndex.compactAsset(spark, dir, "postings",
       df => compactRewrite(
         StoredIndex.filterTombstones(dels, df, "nid")),
@@ -600,11 +562,7 @@ object AnnIndex {
                    maxFiles: Int = 64): Boolean = {
     val p = StoredIndex.compactIfAccreted(spark, dir, "postings",
       maxFiles, compactRewrite)
-    val t = hasTenants(spark, dir) &&
-      StoredIndex.compactIfAccreted(spark, dir, "tenants", maxFiles,
-        df => clusterTenants(filterTenantDels(spark, dir, df)))
-    if (t) StoredIndex.fsOf(spark, dir)
-      .delete(new org.apache.hadoop.fs.Path(s"$dir/tdels"), true)
+    val t = TenantOverlay.maybeCompact(spark, dir, maxFiles)
     p || t
   }
 
@@ -732,274 +690,50 @@ object AnnIndex {
 
   // ------------------------------------------------ tenant overlay
 
-  /** The dense family's tenant overlay — ONE asset, registered by
-    * [[registerTenants]] on top of a built index:
-    *  - `tenants/` — (id, tenant) assignment rows, one per tenanted
-    *    live vector, clustered by (tenant, id) so a single tenant's
-    *    id list is a row-group-pruned slice, not an asset scan.
-    *
-    * Unlike [[KeywordIndex]]'s overlay there is NO statistics gauge:
-    * ADC scoring uses no corpus statistics (each candidate's score
-    * is a pure function of its codes and the query's LUT), so the
-    * overlay's whole job is making the per-tenant grant a STORED,
-    * pruned read instead of a caller-carried allowed frame —
-    * [[probeTopKTenant]] is [[probeTopKFiltered]] with the allowed
-    * set drawn from the clustered slice, as id-IN literals under the
-    * pushdown cap. Coverage may be partial (unassigned vectors
-    * belong to no tenant); [[build]] drops the overlay (assignments
-    * name the previous generation's ids — re-register after);
-    * [[rebuildStaged]] carries surviving assignments; [[remove]]
-    * needs no overlay work at all (every overlay read tombstone-
-    * filters, and [[compact]] materializes the removals). */
-  private def hasTenants(spark: SparkSession, dir: String): Boolean =
-    StoredIndex.fsOf(spark, dir)
-      .exists(new org.apache.hadoop.fs.Path(s"$dir/tenants"))
-
-  private def dropTenantOverlay(spark: SparkSession,
-                                dir: String): Unit =
-    Seq("tenants", "tdels").foreach(a => StoredIndex.fsOf(spark, dir)
-      .delete(new org.apache.hadoop.fs.Path(s"$dir/$a"), true))
-
-  private def clusterTenants(df: DataFrame): DataFrame =
-    df.repartitionByRange(col("tenant"), col("id"))
-      .sortWithinPartitions("tenant", "id")
-
-  /** Overlay tombstones (`tdels/`) — [[KeywordIndex]]'s design on
-    * this family (see its scaladoc for the pair-not-id and
-    * resurrection arguments): (id, tenant) pairs unassigned or
-    * superseded since the last overlay compact. No gauge exists
-    * here, so the un/reassign mutations are overlay-only. */
-  private def readTenantDels(spark: SparkSession,
-                             dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tdels")
-    if (StoredIndex.fsOf(spark, dir).exists(p))
-      Some(spark.read.parquet(p.toString))
-    else None
-  }
-
-  private def filterTenantDels(spark: SparkSession, dir: String,
-                               rows: DataFrame): DataFrame =
-    StoredIndex.readPairAsset(spark, s"$dir/tdels") match {
-      case None => rows
-      case Some(Left(pairs)) => StoredIndex.antiPairFilter(pairs, rows)
-      case Some(Right(td)) => rows.join(
-        broadcast(td), Seq("id", "tenant"), "left_anti")
-    }
-
-  private def writeTenantDels(spark: SparkSession, dir: String,
-                              pairs: DataFrame): Unit = {
-    val p = pairs.select("id", "tenant").distinct().localCheckpoint()
-    if (p.isEmpty)
-      StoredIndex.fsOf(spark, dir)
-        .delete(new org.apache.hadoop.fs.Path(s"$dir/tdels"), true)
-    else StoredIndex.stageSwapAsset(spark, dir, "tdels", p)
-  }
-
-  /** The LIVE assignment rows of a batch-sized id frame — both
-    * tombstone lists applied; what un/reassign guard on. */
-  private def assignmentSliceFor(spark: SparkSession, dir: String,
-                                 ids: DataFrame): DataFrame =
-    filterTenantDels(spark, dir,
-      StoredIndex.filterTombstones(StoredIndex.readDeleteIds(spark, dir),
-        spark.read.parquet(s"$dir/tenants")
-          .join(broadcast(ids), Seq("id"), "left_semi"), "id"))
-
-  /** Normalize + validate a tenant assignment frame to (id, tenant):
-    * string tenants (the general ACL key shape), one row per id, no
-    * nulls — [[KeywordIndex]]'s contract verbatim (there the
-    * duplicate guard protects the gauges; here it keeps a tenant's
-    * id list a SET, so the filtered serve's literal pushdown and the
-    * per-tenant semi-join agree). */
-  private def tenantAssignOf(assign: DataFrame, tenantCol: String,
-                             idCol: String, what: String): DataFrame = {
-    // one materialization + ONE guard aggregate (was two jobs over
-    // the caller's full lineage) — KeywordIndex.tenantAssignOf's
-    // fused form, same reasoning
-    val a = assign.select(col(idCol).cast("long").as("id"),
-      col(tenantCol).cast("string").as("tenant"))
-      .localCheckpoint()
-    val g = a.agg(
-      count(when(col("tenant").isNull || col("id").isNull, 1L))
-        .as("n_bad"),
-      count(lit(1L)).as("n"),
-      countDistinct(col("id")).as("n_ids")).head
-    require(g.getLong(0) == 0L,
-      s"$what: assignment rows must carry non-null (id, tenant)")
-    require(g.getLong(2) == g.getLong(1),
-      s"$what: one tenant per id — an id in two tenants would make " +
-        "the per-tenant id lists overlapping sets")
-    a
-  }
-
-  /** Register (or re-register, replacing the whole overlay) tenant
-    * assignments over the live index. Every assigned id must be
-    * live; coverage may be partial. The overlay lands through a
-    * stage-then-rename swap ([[StoredIndex.stageSwapAsset]]): a
-    * plain `overwrite` interrupted mid-write can leave a READABLE
-    * partial dir (completed part files, no `_SUCCESS`) that would
-    * silently drop vectors out of their tenant's serve slice — with
-    * the swap, a mid-crash read sees the OLD overlay whole or NO
-    * overlay (a loud "registerTenants first"), fail-closed either
-    * way and never cross-tenant mixing. */
+  /** The dense family's registered-tenant overlay is [[TenantOverlay]]
+    * with NO gauge: ADC scoring uses no corpus statistics (each
+    * candidate's score is a pure function of its codes and the
+    * query's LUT), so the overlay's whole job is making the
+    * per-tenant grant a STORED, pruned read instead of a
+    * caller-carried allowed frame — [[probeTopKTenant]] is
+    * [[probeTopKFiltered]] with the allowed set drawn from the
+    * clustered slice. Every assigned id must be live. */
   def registerTenants(spark: SparkSession, dir: String,
                       assign: DataFrame, tenantCol: String = "tenant",
-                      idCol: String = "vec_id"): Unit = {
-    val a = tenantAssignOf(assign, tenantCol, idCol,
-      "AnnIndex.registerTenants")
-    require(a.join(liveIndexedIds(spark, dir), Seq("id"), "left_anti")
-      .limit(1).count() == 0L,
-      "AnnIndex.registerTenants: assignment names id(s) not live " +
-        s"in the index at $dir")
-    StoredIndex.stageSwapAsset(spark, dir, "tenants", clusterTenants(a))
-    // a full re-registration replaces the WHOLE overlay — pending
-    // tombstones name the superseded assignment set
-    StoredIndex.fsOf(spark, dir)
-      .delete(new org.apache.hadoop.fs.Path(s"$dir/tdels"), true)
-  }
+                      idCol: String = "vec_id"): Unit =
+    TenantOverlay.register(spark, dir, assign, tenantCol, idCol,
+      "AnnIndex.registerTenants", liveIndexedIds(spark, dir), None)
 
   /** Extend the overlay with assignments for newly-appended (or
-    * previously untenanted) live vectors — O(batch) like [[append]]:
-    * the assignment rows append as an unclustered shard
-    * ([[compact]]/[[maybeCompact]] restore the clustering). The
-    * already-assigned guard is an exact check over the overlay keys
-    * — control-plane frequency, not a probe. */
+    * previously untenanted) live vectors — O(batch) like [[append]]. */
   def assignTenants(spark: SparkSession, dir: String,
                     assign: DataFrame, tenantCol: String = "tenant",
-                    idCol: String = "vec_id"): Unit = {
-    require(hasTenants(spark, dir),
-      s"AnnIndex.assignTenants: no tenant overlay at $dir — " +
-        "registerTenants first")
-    val a = tenantAssignOf(assign, tenantCol, idCol,
-      "AnnIndex.assignTenants")
-    require(a.join(liveIndexedIds(spark, dir), Seq("id"), "left_anti")
-      .limit(1).count() == 0L,
-      "AnnIndex.assignTenants: assignment names id(s) not live " +
-        s"in the index at $dir")
-    val already = assignmentSliceFor(spark, dir, a.select("id"))
-      .limit(1).count()
-    require(already == 0L,
-      "AnnIndex.assignTenants: id(s) already assigned — " +
-        "reassignTenants moves them; unassignTenants ends them; " +
-        "re-register to replace the whole overlay")
-    // resurrect-vs-append split ([[KeywordIndex.assignTenants]]): a
-    // previously-unassigned pair's physical row comes back by
-    // dropping its tombstone; only genuinely-new pairs append
-    val td = readTenantDels(spark, dir)
-    val newRows = td.fold(a)(t =>
-        a.join(broadcast(t.select("id", "tenant")),
-          Seq("id", "tenant"), "left_anti"))
-      .localCheckpoint()
-    td.foreach(t => writeTenantDels(spark, dir,
-      t.join(broadcast(a.select("id", "tenant")),
-        Seq("id", "tenant"), "left_anti")))
-    if (!newRows.isEmpty)
-      newRows.select("id", "tenant")
-        .write.mode("append").parquet(s"$dir/tenants")
-  }
+                    idCol: String = "vec_id"): Unit =
+    TenantOverlay.assign(spark, dir, assign, tenantCol, idCol,
+      "AnnIndex.assignTenants", liveIndexedIds(spark, dir), None)
 
-  /** End tenant membership for currently-assigned vectors — the
-    * O(batch) ACL operation [[KeywordIndex.unassignTenants]] defines,
-    * overlay-only on this family (ADC scoring uses no corpus
-    * statistics, so there is no gauge to fold): the batch's live
-    * assignment rows become `tdels/` tombstones; the `tenants/`
-    * asset is never rewritten ([[compact]] materializes later). The
-    * vectors stay live in the index — only their ACL membership
-    * ends. Every id must be currently assigned (loud otherwise).
-    * Crash posture is the tombstone swap itself (stage-then-rename):
-    * the list lands whole or not at all — a crash never yields a
-    * partially-unassigned batch serving cross-tenant. */
+  /** End tenant membership for currently-assigned vectors — O(batch),
+    * overlay-only; the vectors stay live in the index. */
   def unassignTenants(spark: SparkSession, dir: String,
-                      ids: DataFrame, idCol: String = "vec_id"): Unit = {
-    require(hasTenants(spark, dir),
-      s"AnnIndex.unassignTenants: no tenant overlay at $dir — " +
-        "registerTenants first")
-    val want = idsOf(ids, idCol).distinct().localCheckpoint()
-    require(!want.isEmpty, "AnnIndex.unassignTenants: no ids to unassign")
-    val cur = assignmentSliceFor(spark, dir, want).localCheckpoint()
-    require(want.join(cur, Seq("id"), "left_anti")
-      .limit(1).count() == 0L,
-      "AnnIndex.unassignTenants: id(s) not currently assigned — " +
-        "nothing to unassign (an id must hold a live assignment row)")
-    writeTenantDels(spark, dir,
-      readTenantDels(spark, dir)
-        .fold(cur.select("id", "tenant"))(
-          _.select("id", "tenant")
-            .unionByName(cur.select("id", "tenant"))))
-  }
+                      ids: DataFrame, idCol: String = "vec_id"): Unit =
+    TenantOverlay.unassign(spark, dir, ids, idCol,
+      "AnnIndex.unassignTenants", None)
 
   /** Move currently-assigned vectors to a different tenant — ONE
-    * O(batch) overlay mutation instead of a full re-registration
-    * ([[KeywordIndex.reassignTenants]] minus the gauge fold): the
-    * old pairs tombstone, pairs returning to a previously-held
-    * tenant RESURRECT their stale row, genuinely-new pairs append.
-    * Ordering is FAIL-CLOSED: the tombstone swap lands FIRST, the
-    * new rows append second — a crash between leaves the batch
-    * unassigned entirely (out of serving, loud to fix by re-running
-    * or re-registering), never serving under BOTH tenants. Guards:
-    * ids must be currently assigned; a row naming the id's current
-    * tenant is refused (a no-op move hides a caller bug). */
+    * O(batch) overlay mutation instead of a re-registration. */
   def reassignTenants(spark: SparkSession, dir: String,
                       assign: DataFrame, tenantCol: String = "tenant",
-                      idCol: String = "vec_id"): Unit = {
-    require(hasTenants(spark, dir),
-      s"AnnIndex.reassignTenants: no tenant overlay at $dir — " +
-        "registerTenants first")
-    val a = tenantAssignOf(assign, tenantCol, idCol,
-      "AnnIndex.reassignTenants")
-    val cur = assignmentSliceFor(spark, dir, a.select("id"))
-      .localCheckpoint()
-    // both guards in ONE pass over a ⟕ cur (cur is id-unique —
-    // KeywordIndex.reassignTenants' fused form, was two jobs)
-    val chk = a.join(cur.withColumnRenamed("tenant", "__cur"),
-        Seq("id"), "left")
-      .agg(count(when(col("__cur").isNull, 1L)).as("n_unassigned"),
-        count(when(col("tenant") === col("__cur"), 1L)).as("n_noop"))
-      .head
-    require(chk.getLong(0) == 0L,
-      "AnnIndex.reassignTenants: id(s) not currently assigned — " +
-        "assignTenants adds NEW assignments; reassign only moves")
-    require(chk.getLong(1) == 0L,
-      "AnnIndex.reassignTenants: row(s) name the id's CURRENT " +
-        "tenant — a no-op move; drop those rows")
-    val td = readTenantDels(spark, dir)
-    val newRows = td.fold(a)(t =>
-        a.join(broadcast(t.select("id", "tenant")),
-          Seq("id", "tenant"), "left_anti"))
-      .localCheckpoint()
-    writeTenantDels(spark, dir,
-      td.fold(cur.select("id", "tenant"))(
-          _.select("id", "tenant")
-            .unionByName(cur.select("id", "tenant")))
-        .join(broadcast(a.select("id", "tenant")),
-          Seq("id", "tenant"), "left_anti"))
-    if (!newRows.isEmpty)
-      newRows.select("id", "tenant")
-        .write.mode("append").parquet(s"$dir/tenants")
-  }
+                      idCol: String = "vec_id"): Unit =
+    TenantOverlay.reassign(spark, dir, assign, tenantCol, idCol,
+      "AnnIndex.reassignTenants", None)
 
-  /** The live id set of one registered tenant — a (tenant, id)-
-    * clustered overlay slice (`tenant = …` prunes row groups),
-    * tombstone-filtered. What [[probeTopKTenant]] restricts on, and
-    * the allowed frame a caller composing with other serves (e.g. a
-    * dense-only hybrid) hands [[probeTopKFiltered]]. */
+  /** The live id set of one registered tenant — what
+    * [[probeTopKTenant]] restricts on, and the allowed frame a caller
+    * composing with other serves (e.g. a dense-only hybrid) hands
+    * [[probeTopKFiltered]]. */
   def tenantLiveIds(spark: SparkSession, dir: String,
                     tenant: String): DataFrame =
-    filterTenantDels(spark, dir,
-      StoredIndex.filterTombstones(spark, dir,
-        spark.read.parquet(s"$dir/tenants")
-          .filter(col("tenant") === lit(tenant)), "id"))
-      .select("id")
-
-  /** Driver-known id cap for the tenant grant's literal pushdown —
-    * [[KeywordIndex]]'s AllowedPushdownCap rationale on this family:
-    * below the cap the grant becomes a `nid IN (…)` predicate the
-    * parquet reader prunes on row-group/dictionary stats instead of
-    * a semi-join that still scans the full postings asset. (The
-    * postings are cid-clustered, not id-clustered, so the pruning is
-    * stats-opportunistic rather than guaranteed-tight — but the IN
-    * also evaluates candidate-side with zero join, which is the
-    * bigger win at page-sized grants.) */
-  private val TenantPushdownCap = 10000
+    TenantOverlay.liveIds(spark, dir, tenant)
 
   /** Registered-tenant dense serve — [[probeTopKFiltered]] with the
     * allowed set drawn from the STORED overlay ([[KeywordIndex
@@ -1020,10 +754,9 @@ object AnnIndex {
                       nprobe: Int = 12, m: Int = 4, dim: Int = 64,
                       vecCol: String = "embedding",
                       idCol: String = "vec_id",
-                      pushdownCap: Int = TenantPushdownCap): DataFrame = {
-    require(hasTenants(spark, dir),
-      s"AnnIndex.probeTopKTenant: no tenant overlay at $dir — " +
-        "registerTenants first (ad-hoc subsets: probeTopKFiltered)")
+                      pushdownCap: Int = StoredIndex.HeldIdCap): DataFrame = {
+    TenantOverlay.requireRegistered(spark, dir, "AnnIndex.probeTopKTenant",
+      " (ad-hoc subsets: probeTopKFiltered)")
     Similarity.ivfPqProbe(
       spark.read.parquet(s"$dir/centroids"),
       spark.read.parquet(s"$dir/codebook"),
@@ -1041,15 +774,7 @@ object AnnIndex {
                              tenant: String,
                              pushdownCap: Int): DataFrame = {
     val tIds = tenantLiveIds(spark, dir, tenant)
-    val lits =
-      if (pushdownCap <= 0) None
-      else {
-        val rows = tIds.limit(pushdownCap + 1).collect()
-        if (rows.length > pushdownCap)
-          None // above-cap grant: honest semi-join fallback
-        else Some(rows.map(_.getLong(0)).sorted.toIndexedSeq)
-      }
-    lits match {
+    StoredIndex.idLiterals(tIds, pushdownCap) match {
       case Some(l) => livePostings(spark, dir)
         .filter(col("nid").isin(l: _*))
       case None => livePostings(spark, dir)
@@ -1078,11 +803,9 @@ object AnnIndex {
                        tenant: String, nprobe: Int = 12, m: Int = 4,
                        dim: Int = 64, vecCol: String = "embedding",
                        idCol: String = "vec_id",
-                       pushdownCap: Int = TenantPushdownCap): DataFrame = {
-    require(hasTenants(spark, dir),
-      s"AnnIndex.probeRangeTenant: no tenant overlay at $dir — " +
-        "registerTenants first (ad-hoc subsets: probeRange over a " +
-        "caller-filtered postings view)")
+                       pushdownCap: Int = StoredIndex.HeldIdCap): DataFrame = {
+    TenantOverlay.requireRegistered(spark, dir, "AnnIndex.probeRangeTenant",
+      " (ad-hoc subsets: probeRange over a caller-filtered postings view)")
     Similarity.ivfPqRange(
       spark.read.parquet(s"$dir/centroids"),
       spark.read.parquet(s"$dir/codebook"),
@@ -1112,18 +835,9 @@ object AnnIndex {
     require(tenants.nonEmpty, "AnnIndex.probeManyTenant needs queries")
     require(tenants.map(_._1).distinct.size == tenants.size,
       "AnnIndex.probeManyTenant: qids must be distinct")
-    require(hasTenants(spark, dir),
-      s"AnnIndex.probeManyTenant: no tenant overlay at $dir — " +
-        "registerTenants first (ad-hoc subsets: probeManyFiltered)")
-    import spark.implicits._
-    val qTen = tenants.toDF("qid", "tenant")
-    val named = tenants.map(_._2).distinct
-    val pairs = filterTenantDels(spark, dir,
-        StoredIndex.filterTombstones(
-          StoredIndex.readDeleteIds(spark, dir),
-          spark.read.parquet(s"$dir/tenants")
-            .filter(col("tenant").isin(named: _*)), "id"))
-      .join(broadcast(qTen), Seq("tenant"))
+    TenantOverlay.requireRegistered(spark, dir, "AnnIndex.probeManyTenant",
+      " (ad-hoc subsets: probeManyFiltered)")
+    val pairs = TenantOverlay.livePairs(spark, dir, tenants)
       .select(col("qid"), col("id").as("nid"))
     Similarity.ivfPqProbe(
       spark.read.parquet(s"$dir/centroids"),

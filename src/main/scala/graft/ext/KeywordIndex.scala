@@ -205,7 +205,8 @@ object KeywordIndex {
     val spark = corpus.sparkSession
     StoredIndex.invalidate(spark, dir) // commit marker
     StoredIndex.clearDeleteIds(spark, dir) // rebuild = clean live state
-    dropTenantOverlay(spark, dir) // assignments name the OLD generation
+    // assignments name the OLD generation
+    TenantOverlay.drop(spark, dir, Some(TenantGauge))
     // identity + id bloom in ONE corpus pass (the former pair paid
     // two full scans for the same commit metadata), overlapped with
     // the tokenize checkpoint (§2.6); joined before the meta marker,
@@ -251,45 +252,23 @@ object KeywordIndex {
     * the live assets keep serving probes, then the swap is a
     * rename-sized window.
     *
-    * The tenant overlay is CARRIED through the retrain (unlike
-    * [[build]], which derives clean state and drops it): assignments
-    * are id-keyed exactly like the postings, so the live overlay's
-    * rows for ids that SURVIVE into the new generation stage beside
-    * the fresh assets — with the gauges re-derived from the staged
-    * doclens (a rebuilt doc's text, hence dl, may have changed) —
-    * and the tenant serve stays warm across the swap instead of
-    * paying a re-registration pass and a serving gap after every
-    * retrain. The staged overlay equals a fresh [[registerTenants]]
-    * of the surviving assignments by construction (same derivation);
-    * ids present only in the NEW corpus are untenanted (assign
-    * after), and a tenant whose every doc was retrained away loses
-    * its gauge row (re-register to re-pin it as registered-empty). */
+    * The tenant overlay is CARRIED through the retrain
+    * ([[TenantOverlay.carry]]), its gauges re-derived from the staged
+    * doclens — equal to a fresh [[registerTenants]] of the surviving
+    * assignments by construction; ids present only in the NEW corpus
+    * are untenanted (assign after). */
   def rebuildStaged(corpus: DataFrame, dir: String,
                     textCol: String = "text", idCol: String = "doc_id",
                     version: Option[String] = None): Unit = {
     val spark = corpus.sparkSession
     val staging = StoredIndex.freshStaging(spark, dir)
     build(corpus, staging, textCol, idCol, version)
-    // single-writer protocol (the family's standing assumption): the
-    // overlay stages after the staging meta marker; a crash anywhere
-    // before the swap leaves the LIVE index — old overlay included —
-    // fully serving, and the orphaned staging dir is re-created
-    // fresh by the next retrain
-    if (hasTenants(spark, dir)) {
-      val surviving = filterTenantDels(spark, dir,
-          StoredIndex.filterTombstones(
-            StoredIndex.readDeleteIds(spark, dir),
-            spark.read.parquet(s"$dir/tenants"), "id"))
-        .join(spark.read.parquet(s"$staging/doclens").select("id"),
-          Seq("id"), "left_semi")
-      clusterTenants(surviving)
-        .write.mode("overwrite").parquet(s"$staging/tenants")
-      tenantGaugesOf(spark.read.parquet(s"$staging/tenants")
-          .join(spark.read.parquet(s"$staging/doclens"), Seq("id")))
-        .write.mode("overwrite").parquet(s"$staging/tstats")
-    }
+    TenantOverlay.carry(spark, dir, staging,
+      spark.read.parquet(s"$staging/doclens").select("id"),
+      Some(TenantGauge))
     StoredIndex.swapStaged(spark, dir,
-      Seq("postings", "positions", "doclens", "stats") ++ TenantAssets)
+      Seq("postings", "positions", "doclens", "stats") ++
+        TenantOverlay.assets(Some(TenantGauge)))
   }
 
   /** The tombstone-filtered postings slice of a term set — what
@@ -331,30 +310,6 @@ object KeywordIndex {
     val r = ids.agg(min(col("id")), max(col("id"))).head
     if (r.isNullAt(0)) None // empty allowed set
     else Some(col("id").between(r.getLong(0), r.getLong(1)))
-  }
-
-  /** Driver-known id cap for the allowed-subset literal pushdown —
-    * [[graft.streaming.Takedown.purgeStore]]'s cap: an ACL/tenant
-    * grant names a bounded id set, so below the cap the subset
-    * becomes an `id IN (…)` predicate the parquet reader prunes on
-    * row-group stats ([[compact]] id-sorts doclens, so those stats
-    * are tight) instead of a broadcast semi-join that still SCANS
-    * the full asset. */
-  private val AllowedPushdownCap = 10000
-
-  /** The allowed id set as sorted driver-side literals when it is
-    * small enough to become a pushdown-friendly predicate — None
-    * above the cap (fall back to the broadcast semi-join). Sorted so
-    * the emitted plan (and its bench digest) is deterministic under
-    * any upstream partitioning. The collect is bounded at cap+1
-    * rows — the same driver price [[graft.streaming.Takedown]] pays
-    * for its literal discovery. */
-  private def allowedIdLiterals(ids: DataFrame,
-                                cap: Int): Option[Seq[Long]] = {
-    if (cap <= 0) return None
-    val rows = ids.limit(cap + 1).collect()
-    if (rows.length > cap) None
-    else Some(rows.map(_.getLong(0)).sorted.toIndexedSeq)
   }
 
   private def requireQueryTerms(terms: Seq[String], what: String): Unit = {
@@ -778,12 +733,12 @@ object KeywordIndex {
                         b: Double = 0.75, zeroFill: Boolean = false,
                         scopedStats: Boolean = true,
                         idCol: String = "doc_id",
-                        pushdownCap: Int = AllowedPushdownCap,
+                        pushdownCap: Int = StoredIndex.HeldIdCap,
                         broadcastAllowed: Boolean = true): DataFrame = {
     requireQueryTerms(terms, "KeywordIndex.probeTopKFiltered")
     val ids = allowed.select(col(idCol).cast("long").as("id"))
       .na.drop().distinct()
-    val lits = allowedIdLiterals(ids, pushdownCap)
+    val lits = StoredIndex.idLiterals(ids, pushdownCap)
     // above the cap: the set is un-enumerable but its [min, max]
     // hull still rides both scans beneath the semi-join
     val hull =
@@ -826,17 +781,15 @@ object KeywordIndex {
 
   // ------------------------------------------------ tenant overlay
 
-  /** The tenant overlay's asset pair, registered by
-    * [[registerTenants]] on top of a built index:
-    *  - `tenants/` — (id, tenant) assignment rows, one per tenanted
-    *    live doc, clustered by (tenant, id) so a single tenant's id
-    *    list is a row-group-pruned slice, not an asset scan;
-    *  - `tstats/` — one (tenant, n_docs, sum_dl) gauge row per
-    *    tenant: the per-tenant BM25 statistics as ADDITIVE gauges,
-    *    folded by the same lifecycle algebra as the global `stats/`
-    *    gauge ([[assignTenants]] adds a batch's per-tenant slice,
-    *    [[remove]] subtracts the retracted frame's, [[compact]]
-    *    carries them verbatim, [[merge]]/[[absorb]] sum by tenant).
+  /** The lexical family's registered-tenant overlay is
+    * [[TenantOverlay]] plus ONE family-specific asset, the gauge:
+    *  - `tstats/` — one (tenant, n_docs, sum_dl) row per tenant: the
+    *    per-tenant BM25 statistics as ADDITIVE gauges, maintained by
+    *    incremental insert/evict like the global `stats/` gauge
+    *    ([[registerTenants]] derives it, every overlay mutation folds
+    *    its removed/added pairs in through [[TenantGauge]], [[remove]]
+    *    subtracts the retracted frame's, [[compact]] carries it
+    *    verbatim, [[merge]]/[[absorb]] sum by tenant).
     *
     * This is what makes the scoped-statistics filtered serve
     * scale-honest for REGISTERED tenant sets: [[probeTopKTenant]]
@@ -845,130 +798,44 @@ object KeywordIndex {
     * term is gone, exactly as the global gauge removed it from the
     * unfiltered [[probe]]. Ad-hoc (unregistered) subsets keep the
     * [[probeTopKFiltered]] path and its honest per-probe reduction.
-    *
-    * The overlay is OPTIONAL and coverage may be partial: docs
-    * without an assignment simply belong to no tenant. [[build]]
-    * drops the overlay (an in-place rebuild derives clean state from
-    * its corpus; assignments name ids of the PREVIOUS generation) —
-    * re-register after. [[rebuildStaged]] instead CARRIES the
-    * surviving ids' assignments through the retrain with gauges
-    * re-derived from the fresh doclens, so the tenant serve never
-    * goes dark across scheduled retrains (see its scaladoc). */
-  private val TenantAssets = Seq("tenants", "tstats", "tdels")
+    * A tenant emptied by a mutation keeps its gauge row (registered,
+    * currently empty); a staged rebuild re-derives the carried
+    * tenants' gauges from the fresh doclens (a rebuilt doc's dl may
+    * have changed), so a tenant whose every doc was retrained away
+    * loses its row. */
+  private object TenantGauge extends TenantOverlay.Gauge {
+    val asset = "tstats"
 
-  private def hasTenants(spark: SparkSession, dir: String): Boolean =
-    StoredIndex.fsOf(spark, dir)
-      .exists(new org.apache.hadoop.fs.Path(s"$dir/tenants"))
-
-  private def dropTenantOverlay(spark: SparkSession, dir: String): Unit =
-    TenantAssets.foreach(a => StoredIndex.fsOf(spark, dir)
-      .delete(new org.apache.hadoop.fs.Path(s"$dir/$a"), true))
-
-  private def clusterTenants(df: DataFrame): DataFrame =
-    df.repartitionByRange(col("tenant"), col("id"))
-      .sortWithinPartitions("tenant", "id")
-
-  // --------------------------------------- overlay tombstones (tdels)
-
-  /** The overlay's OWN tombstone list — `tdels/`, (id, tenant) pairs
-    * whose assignment rows have been unassigned or superseded by a
-    * reassignment since the overlay was last compacted. The index
-    * tombstones cannot carry this (an unassigned doc is still LIVE
-    * in the index — only its ACL membership ended), so the overlay
-    * gets the same LSM treatment its parent assets have: O(batch)
-    * mutation appends a tombstone instead of rewriting the
-    * (assigned-docs-sized) `tenants/` asset, every overlay read
-    * anti-joins the (control-plane-sized) list, and [[compact]]
-    * materializes + drops it. Tombstones are PAIRS, not bare ids:
-    * a reassigned doc's new-tenant row must survive the old row's
-    * tombstone, and a re-assignment of a previously-unassigned pair
-    * RESURRECTS the stale physical row (the tombstone is removed)
-    * rather than appending a duplicate. */
-  private def readTenantDels(spark: SparkSession,
-                             dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tdels")
-    if (StoredIndex.fsOf(spark, dir).exists(p))
-      Some(spark.read.parquet(p.toString))
-    else None
-  }
-
-  /** Drop overlay-tombstoned assignment rows from a (id, tenant)
-    * frame — a literal per-tenant NOT-IN predicate when the
-    * control-plane-sized list is driver-held (no broadcast-build
-    * job), the pair anti-join above the caps, a no-op (and an
-    * unchanged plan) when no unassignment is pending. */
-  private def filterTenantDels(spark: SparkSession, dir: String,
-                               rows: DataFrame): DataFrame =
-    StoredIndex.readPairAsset(spark, s"$dir/tdels") match {
-      case None => rows
-      case Some(Left(pairs)) => StoredIndex.antiPairFilter(pairs, rows)
-      case Some(Right(td)) => rows.join(
-        broadcast(td), Seq("id", "tenant"), "left_anti")
+    def derive(spark: SparkSession, dir: String,
+               assigned: DataFrame): () => Unit = {
+      val lens = StoredIndex.filterTombstones(spark, dir,
+        spark.read.parquet(s"$dir/doclens"), "id")
+      val g = tenantGaugesOf(assigned.join(lens, Seq("id")))
+      val rows = g.collect().toSeq
+      () => writeTstats(spark, dir, g.schema, rows)
     }
 
-  /** Persist the overlay tombstone list whole — control-plane-sized,
-    * so the write is a materialize + stage-swap ([[StoredIndex
-    * .stageSwapAsset]]); an empty list deletes the asset so every
-    * read path keeps its no-tombstone plan. Callers sequence this
-    * inside their own crash window (the gauge delete-first/
-    * write-last gate on this family). */
-  private def writeTenantDels(spark: SparkSession, dir: String,
-                              pairs: DataFrame): Unit = {
-    val p = pairs.select("id", "tenant").distinct().localCheckpoint()
-    if (p.isEmpty)
-      StoredIndex.fsOf(spark, dir)
-        .delete(new org.apache.hadoop.fs.Path(s"$dir/tdels"), true)
-    else StoredIndex.stageSwapAsset(spark, dir, "tdels", p)
-  }
-
-  /** The LIVE assignment rows of a batch-sized id frame — the
-    * overlay slice (id-IN pruned under the cap, broadcast semi-join
-    * above), index-tombstone- and overlay-tombstone-filtered: what
-    * an id is CURRENTLY assigned, the read unassign/reassign guard
-    * and subtract on. */
-  private def assignmentSliceFor(spark: SparkSession, dir: String,
-                                 dels: Option[StoredIndex.Tombstones],
-                                 ids: DataFrame): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/tenants")
-    val slice = allowedIdLiterals(ids, AllowedPushdownCap) match {
-      case Some(l) => raw.filter(col("id").isin(l: _*))
-      case None    => raw.join(broadcast(ids), Seq("id"), "left_semi")
+    def fold(spark: SparkSession, dir: String,
+             dels: Option[StoredIndex.Tombstones],
+             removed: Option[DataFrame],
+             added: Option[DataFrame]): () => Unit = {
+      // each removed pair subtracts its doc's (1, dl), each added pair
+      // adds it: one signed join against the batch's doclens slice
+      val signed = (removed.map(_.select(col("id"), col("tenant"),
+          lit(-1L).as("sign"))) ++ added.map(_.select(col("id"),
+          col("tenant"), lit(1L).as("sign")))).reduce(_ unionByName _)
+      val lens = doclensSliceOf(spark, dir, dels,
+        signed.select("id").distinct())
+      val delta = signed.join(lens, Seq("id")).groupBy("tenant")
+        .agg(sum(col("sign")).as("n_docs"),
+          sum(col("sign") * col("dl").cast("long")).as("sum_dl"))
+      val (schema, rows) = foldedTenantGauges(spark, dir, delta)
+      () => writeTstats(spark, dir, schema, rows)
     }
-    filterTenantDels(spark, dir,
-      StoredIndex.filterTombstones(dels, slice, "id"))
-  }
-
-  /** Normalize + validate a tenant assignment frame to (id, tenant):
-    * tenants are strings uniformly (the general ACL key shape), one
-    * row per id, no null tenants. */
-  private def tenantAssignOf(assign: DataFrame, tenantCol: String,
-                             idCol: String, what: String): DataFrame = {
-    // materialized once: the guard aggregate, the live-ids guard,
-    // the clusterTenants range-sample + shuffle, and the gauge
-    // derivation all consume `a` — unchecked, each re-evaluated the
-    // caller's lineage (a registration-scale frame)
-    val a = assign.select(col(idCol).cast("long").as("id"),
-      col(tenantCol).cast("string").as("tenant"))
-      .localCheckpoint()
-    // both guards in ONE aggregate pass (was two jobs: a null filter
-    // and a duplicate-id groupBy): count_distinct ignores null ids,
-    // but the null guard fires first from the same row
-    val g = a.agg(
-      count(when(col("tenant").isNull || col("id").isNull, 1L))
-        .as("n_bad"),
-      count(lit(1L)).as("n"),
-      countDistinct(col("id")).as("n_ids")).head
-    require(g.getLong(0) == 0L,
-      s"$what: assignment rows must carry non-null (id, tenant)")
-    require(g.getLong(2) == g.getLong(1),
-      s"$what: one tenant per id — duplicate assignment ids would " +
-        "double-count the per-tenant gauges")
-    a
   }
 
   /** The per-tenant (tenant, n_docs, sum_dl) gauge slice of an
-    * (id, tenant) ⨝ (id, dl) frame — what registration derives and
-    * the lifecycle folds. */
+    * (id, tenant) ⨝ (id, dl) frame. */
   private def tenantGaugesOf(assigned: DataFrame): DataFrame =
     assigned.groupBy("tenant")
       .agg(count(lit(1L)).as("n_docs"),
@@ -1018,228 +885,50 @@ object KeywordIndex {
                              ids: DataFrame): DataFrame = {
     val raw = spark.read.parquet(s"$dir/doclens")
     StoredIndex.filterTombstones(dels,
-      allowedIdLiterals(ids, AllowedPushdownCap) match {
+      StoredIndex.idLiterals(ids, StoredIndex.HeldIdCap) match {
         case Some(l) => raw.filter(col("id").isin(l: _*))
         case None    => raw.join(broadcast(ids), Seq("id"), "left_semi")
       }, "id")
   }
 
   /** Register (or re-register, replacing the whole overlay) tenant
-    * assignments over the live index. Every assigned id must be
-    * live; coverage may be partial. Pays ONE live-keys-sized pass
+    * assignments over the live index. Pays ONE live-keys-sized pass
     * (assignment ⨝ doclens) to derive the initial gauges — the
-    * amortized registration cost every subsequent [[probeTopKTenant]]
-    * skips. Crash posture: `tstats/` is deleted first and written
-    * last, so a crash mid-registration leaves the gauge missing and
-    * the SCOPED serves failing LOUDLY (re-register), never serving
-    * stale statistics over a new assignment; the overlay itself
-    * lands through a stage-then-rename swap ([[StoredIndex
-    * .stageSwapAsset]]), so the gauge-free reads ([[tenantLiveIds]]
-    * feeding a hybrid serve) can never observe a torn half-written
-    * assignment set either — mid-crash they see the OLD overlay or
-    * NO overlay (loud), fail-closed both ways. */
+    * amortized registration cost every [[probeTopKTenant]] skips. */
   def registerTenants(spark: SparkSession, dir: String,
                       assign: DataFrame, tenantCol: String = "tenant",
-                      idCol: String = "doc_id"): Unit = {
-    val a = tenantAssignOf(assign, tenantCol, idCol,
-      "KeywordIndex.registerTenants")
-    require(a.join(liveIndexedIds(spark, dir), Seq("id"), "left_anti")
-      .limit(1).count() == 0L,
-      "KeywordIndex.registerTenants: assignment names id(s) not " +
-        s"live in the index at $dir")
-    val dels = StoredIndex.readDeleteIds(spark, dir)
-    val lens = StoredIndex.filterTombstones(dels,
-      spark.read.parquet(s"$dir/doclens"), "id")
-    StoredIndex.fsOf(spark, dir)
-      .delete(new org.apache.hadoop.fs.Path(s"$dir/tstats"), true)
-    StoredIndex.stageSwapAsset(spark, dir, "tenants", clusterTenants(a))
-    // a full re-registration replaces the WHOLE overlay — pending
-    // unassignment tombstones name the superseded assignment set
-    StoredIndex.fsOf(spark, dir)
-      .delete(new org.apache.hadoop.fs.Path(s"$dir/tdels"), true)
-    val g = tenantGaugesOf(
-      spark.read.parquet(s"$dir/tenants").join(lens, Seq("id")))
-    writeTstats(spark, dir, g.schema, g.collect().toSeq)
-  }
+                      idCol: String = "doc_id"): Unit =
+    TenantOverlay.register(spark, dir, assign, tenantCol, idCol,
+      "KeywordIndex.registerTenants", liveIndexedIds(spark, dir),
+      Some(TenantGauge))
 
   /** Extend the overlay with assignments for newly-appended (or
-    * previously untenanted) live docs — O(batch) like [[append]]:
-    * the batch's dl slice reads id-IN-pruned doclens rows, the gauge
-    * fold re-aggregates the tiny `tstats/` asset, the assignment
-    * rows append as an unclustered shard ([[compact]] restores the
-    * clustering). The already-assigned guard is an exact check over
-    * the overlay keys — control-plane frequency, not a probe.
-    *
-    * Crash posture — [[registerTenants]]' loud-failure ordering, not
-    * the meta marker (the overlay is not a meta-guarded asset): the
-    * folded gauge is computed and MATERIALIZED first, `tstats/` is
-    * deleted BEFORE the assignment shard lands, and the gauge is
-    * written LAST — so a crash anywhere between leaves the gauge
-    * absent and the next [[probeTopKTenant]] failing loudly
-    * (re-register), never serving silently under-counted scoped
-    * statistics over the half-applied assignment. */
+    * previously untenanted) live docs — O(batch) like [[append]]: the
+    * batch's dl slice reads id-IN-pruned doclens rows, the gauge fold
+    * re-aggregates the tiny `tstats/` asset. */
   def assignTenants(spark: SparkSession, dir: String,
                     assign: DataFrame, tenantCol: String = "tenant",
-                    idCol: String = "doc_id"): Unit = {
-    require(hasTenants(spark, dir),
-      s"KeywordIndex.assignTenants: no tenant overlay at $dir — " +
-        "registerTenants first")
-    val a = tenantAssignOf(assign, tenantCol, idCol,
-      "KeywordIndex.assignTenants")
-    require(a.join(liveIndexedIds(spark, dir), Seq("id"), "left_anti")
-      .limit(1).count() == 0L,
-      "KeywordIndex.assignTenants: assignment names id(s) not live " +
-        s"in the index at $dir")
-    val dels = StoredIndex.readDeleteIds(spark, dir)
-    val already = assignmentSliceFor(spark, dir, dels, a.select("id"))
-      .limit(1).count()
-    require(already == 0L,
-      "KeywordIndex.assignTenants: id(s) already assigned — " +
-        "reassignTenants moves them; unassignTenants ends them; " +
-        "re-register to replace the whole overlay")
-    val delta = tenantGaugesOf(
-      a.join(doclensSliceOf(spark, dir, dels, a.select("id")),
-        Seq("id")))
-    // fold against the PRE-append gauge, materialized; then the
-    // delete-first/write-last window (see the scaladoc's crash
-    // posture) around the assignment append
-    val (fSchema, fRows) = foldedTenantGauges(spark, dir, delta)
-    // resurrect-vs-append split: a pair that was previously
-    // unassigned still has its (tombstoned) physical row — dropping
-    // the tombstone brings that row back; only genuinely-new pairs
-    // append (appending a resurrected pair too would leave the
-    // overlay carrying the row TWICE)
-    val td = readTenantDels(spark, dir)
-    val newRows = td.fold(a)(t =>
-        a.join(broadcast(t.select("id", "tenant")),
-          Seq("id", "tenant"), "left_anti"))
-      .localCheckpoint()
-    StoredIndex.fsOf(spark, dir)
-      .delete(new org.apache.hadoop.fs.Path(s"$dir/tstats"), true)
-    td.foreach(t => writeTenantDels(spark, dir,
-      t.join(broadcast(a.select("id", "tenant")),
-        Seq("id", "tenant"), "left_anti")))
-    if (!newRows.isEmpty)
-      newRows.select("id", "tenant")
-        .write.mode("append").parquet(s"$dir/tenants")
-    writeTstats(spark, dir, fSchema, fRows)
-  }
+                    idCol: String = "doc_id"): Unit =
+    TenantOverlay.assign(spark, dir, assign, tenantCol, idCol,
+      "KeywordIndex.assignTenants", liveIndexedIds(spark, dir),
+      Some(TenantGauge))
 
-  /** End tenant membership for currently-assigned docs — the other
-    * half of the ACL move [[assignTenants]] cannot do, O(batch)
-    * where a full [[registerTenants]] re-registration pays a
-    * live-keys pass and a serving gap: the batch's live assignment
-    * rows become overlay tombstones (`tdels/` — the `tenants/`
-    * asset is never rewritten; [[compact]] materializes them later)
-    * and their per-tenant (n_docs, sum_dl) mass subtracts from the
-    * gauge through [[foldTenantRemoval]]'s algebra, with dl read
-    * from the id-IN-pruned doclens slice. The docs stay live in the
-    * index — only their ACL membership ends (contrast [[remove]]).
-    * A tenant emptied by the unassignment keeps its gauge row
-    * (registered, currently empty). Every id must be currently
-    * assigned — unassigning an unassigned id is a caller bug and
-    * fails loudly.
-    *
-    * Crash posture — the family's loud-failure ordering: the folded
-    * gauge is MATERIALIZED first, `tstats/` is deleted, the
-    * tombstone list swaps in, the gauge writes LAST — a crash
-    * anywhere between leaves the gauge absent and every scoped serve
-    * failing loudly (re-register to heal), never serving
-    * over-counted statistics over a half-applied unassignment. */
+  /** End tenant membership for currently-assigned docs — O(batch):
+    * their mass subtracts from the gauge; the docs stay live in the
+    * index (contrast [[remove]]). */
   def unassignTenants(spark: SparkSession, dir: String,
-                      ids: DataFrame, idCol: String = "doc_id"): Unit = {
-    require(hasTenants(spark, dir),
-      s"KeywordIndex.unassignTenants: no tenant overlay at $dir — " +
-        "registerTenants first")
-    val want = idsOf(ids, idCol).distinct().localCheckpoint()
-    require(!want.isEmpty,
-      "KeywordIndex.unassignTenants: no ids to unassign")
-    val dels = StoredIndex.readDeleteIds(spark, dir)
-    val cur = assignmentSliceFor(spark, dir, dels, want)
-      .localCheckpoint()
-    require(want.join(cur, Seq("id"), "left_anti")
-      .limit(1).count() == 0L,
-      "KeywordIndex.unassignTenants: id(s) not currently assigned — " +
-        "nothing to unassign (an id must hold a live assignment row)")
-    val delta = tenantGaugesOf(
-        cur.join(doclensSliceOf(spark, dir, dels, want), Seq("id")))
-      .select(col("tenant"), (-col("n_docs")).as("n_docs"),
-        (-col("sum_dl")).as("sum_dl"))
-    val (fSchema, fRows) = foldedTenantGauges(spark, dir, delta)
-    val newDels = readTenantDels(spark, dir)
-      .fold(cur.select("id", "tenant"))(
-        _.select("id", "tenant").unionByName(cur.select("id", "tenant")))
-    StoredIndex.fsOf(spark, dir)
-      .delete(new org.apache.hadoop.fs.Path(s"$dir/tstats"), true)
-    writeTenantDels(spark, dir, newDels)
-    writeTstats(spark, dir, fSchema, fRows)
-  }
+                      ids: DataFrame, idCol: String = "doc_id"): Unit =
+    TenantOverlay.unassign(spark, dir, ids, idCol,
+      "KeywordIndex.unassignTenants", Some(TenantGauge))
 
-  /** Move currently-assigned docs to a different tenant — the
-    * single most common ACL operation, as ONE O(batch) fold instead
-    * of the full-overlay re-registration it previously required:
-    * subtract each doc's (1, dl) from its CURRENT tenant's gauge
-    * row, add it to the target's, tombstone the old assignment rows
-    * and land the new ones — all inside [[assignTenants]]' existing
-    * delete-first/write-last crash window, so a crash anywhere
-    * leaves the gauge absent and the scoped serves loud, never a
-    * doc counted in two tenants (or neither) silently. Guards are
-    * loud: every id must be currently assigned ([[assignTenants]]
-    * covers new docs), and a row naming the doc's CURRENT tenant is
-    * refused (a no-op "move" hides a caller bug). Pairs returning
-    * to a previously-held tenant RESURRECT their tombstoned row
-    * rather than appending a duplicate. */
+  /** Move currently-assigned docs to a different tenant — ONE O(batch)
+    * fold: each doc's (1, dl) leaves its current tenant's gauge row
+    * and joins the target's. */
   def reassignTenants(spark: SparkSession, dir: String,
                       assign: DataFrame, tenantCol: String = "tenant",
-                      idCol: String = "doc_id"): Unit = {
-    require(hasTenants(spark, dir),
-      s"KeywordIndex.reassignTenants: no tenant overlay at $dir — " +
-        "registerTenants first")
-    val a = tenantAssignOf(assign, tenantCol, idCol,
-      "KeywordIndex.reassignTenants")
-    val dels = StoredIndex.readDeleteIds(spark, dir)
-    val cur = assignmentSliceFor(spark, dir, dels, a.select("id"))
-      .localCheckpoint()
-    // both guards in ONE pass over a ⟕ cur (cur is id-unique, so
-    // no-match ≡ the left_anti verdict and tenant-equal ≡ the
-    // (id, tenant) left_semi verdict — was two jobs)
-    val chk = a.join(cur.withColumnRenamed("tenant", "__cur"),
-        Seq("id"), "left")
-      .agg(count(when(col("__cur").isNull, 1L)).as("n_unassigned"),
-        count(when(col("tenant") === col("__cur"), 1L)).as("n_noop"))
-      .head
-    require(chk.getLong(0) == 0L,
-      "KeywordIndex.reassignTenants: id(s) not currently assigned — " +
-        "assignTenants adds NEW assignments; reassign only moves")
-    require(chk.getLong(1) == 0L,
-      "KeywordIndex.reassignTenants: row(s) name the id's CURRENT " +
-        "tenant — a no-op move; drop those rows")
-    val lens = doclensSliceOf(spark, dir, dels, a.select("id"))
-      .localCheckpoint()
-    val delta = tenantGaugesOf(cur.join(lens, Seq("id")))
-      .select(col("tenant"), (-col("n_docs")).as("n_docs"),
-        (-col("sum_dl")).as("sum_dl"))
-      .unionByName(tenantGaugesOf(a.join(lens, Seq("id"))))
-    val (fSchema, fRows) = foldedTenantGauges(spark, dir, delta)
-    val td = readTenantDels(spark, dir)
-    // tombstone the old pairs; resurrect returning pairs; append
-    // only the genuinely-new ones (see assignTenants' split)
-    val newRows = td.fold(a)(t =>
-        a.join(broadcast(t.select("id", "tenant")),
-          Seq("id", "tenant"), "left_anti"))
-      .localCheckpoint()
-    val newDels = td.fold(cur.select("id", "tenant"))(
-        _.select("id", "tenant").unionByName(cur.select("id", "tenant")))
-      .join(broadcast(a.select("id", "tenant")),
-        Seq("id", "tenant"), "left_anti")
-    StoredIndex.fsOf(spark, dir)
-      .delete(new org.apache.hadoop.fs.Path(s"$dir/tstats"), true)
-    writeTenantDels(spark, dir, newDels)
-    if (!newRows.isEmpty)
-      newRows.select("id", "tenant")
-        .write.mode("append").parquet(s"$dir/tenants")
-    writeTstats(spark, dir, fSchema, fRows)
-  }
+                      idCol: String = "doc_id"): Unit =
+    TenantOverlay.reassign(spark, dir, assign, tenantCol, idCol,
+      "KeywordIndex.reassignTenants", Some(TenantGauge))
 
   /** Subtract a retraction's per-tenant mass from the gauge asset —
     * runs inside [[remove]]'s commit window when the overlay exists.
@@ -1255,16 +944,15 @@ object KeywordIndex {
                                 removed: DataFrame,
                                 rIds: StoredIndex.Tombstones,
                                 textCol: String, idCol: String): Unit = {
-    if (!hasTenants(spark, dir)) return
-    val tRaw = spark.read.parquet(s"$dir/tenants")
+    if (!TenantOverlay.has(spark, dir)) return
     // no INDEX-tombstone filter: remove() guards its ids are LIVE,
     // and a tombstoned id cannot re-enter the index before a compact
     // drops its assignment row — so the id slice is unambiguous. The
     // OVERLAY tombstones must filter though: an unassigned doc's
     // mass was already subtracted at unassign time, and a reassigned
     // doc's old row would subtract from the WRONG tenant.
-    val tHit = filterTenantDels(spark, dir,
-      StoredIndex.semiIdFilter(rIds, tRaw, "id"))
+    val tHit = TenantOverlay.live(spark, dir, None,
+      StoredIndex.semiIdFilter(rIds, _, "id"))
     val delta = tenantGaugesOf(
         removed.select(col(idCol).cast("long").as("id"),
             size(TextAnalysis.tokens(col(textCol))).cast("long").as("dl"))
@@ -1274,27 +962,19 @@ object KeywordIndex {
     foldTenantGauges(spark, dir, delta)
   }
 
-  /** The live id set of one registered tenant — a (tenant, id)-
-    * clustered overlay slice (`tenant = …` prunes row groups),
-    * tombstone-filtered. The candidate restriction and zero-fill
-    * tail of [[probeTopKTenant]], and the allowed frame a filtered
-    * hybrid serve hands the dense side. */
+  /** The live id set of one registered tenant — the candidate
+    * restriction and zero-fill tail of [[probeTopKTenant]], and the
+    * allowed frame a filtered hybrid serve hands the dense side. */
   def tenantLiveIds(spark: SparkSession, dir: String,
                     tenant: String): DataFrame =
-    filterTenantDels(spark, dir,
-      StoredIndex.filterTombstones(spark, dir,
-        spark.read.parquet(s"$dir/tenants")
-          .filter(col("tenant") === lit(tenant)), "id"))
-      .select("id")
+    TenantOverlay.liveIds(spark, dir, tenant)
 
   /** [[tenantLiveIds]] on the batch dimension: the (qid, id) grant
     * pairs of a batch of (qid, tenant) queries, from ONE overlay
-    * slice over the named tenants (`tenant IN (…)` riding the
-    * (tenant, id)-clustered files, tombstone-filtered) expanded
-    * against the broadcast query-count-sized map. The allowed frame
-    * a batched filtered serve — lexical, dense, or a fused hybrid —
-    * restricts on; qids naming unknown tenants contribute no pairs
-    * (their pages serve empty). Tenants may repeat across qids. */
+    * slice over the named tenants. The allowed frame a batched
+    * filtered serve — lexical, dense, or a fused hybrid — restricts
+    * on; qids naming unknown tenants contribute no pairs (their pages
+    * serve empty). Tenants may repeat across qids. */
   def tenantLivePairs(spark: SparkSession, dir: String,
                       tenants: Seq[(Long, String)]): DataFrame = {
     require(tenants.nonEmpty, "KeywordIndex.tenantLivePairs needs queries")
@@ -1302,17 +982,9 @@ object KeywordIndex {
       "KeywordIndex.tenantLivePairs: qids must be distinct — a " +
         "duplicate qid would expand SEVERAL tenants' id sets as one " +
         "query's grant, serving other tenants' documents on that page")
-    require(hasTenants(spark, dir),
-      s"KeywordIndex.tenantLivePairs: no tenant overlay at $dir — " +
-        "registerTenants first")
-    import spark.implicits._
-    val named = tenants.map(_._2).distinct
-    filterTenantDels(spark, dir,
-        StoredIndex.filterTombstones(StoredIndex.readDeleteIds(spark, dir),
-          spark.read.parquet(s"$dir/tenants")
-            .filter(col("tenant").isin(named: _*)), "id"))
-      .join(broadcast(tenants.toDF("qid", "tenant")), Seq("tenant"))
-      .select("qid", "id")
+    TenantOverlay.requireRegistered(spark, dir,
+      "KeywordIndex.tenantLivePairs")
+    TenantOverlay.livePairs(spark, dir, tenants)
   }
 
   /** Scoped-statistics filtered serve for a REGISTERED tenant — the
@@ -1331,7 +1003,7 @@ object KeywordIndex {
                       terms: Seq[String], topN: Int, tenant: String,
                       k1: Double = 1.2, b: Double = 0.75,
                       zeroFill: Boolean = false,
-                      pushdownCap: Int = AllowedPushdownCap): DataFrame = {
+                      pushdownCap: Int = StoredIndex.HeldIdCap): DataFrame = {
     requireQueryTerms(terms, "KeywordIndex.probeTopKTenant")
     rankedPage(
       tenantScoredCandidates(spark, dir, terms, tenant, k1, b,
@@ -1349,12 +1021,11 @@ object KeywordIndex {
                                      k1: Double, b: Double,
                                      pushdownCap: Int,
                                      what: String): DataFrame = {
-    require(hasTenants(spark, dir),
-      s"KeywordIndex.$what: no tenant overlay at $dir — " +
-        "registerTenants first (ad-hoc subsets: the filtered serves)")
+    TenantOverlay.requireRegistered(spark, dir, s"KeywordIndex.$what",
+      " (ad-hoc subsets: the filtered serves)")
     val dels = StoredIndex.readDeleteIds(spark, dir)
     val tIds = tenantLiveIds(spark, dir, tenant)
-    val candSlice = allowedIdLiterals(tIds, pushdownCap) match {
+    val candSlice = StoredIndex.idLiterals(tIds, pushdownCap) match {
       case some @ Some(_) => sliceOf(spark, dir, dels, terms, some)
       case None => sliceOfPred(spark, dir, dels, terms,
           if (pushdownCap > 0) allowedIdHull(tIds) else None)
@@ -1407,7 +1078,7 @@ object KeywordIndex {
                        terms: Seq[String], minScore: Double,
                        tenant: String, k1: Double = 1.2,
                        b: Double = 0.75,
-                       pushdownCap: Int = AllowedPushdownCap): DataFrame = {
+                       pushdownCap: Int = StoredIndex.HeldIdCap): DataFrame = {
     requireQueryTerms(terms, "KeywordIndex.probeRangeTenant")
     require(minScore > 0.0,
       "KeywordIndex.probeRangeTenant: minScore must be positive — " +
@@ -1492,27 +1163,20 @@ object KeywordIndex {
       s"KeywordIndex.$what: qids must be distinct")
     queries.foreach { case (q, ts, _) =>
       requireQueryTerms(ts, s"KeywordIndex.$what (qid=$q)") }
-    require(hasTenants(spark, dir),
-      s"KeywordIndex.$what: no tenant overlay at $dir — " +
-        "registerTenants first (ad-hoc subsets: the filtered serves)")
+    TenantOverlay.requireRegistered(spark, dir, s"KeywordIndex.$what",
+      " (ad-hoc subsets: the filtered serves)")
     import spark.implicits._
     val dels = StoredIndex.readDeleteIds(spark, dir)
-    val tenantsNamed = queries.map(_._3).distinct
-    val qTen = queries.map { case (q, _, tn) => (q, tn) }
-      .toDF("qid", "tenant")
-    // ONE overlay slice over the named tenants — tenant IN pruned on
-    // the clustered files, tombstone-filtered like every overlay read
-    val tLive = filterTenantDels(spark, dir,
-      StoredIndex.filterTombstones(dels,
-        spark.read.parquet(s"$dir/tenants")
-          .filter(col("tenant").isin(tenantsNamed: _*)), "id"))
-    val pairs = tLive.join(broadcast(qTen), Seq("tenant"))
-      .select("qid", "id")
+    // ONE overlay slice over the named tenants
+    val tLive = TenantOverlay.named(spark, dir, dels,
+      queries.map(_._3).distinct)
+    val pairs = TenantOverlay.pairs(tLive,
+      queries.map { case (q, _, tn) => (q, tn) })
     // the union grant rides the postings scan: literals under the
     // cap, the [min, max] hull above it (per-qid exactness still
     // comes from the pairs semi-join — this only prunes row groups)
     val unionIds = tLive.select("id").distinct()
-    val unionLits = allowedIdLiterals(unionIds, AllowedPushdownCap)
+    val unionLits = StoredIndex.idLiterals(unionIds, StoredIndex.HeldIdCap)
     val slice = unionLits match {
       case Some(l) => sliceOf(spark, dir, dels,
         queries.flatMap(_._2).distinct, Some(l))
@@ -1697,16 +1361,15 @@ object KeywordIndex {
     * serves an empty page. */
   def probePhraseTenant(spark: SparkSession, dir: String,
                         phrase: Seq[String], tenant: String,
-                        pushdownCap: Int = AllowedPushdownCap): DataFrame = {
+                        pushdownCap: Int = StoredIndex.HeldIdCap): DataFrame = {
     requirePhrase(spark, dir, phrase, "KeywordIndex.probePhraseTenant")
-    require(hasTenants(spark, dir),
-      s"KeywordIndex.probePhraseTenant: no tenant overlay at $dir — " +
-        "registerTenants first")
+    TenantOverlay.requireRegistered(spark, dir,
+      "KeywordIndex.probePhraseTenant")
     val dels = StoredIndex.readDeleteIds(spark, dir)
     val tIds = tenantLiveIds(spark, dir, tenant)
     val raw = spark.read.parquet(s"$dir/positions")
       .filter(col("term").isin(phrase.distinct: _*))
-    val granted = allowedIdLiterals(tIds, pushdownCap) match {
+    val granted = StoredIndex.idLiterals(tIds, pushdownCap) match {
       case Some(l) => raw.filter(col("id").isin(l: _*))
       case None =>
         (if (pushdownCap > 0) allowedIdHull(tIds) else None)
@@ -1849,21 +1512,7 @@ object KeywordIndex {
       StoredIndex.compactAsset(spark, dir, "positions",
         df => clusterPositions(
           StoredIndex.filterTombstones(dels, df, "id")))
-    // the tenant overlay compacts BEFORE doclens drops `deletes/`:
-    // its tombstone materialization reads the same list — and the
-    // overlay's OWN tombstones (tdels/) materialize in the same
-    // rewrite, dropped after the swap commits. The gauges are
-    // untouched — remove()/unassign/reassign already folded at
-    // mutation time. Crash between the swap and the tdels delete:
-    // the anti-join re-matches nothing (rows already gone) — the
-    // delete is pure cleanup, idempotent.
-    if (hasTenants(spark, dir)) {
-      StoredIndex.compactAsset(spark, dir, "tenants",
-        df => clusterTenants(filterTenantDels(spark, dir,
-          StoredIndex.filterTombstones(dels, df, "id"))))
-      StoredIndex.fsOf(spark, dir)
-        .delete(new org.apache.hadoop.fs.Path(s"$dir/tdels"), true)
-    }
+    TenantOverlay.compact(spark, dir, dels) // before `deletes/` drops
     StoredIndex.compactAsset(spark, dir, "doclens",
       df => StoredIndex.filterTombstones(dels, df, "id")
         .repartitionByRange(col("id")).sortWithinPartitions("id"),
@@ -1885,14 +1534,7 @@ object KeywordIndex {
     val d = StoredIndex.compactIfAccreted(spark, dir, "doclens",
       maxFiles,
       df => df.repartitionByRange(col("id")).sortWithinPartitions("id"))
-    val t = hasTenants(spark, dir) &&
-      StoredIndex.compactIfAccreted(spark, dir, "tenants", maxFiles,
-        df => clusterTenants(filterTenantDels(spark, dir, df)))
-    // the self-maintenance rewrite materialized any pending overlay
-    // tombstones (the index tombstones stay pending — the doclens
-    // view still needs them), so the tdels list is spent
-    if (t) StoredIndex.fsOf(spark, dir)
-      .delete(new org.apache.hadoop.fs.Path(s"$dir/tdels"), true)
+    val t = TenantOverlay.maybeCompact(spark, dir, maxFiles)
     p || pos || d || t
   }
 
@@ -1945,17 +1587,14 @@ object KeywordIndex {
         s"$outDir/doclens", s"s${i}_")
       StoredIndex.copyAssetFiles(spark, s"$d/deletes",
         s"$outDir/deletes", s"s${i}_")
-      StoredIndex.copyAssetFiles(spark, s"$d/tenants",
-        s"$outDir/tenants", s"s${i}_")
-      StoredIndex.copyAssetFiles(spark, s"$d/tdels",
-        s"$outDir/tdels", s"s${i}_")
+      TenantOverlay.copy(spark, d, outDir, s"s${i}_")
     }
     writeStats(spark, outDir, stats.map(_.getLong(0)).sum,
       stats.map(_.getLong(1)).sum)
     // per-tenant gauges sum by tenant across the shards that carry
     // an overlay (shard ids are disjoint, so the union double-counts
     // nothing); shards without one simply contribute untenanted docs
-    val tGauges = shardDirs.filter(hasTenants(spark, _))
+    val tGauges = shardDirs.filter(TenantOverlay.has(spark, _))
       .map(d => spark.read.parquet(s"$d/tstats"))
     if (tGauges.nonEmpty) {
       val g = tGauges.reduce(_ unionByName _).groupBy("tenant")
@@ -2014,17 +1653,14 @@ object KeywordIndex {
       s"$dir/doclens", "ab_")
     StoredIndex.copyAssetFiles(spark, s"$shardDir/deletes",
       s"$dir/deletes", "ab_")
-    StoredIndex.copyAssetFiles(spark, s"$shardDir/tenants",
-      s"$dir/tenants", "ab_")
-    StoredIndex.copyAssetFiles(spark, s"$shardDir/tdels",
-      s"$dir/tdels", "ab_")
+    TenantOverlay.copy(spark, shardDir, dir, "ab_")
     writeStats(spark, dir,
       dirStats.getLong(0) + shardStats.getLong(0),
       dirStats.getLong(1) + shardStats.getLong(1))
     // fold the shard's per-tenant gauges: sum-by-tenant when both
     // sides carry an overlay, adopt the shard's when only it does
     // (the target's docs are simply untenanted), no-op otherwise
-    if (hasTenants(spark, shardDir)) {
+    if (TenantOverlay.has(spark, shardDir)) {
       val shardGauges = spark.read.parquet(s"$shardDir/tstats")
       if (StoredIndex.fsOf(spark, dir)
           .exists(new org.apache.hadoop.fs.Path(s"$dir/tstats")))
@@ -2087,11 +1723,9 @@ object KeywordIndex {
     // joined to live doclens — a per-tenant fold missed anywhere in
     // the lifecycle surfaces as tgauge_* ≠ tenanted_*_live
     val tenantRows =
-      if (!hasTenants(spark, dir)) Nil
+      if (!TenantOverlay.has(spark, dir)) Nil
       else {
-        val tLive = filterTenantDels(spark, dir,
-          StoredIndex.filterTombstones(deletes,
-            spark.read.parquet(s"$dir/tenants"), "id"))
+        val tLive = TenantOverlay.live(spark, dir, deletes)
         val tg = spark.read.parquet(s"$dir/tstats")
         Seq(
           metricRow("n_tenants", tg, count(lit(1L))),

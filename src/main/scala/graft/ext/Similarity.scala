@@ -92,7 +92,10 @@ object Similarity {
     * corpus growth widens the sample stride (coarser buckets, more
     * rows per probe — linear work), it never adds codebook entries
     * (quadratic work). Below the cap the widened stride equals
-    * `stride`, so small-corpus results are unchanged bit-for-bit. */
+    * `stride`, so small-corpus results are unchanged bit-for-bit.
+    * Measured on key-shifted replicas of the sf0.1 embeddings (40×,
+    * 80×, 160×; the cap binds past 81 920 ids): uncapped, doubling
+    * the corpus quadrupled the assign pass; capped, it doubled. */
   def centroids(corpus: DataFrame, stride: Int,
                 vecCol: String = "embedding",
                 idCol: String = "vec_id",

@@ -572,19 +572,28 @@ object StoredIndex {
                              cap: Int = HeldIdCap): Tombstones = {
     val keys = ids.select(col(idCol).cast("long").as("id"))
       .filter(col("id").isNotNull)
-    // the plain collect runs no job for a local relation; a request
-    // naming its ids more than `cap` times retries on distinct ids
-    def bounded(df: DataFrame) = Some(df.limit(cap + 1).collect())
-      .filter(_.length <= cap).map(_.map(_.getLong(0)))
-    val rows =
-      if (cap <= 0) None else bounded(keys).orElse(bounded(keys.distinct()))
-    rows match {
-      case Some(r) => heldLiterals(ids.sparkSession, r.toSeq)
+    // a request naming its ids more than `cap` times retries on
+    // distinct ids
+    idLiterals(keys, cap).orElse(idLiterals(keys.distinct(), cap)) match {
+      case Some(r) => heldLiterals(ids.sparkSession, r)
       case None =>
         val frame = keys.distinct().localCheckpoint()
         Tombstones(None, () => frame)
     }
   }
+
+  /** A one-column id frame as sorted driver literals when it has at
+    * most `cap` rows — one bounded `limit(cap + 1)` collect (no job
+    * for a local relation); None above the cap or for `cap <= 0`.
+    * Sorted so the emitted plan (and its digest) is deterministic
+    * under any upstream partitioning. The literal-or-frame split of
+    * every id pushdown: held requests, tenant grants, allowed
+    * subsets. */
+  private[graft] def idLiterals(ids: DataFrame,
+                                cap: Int): Option[Seq[Long]] =
+    if (cap <= 0) None
+    else Some(ids.limit(cap + 1).collect()).filter(_.length <= cap)
+      .map(_.map(_.getLong(0)).sorted.toIndexedSeq)
 
   /** Driver ids as a held set: sorted, distinct, with a local
     * relation (column `id`) for the places that need a frame. */
@@ -596,9 +605,10 @@ object StoredIndex {
       StructType(Seq(StructField("id", LongType, nullable = false)))))
   }
 
-  /** Literal-id cap of a held request ([[holdIds]]) — the takedown
-    * pushdown cap: below it the ids become an `IN` predicate the
-    * parquet reader prunes row groups with. */
+  /** The one literal-id cap ([[idLiterals]]) — of a held request
+    * ([[holdIds]]), a tenant grant and an allowed subset: below it
+    * the ids become an `IN` predicate the parquet reader prunes row
+    * groups with instead of a semi-join that still scans the asset. */
   private[graft] val HeldIdCap = 10000
 
   /** Append a held id set to an id asset (ledger or tombstones) as

@@ -98,7 +98,7 @@ object QuarantineStore {
     * of other months but still lists every partition directory under
     * the store root to discover them — a driver-side metadata cost
     * that grows with history length (measured 0.5 → 1.4 s from 80 to
-    * 800 months, QuarantineDepthProbe). A metastore deployment
+    * 800 months of date-shifted order replicas). A metastore deployment
     * serves that listing from the catalog, which is why [[probe]] is
     * the registered posture; THIS variant is the equivalent for bare
     * object-store paths — zero listing, cost pinned to the candidate

@@ -1542,7 +1542,7 @@ object CoreQueries {
     // cost is pinned to the candidate month at ANY history depth
     // (p8's PartitionFilters posture still lists every partition dir
     // to discover them — metadata-cheap under a metastore, O(months)
-    // on bare paths; QuarantineDepthProbe measures the split).
+    // on bare paths; QuarantineStore.probeDirect quotes the split).
     // Identical result by construction (the key contains
     // o_orderdate), so the oracle is p8's NOT EXISTS verbatim.
     Q("p9_quarantine_probe_direct",

@@ -564,6 +564,45 @@ class ExtSpec extends SparkTestBase {
       "failed absorbs must leave the target committed and fresh")
   }
 
+  test("AnnIndex tenant overlay rides merge and absorb: the live " +
+      "grant is the shards' union, pending unassigns stay applied") {
+    import graft.ext.AnnIndex
+    val embs = spark.read.parquet(s"$sf001/embeddings.parquet")
+      .select("vec_id", "embedding").localCheckpoint()
+    def tmp(p: String) = java.nio.file.Files
+      .createTempDirectory(p).toString + "/ix"
+    def ten(df: org.apache.spark.sql.DataFrame) = df.select($"vec_id",
+      concat(lit("t"), ($"vec_id" % 3).cast("string")).as("tenant"))
+    val lower = embs.filter($"vec_id" < 300)
+    val upper = embs.filter($"vec_id" >= 300)
+    val (target, shard, merged) = (tmp("x21T"), tmp("x21S"), tmp("x21M"))
+    AnnIndex.build(lower, target)
+    AnnIndex.shardFrom(target, upper, shard)
+    AnnIndex.registerTenants(spark, target, ten(lower))
+    // the shard: partial coverage plus one pending unassign (t1 ids)
+    AnnIndex.registerTenants(spark, shard,
+      ten(upper.filter($"vec_id" % 2 === 0)))
+    AnnIndex.unassignTenants(spark, shard,
+      upper.filter($"vec_id" % 12 === 4).select("vec_id"))
+    def grant(dir: String) =
+      AnnIndex.tenantLiveIds(spark, dir, "t1").as[Long].collect().toSeq
+    val want = (grant(target) ++ grant(shard)).sorted
+    val q = embs.filter($"vec_id" < 10)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("qid", "rank", "nid", "score").collect().toSet
+    def check(dir: String, tag: String): Unit = {
+      assert(grant(dir).sorted == want,
+        s"$tag: live grant != the union of the shards' live grants")
+      assert(rows(AnnIndex.probeTopKTenant(spark, dir, q, k = 3,
+        tenant = "t1")) == rows(AnnIndex.probeTopKFiltered(spark, dir, q,
+        want.toDF("vec_id"), k = 3)), s"$tag: tenant page != filtered twin")
+    }
+    AnnIndex.merge(spark, Seq(target, shard), merged)
+    check(merged, "merge")
+    AnnIndex.absorb(spark, shard, target)
+    check(target, "absorb")
+  }
+
   test("multi-probe IVF assignment contains single-probe; pairs are a superset") {
     val embs = spark.read.parquet(s"$sf001/embeddings.parquet")
     val cents = Similarity.centroids(embs, stride = 20)

@@ -29,9 +29,8 @@ class LintSpec extends AnyFunSuite {
     * pipeline/setup/verify run reports) plus the logging utility. */
   private val PrintlnAllowed = Set(
     "Bench.scala", "Verify.scala", "Pipeline.scala", "Setup.scala",
-    "StageLog.scala", "ScaleUp.scala", "TimeQuery.scala",
-    "ScalingProbe.scala", "CentroidCapProbe.scala",
-    "QuarantineDepthProbe.scala", "ProfileQuery.scala")
+    "StageLog.scala", "ScaleUp.scala", "ScalingProbe.scala",
+    "ProfileQuery.scala")
 
   /** One walk, one read per file, shared by every rule (the walk
     * stream is closed eagerly — Files.walk holds directory handles). */
