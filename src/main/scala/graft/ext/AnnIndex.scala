@@ -65,9 +65,6 @@ object AnnIndex {
                        idCol: String): DataFrame =
     StoredIndex.identityOf(corpus, col(idCol), col(vecCol))
 
-  private def idsOf(df: DataFrame, idCol: String): DataFrame =
-    df.select(col(idCol).cast("long").as("id"))
-
   /** Build (or rebuild) the full index at `dir`. The expensive side
     * of the split: one assign pass (O(N·K), K capped), one encode
     * pass (O(N·K·d/m), K capped), one cid-keyed shuffle of the
@@ -180,29 +177,13 @@ object AnnIndex {
   }
 
   /** Incremental index maintenance: append a batch of NEW vectors to
-    * a stored index WITHOUT rebuilding. The batch is encoded and
-    * assigned against the STORED centroids/codebook (append cost
-    * O(batch·K), batch-sized shuffle only), its posting rows are
-    * appended, and the meta row is updated in O(batch) — no full
-    * corpus scan, because the content fingerprint is an XOR fold:
-    * fingerprint(old ∪ batch) = fingerprint(old) XOR
-    * fingerprint(batch) by commutativity/associativity of XOR (this
-    * algebra is WHY [[StoredIndex.identityOf]] folds with bit_xor
-    * rather than a hash-of-sorted-hashes). So after any append
-    * chain, a content [[ensure]] over the union corpus still
-    * validates as fresh.
+    * a stored index WITHOUT rebuilding ([[StoredIndex.appendBatch]]:
+    * bloom-gated new-id guard, XOR meta algebra, commit marker). The
+    * batch is encoded and assigned against the STORED
+    * centroids/codebook (append cost O(batch·K), batch-sized shuffle
+    * only) and its posting rows are appended.
     *
-    * Contracts and trade-offs, stated plainly:
-    *  - Batch ids must be NEW. A re-appended id would double its
-    *    posting row AND cancel its fingerprint term (x XOR x = 0),
-    *    silently corrupting both. `checkIds = true` (default)
-    *    enforces this with the bloom-gated guard ([[StoredIndex
-    *    .requireNewIds]]): ids the stored id bloom rules out never
-    *    read the postings at all, and only might-contain ids take
-    *    the exact broadcast existence check (`limit(1)`) — O(batch)
-    *    for the common all-new batch. Callers that already route
-    *    batches through an incremental-dedup gate ([[Dedup]]'s d7
-    *    anti-join) can disable it.
+    * Trade-offs, stated plainly:
     *  - Appended vectors are quantized with the ORIGINAL codebook
     *    and bucketed by the ORIGINAL centroids — standard IVF
     *    serving practice. Drift from a shifting data distribution
@@ -213,44 +194,21 @@ object AnnIndex {
     *  - Each append writes new posting files (cid-sorted within the
     *    batch); a long append chain accumulates small files — the
     *    same pressure [[graft.ext.Layout]]'s compaction planner
-    *    (z4) measures, and [[compact]] is the periodic remedy.
-    *  - Meta is deleted first / written last, the same commit-marker
-    *    invariant as [[build]]: a crash mid-append leaves a
-    *    validation-failing index (extra posting files but no meta),
-    *    and the next ensure() rebuilds — never serves half a batch. */
+    *    (z4) measures, and [[compact]] is the periodic remedy. */
   def append(batch: DataFrame, dir: String, m: Int = 4, dim: Int = 64,
              vecCol: String = "embedding", idCol: String = "vec_id",
-             checkIds: Boolean = true): Unit = {
-    val spark = batch.sparkSession
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val cb = spark.read.parquet(s"$dir/codebook")
-    val storedMeta = StoredIndex.readMeta(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"AnnIndex.append: no committed meta at $dir"))
-    // identity + batch bloom in ONE batch pass (was two) — started
-    // async so it overlaps the id guard's probe (§2.6); joined
-    // before the empty-batch refusal, which must precede the marker
-    val batchMetaF = StoredIndex.async(StoredIndex.identityAndBloomOf(
-      batch, col(idCol), col(vecCol), col(idCol)))
-    if (checkIds)
-      StoredIndex.requireNewIds(spark, dir, idsOf(batch, idCol),
-        spark.read.parquet(s"$dir/postings").select(col("nid").as("id")),
-        "AnnIndex.append")
-    val batchMeta = batchMetaF()
-    // an empty batch has NULL max_id/fingerprint aggregates — and
-    // nothing to do; refuse before the commit marker is touched
-    require(batchMeta.getLong(0) > 0L,
-      s"append batch is empty — nothing to index at $dir")
-    StoredIndex.invalidate(spark, dir) // commit marker (see build)
-    // codes + assignment in ONE scan (was two scans + an nid join
-    // shuffle — Similarity.pqEncodeAssign)
-    Similarity.pqEncodeAssign(batch, cents, cb, m, dim, vecCol, idCol)
-      .repartition(col("cid")).sortWithinPartitions("cid")
-      .write.mode("append").parquet(s"$dir/postings")
-    StoredIndex.mergeIdBloomBytes(spark, dir,
-      batchMeta.getAs[Array[Byte]]("bf"))
-    StoredIndex.writeMergedMeta(spark, dir, storedMeta, batchMeta)
-  }
+             checkIds: Boolean = true): Unit =
+    StoredIndex.appendBatch(Family, batch, dir, col(idCol), col(vecCol),
+        idCol, checkIds) {
+      val spark = batch.sparkSession
+      val cents = spark.read.parquet(s"$dir/centroids")
+      val cb = spark.read.parquet(s"$dir/codebook")
+      // codes + assignment in ONE scan (Similarity.pqEncodeAssign)
+      () => Similarity.pqEncodeAssign(batch, cents, cb, m, dim, vecCol,
+          idCol)
+        .repartition(col("cid")).sortWithinPartitions("cid")
+        .write.mode("append").parquet(s"$dir/postings")
+    }
 
   /** Encode a corpus slice into a NEW shard index that shares a
     * trainer index's quantization assets — the distributed-build
@@ -326,144 +284,54 @@ object AnnIndex {
         lit(0L), col("cb"))))
   }
 
-  /** Merge shard indexes that share quantization assets into one —
-    * the O(assets) tail of the [[shardFrom]] distributed build:
-    * posting FILES copy (no decode, no shuffle — cid row-group
-    * locality within each copied file is preserved; run [[compact]]
-    * after merging many small shards to restore cross-file cid
-    * clustering), metas fold by the append algebra (sum/max/XOR),
-    * id blooms union driver-side, pending tombstones union, and the
-    * shared assets copy once from the first shard. The merged index
-    * is probe-identical to [[build]]-then-[[append]] over the same
-    * slices (the x15 row pins it against the x10 oracle), and its
-    * meta fingerprint equals that chain's, so a content [[ensure]]
-    * over the union corpus validates without rebuilding.
-    *
-    * Guards: every shard's centroid/codebook fingerprints must
-    * MATCH (the shared-assets contract [[shardFrom]] establishes),
-    * and shards must not share raw posting ids — raw, not live,
-    * for [[DedupIndex.merge]]'s tombstone reason. */
+  /** This family's share of the stored-index commit protocol: raw
+    * ids are the posting nids, the copied asset is `postings/`. Every
+    * input's centroid/codebook fingerprints must MATCH (the
+    * shared-assets contract [[shardFrom]] establishes — postings
+    * encoded by a different codebook would score against the wrong
+    * reconstruction table, silently), and a merge's fresh dir takes
+    * those shared assets once, from the first shard. */
+  private val Family = StoredIndex.Family("AnnIndex",
+    (spark, dir) =>
+      spark.read.parquet(s"$dir/postings").select(col("nid").as("id")),
+    Seq("postings"),
+    preCheck = (spark, dirs, what) => {
+      val fps = dirs.map(assetFingerprint(spark, _))
+      require(fps.distinct.size == 1,
+        s"$what: inputs were encoded against DIFFERENT quantization " +
+          "assets — only shards built by shardFrom off one trainer (or " +
+          "one build+append chain) merge or absorb; fingerprints: " +
+          dirs.zip(fps).mkString(", "))
+    },
+    fold = (spark, out, inputs) => () =>
+      // an absorb target (the first input) holds them already
+      if (inputs.head != out) Seq("centroids", "codebook").foreach(a =>
+        StoredIndex.copyAssetFiles(spark, s"${inputs.head}/$a",
+          s"$out/$a", "t_")))
+
+  /** Merge shard indexes that share quantization assets into one
+    * ([[StoredIndex.mergeShards]]) — the O(assets) tail of the
+    * [[shardFrom]] distributed build: posting FILES copy (cid
+    * row-group locality within each copied file is preserved; run
+    * [[compact]] after merging many small shards to restore
+    * cross-file cid clustering). The merged index is probe-identical
+    * to [[build]]-then-[[append]] over the same slices (the x15 row
+    * pins it against the x10 oracle), and its fingerprint equals
+    * that chain's. */
   def merge(spark: SparkSession, shardDirs: Seq[String],
             outDir: String, checkIds: Boolean = true,
-            version: Option[String] = None): Unit = {
-    require(shardDirs.nonEmpty, "AnnIndex.merge: no shards")
-    StoredIndex.requireDisjointDirs(spark, outDir, shardDirs,
-      "AnnIndex.merge")
-    val metas = shardDirs.map(d =>
-      StoredIndex.readMeta(spark, d).getOrElse(
-        throw new IllegalStateException(
-          s"AnnIndex.merge: shard $d has no committed meta — " +
-            "finish (or rerun) its build before merging")))
-    val fps = shardDirs.map(d => assetFingerprint(spark, d))
-    require(fps.distinct.size == 1,
-      "AnnIndex.merge: shards were encoded against DIFFERENT " +
-        "quantization assets — only shards built by shardFrom off " +
-        "one trainer (or one build+append chain) can merge; " +
-        s"fingerprints: ${shardDirs.zip(fps).mkString(", ")}")
-    if (checkIds && shardDirs.size > 1) {
-      val dup = shardDirs.map(d =>
-          spark.read.parquet(s"$d/postings")
-            .select(col("nid").as("id")).distinct())
-        .reduce(_ unionByName _)
-        .groupBy("id").count().filter(col("count") > 1)
-        .limit(1).count()
-      require(dup == 0L,
-        "AnnIndex.merge: shards share raw posting id(s) — slices " +
-          "must be disjoint (tombstoned ids included)")
-    }
-    // meta first (commit marker), then the wipe: a crash mid-delete
-    // must leave a validation-failing dir, never stale meta over a
-    // half-removed asset tree
-    StoredIndex.invalidate(spark, outDir)
-    StoredIndex.fsOf(spark, outDir)
-      .delete(new org.apache.hadoop.fs.Path(outDir), true)
-    StoredIndex.copyAssetFiles(spark, s"${shardDirs.head}/centroids",
-      s"$outDir/centroids", "t_")
-    StoredIndex.copyAssetFiles(spark, s"${shardDirs.head}/codebook",
-      s"$outDir/codebook", "t_")
-    shardDirs.zipWithIndex.foreach { case (d, i) =>
-      StoredIndex.copyAssetFiles(spark, s"$d/postings",
-        s"$outDir/postings", s"s${i}_")
-      StoredIndex.copyAssetFiles(spark, s"$d/deletes",
-        s"$outDir/deletes", s"s${i}_")
-      TenantOverlay.copy(spark, d, outDir, s"s${i}_")
-    }
-    val blooms = shardDirs.map(d =>
-      StoredIndex.readIdBloomAsset(spark, d))
-    if (blooms.forall(_.isDefined)) // else: a pre-bloom shard — omit
-      StoredIndex.writeBloomBytes(spark, outDir,
-        blooms.flatMap(_.get) match {
-          case Nil => null // every shard provably empty
-          case live => StoredIndex.mergedBloomBytes(live)
-        })
-    StoredIndex.writeFoldedMeta(spark, outDir, metas, version)
-  }
+            version: Option[String] = None): Unit =
+    StoredIndex.mergeShards(spark, Family, shardDirs, outDir, checkIds,
+      version)
 
-  /** Ingest a built shard index INTO a live index in place — the
-    * O(batch) tail of continuous bulk loading ([[merge]] is the
-    * O(total) one-shot): [[shardFrom]] encodes the slice off the
-    * serving path as its own job, then the shard lands here as an
-    * O(shard-files) posting copy + meta fold — the big index's
-    * postings are never read, never rewritten. Equivalent to
-    * [[append]] of the slice but without paying the encode inside
-    * the serving index's commit window.
-    *
-    * The shared-assets contract is VERIFIED, not assumed: the
-    * shard's centroid/codebook fingerprints must equal the
-    * target's — postings encoded by a different codebook would
-    * score against the wrong reconstruction table, silently. Guard,
-    * crash posture, and bloom algebra mirror [[DedupIndex.absorb]]:
-    * bloom-gated raw-id disjointness, commit marker before the
-    * first copy, bloom union (dropped if the shard predates the
-    * bloom asset), version cleared, pending shard tombstones ride
-    * along. The shard dir stays servable; delete it after a
-    * successful absorb. */
+  /** Ingest a built shard index INTO a live index in place
+    * ([[StoredIndex.absorbShard]]): [[shardFrom]] encodes the slice
+    * off the serving path, then the shard lands as an O(shard-files)
+    * posting copy + meta fold — [[append]] of the slice without
+    * paying the encode inside the serving index's commit window. */
   def absorb(spark: SparkSession, shardDir: String, dir: String,
-             checkIds: Boolean = true): Unit = {
-    require(shardDir != dir, "AnnIndex.absorb: shard IS the target")
-    val dirMeta = StoredIndex.readMeta(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"AnnIndex.absorb: target $dir has no committed meta — " +
-          "build it first (or use merge into a fresh dir)"))
-    val shardMeta = StoredIndex.readMeta(spark, shardDir).getOrElse(
-      throw new IllegalStateException(
-        s"AnnIndex.absorb: shard $shardDir has no committed meta — " +
-          "finish (or rerun) its build before absorbing"))
-    require(assetFingerprint(spark, shardDir) ==
-        assetFingerprint(spark, dir),
-      s"AnnIndex.absorb: shard $shardDir was encoded against " +
-        s"DIFFERENT quantization assets than $dir — only shards " +
-        "built by shardFrom off this index (or its trainer) absorb")
-    if (checkIds)
-      StoredIndex.requireNewIds(spark, dir,
-        spark.read.parquet(s"$shardDir/postings")
-          .select(col("nid").as("id")),
-        spark.read.parquet(s"$dir/postings")
-          .select(col("nid").as("id")),
-        "AnnIndex.absorb")
-    val shardBloom = StoredIndex.readIdBloomAsset(spark, shardDir)
-    StoredIndex.invalidate(spark, dir) // commit marker
-    StoredIndex.copyAssetFiles(spark, s"$shardDir/postings",
-      s"$dir/postings", "ab_")
-    StoredIndex.copyAssetFiles(spark, s"$shardDir/deletes",
-      s"$dir/deletes", "ab_")
-    TenantOverlay.copy(spark, shardDir, dir, "ab_")
-    (StoredIndex.readIdBloomAsset(spark, dir), shardBloom) match {
-      case (None, _) => () // pre-bloom target stays pre-bloom
-      case (Some(_), None) => // pre-bloom shard: drop the asset
-        StoredIndex.fsOf(spark, dir)
-          .delete(new org.apache.hadoop.fs.Path(s"$dir/idbloom"), true)
-      case (Some(a), Some(b)) =>
-        StoredIndex.writeBloomBytes(spark, dir,
-          (a.toList ++ b.toList) match {
-            case Nil => null // both provably empty
-            case one :: Nil => one
-            case both => StoredIndex.mergedBloomBytes(both)
-          })
-    }
-    StoredIndex.writeFoldedMeta(spark, dir, Seq(dirMeta, shardMeta),
-      version = None)
-  }
+             checkIds: Boolean = true): Unit =
+    StoredIndex.absorbShard(spark, Family, shardDir, dir, checkIds)
 
   /** Postings with tombstoned rows filtered out — what every probe
     * searches. The tombstone side is retraction-sized (broadcast). */

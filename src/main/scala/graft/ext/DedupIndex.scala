@@ -63,9 +63,6 @@ object DedupIndex {
                        idCol: String): DataFrame =
     StoredIndex.identityOf(corpus, col(idCol).cast("long"), col(textCol))
 
-  private def idsOf(df: DataFrame, idCol: String): DataFrame =
-    df.select(col(idCol).cast("long").as("id"))
-
   /** One shard of partial bucket rows: (band, bhash, ids sorted
     * within the shard). Never capped — see the object scaladoc. */
   private def shardOf(df: DataFrame, textCol: String,
@@ -170,184 +167,52 @@ object DedupIndex {
       textCol, idCol, broadcastVerify)
   }
 
-  /** Append a batch of NEW documents — O(batch) end-to-end: one
-    * shard of partial bucket rows appends, the meta fingerprint
-    * updates by XOR, and the id bloom merges driver-side; the corpus
-    * is never touched. Batch ids must be new ([[AnnIndex.append]]'s
-    * contract, same reasoning: a re-appended id doubles its bucket
-    * entries AND cancels its fingerprint term); the default
-    * `checkIds` guard is bloom-gated ([[StoredIndex.requireNewIds]])
-    * — ids the stored bloom rules out never read the shard id lists
-    * at all, so an all-new batch pays only a batch-sized filter, and
-    * only might-contain ids (true overlaps + bloom FPP) take the
-    * exact broadcast check. Callers whose batches already passed the
-    * d7 incremental-dedup anti-join can disable it. */
+  /** Append a batch of NEW documents — [[StoredIndex.appendBatch]]:
+    * one shard of partial bucket rows appends, the meta fingerprint
+    * updates by XOR, the id bloom merges driver-side; the corpus is
+    * never touched. The `checkIds` guard reads the shard id lists
+    * only for ids the stored bloom cannot rule out. */
   def append(batch: DataFrame, dir: String,
              textCol: String = "text", idCol: String = "doc_id",
-             checkIds: Boolean = true): Unit = {
-    val spark = batch.sparkSession
-    // identity + batch bloom in ONE batch pass (was two), started
-    // async so it overlaps the id guard's probe (§2.6); joined
-    // before the empty-batch refusal, which must precede the marker
-    val bidF = StoredIndex.async(StoredIndex.identityAndBloomOf(batch,
-      col(idCol).cast("long"), col(textCol), col(idCol)))
-    if (checkIds)
-      StoredIndex.requireNewIds(spark, dir, idsOf(batch, idCol),
-        spark.read.parquet(s"$dir/buckets")
-          .select(explode(col("ids")).as("id")),
-        "DedupIndex.append")
-    val oldMeta = StoredIndex.readMeta(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"DedupIndex.append: no committed meta at $dir"))
-    val bid = bidF()
-    // guard BEFORE the commit marker: an empty batch (or ids that
-    // null the long cast) must not invalidate a good index
-    require(bid.getLong(0) > 0L && !bid.isNullAt(1) && !bid.isNullAt(2),
-      "DedupIndex.append: batch is empty or has non-integral ids")
-    StoredIndex.invalidate(spark, dir) // commit marker
-    shardOf(batch, textCol, idCol)
-      .write.mode("append").parquet(s"$dir/buckets")
-    StoredIndex.mergeIdBloomBytes(spark, dir,
-      bid.getAs[Array[Byte]]("bf"))
-    StoredIndex.writeMergedMeta(spark, dir, oldMeta, bid)
-  }
+             checkIds: Boolean = true): Unit =
+    StoredIndex.appendBatch(Family, batch, dir, col(idCol).cast("long"),
+        col(textCol), idCol, checkIds) { () =>
+      shardOf(batch, textCol, idCol)
+        .write.mode("append").parquet(s"$dir/buckets")
+    }
 
-  /** Merge independently built shard indexes into one — how the
-    * index gets BUILT at 100 TB: slice the corpus (by id range,
-    * ingest day, source), run [[build]] on every slice as its own
-    * job — the signature/banding pass needs nothing from any other
-    * slice, so the shard builds run fully in parallel with zero
-    * cross-shard shuffle — then merge in O(assets): bucket shard
-    * FILES copy into the merged dir (partial rows per (band, bhash)
-    * are exactly the shape [[probe]] regroups and [[compact]]
-    * clusters anyway — no decode, no shuffle, no parquet rewrite),
-    * metas fold by the append algebra (sum/max/XOR), id blooms
-    * union driver-side, pending tombstones union by file copy. The
-    * merged index is probe-identical to a one-shot [[build]] over
-    * the union corpus (the d18 row pins it), and its meta
-    * fingerprint EQUALS the one-shot fingerprint, so a content
-    * [[ensure]] over the union validates without rebuilding.
-    *
-    * Shards must not share RAW bucket ids — raw, not live: a
-    * tombstoned id in one shard would otherwise filter the same id
-    * LIVE in another through the unioned deletes asset. The default
-    * guard pays one keys-only distinct-count pass over the shard id
-    * lists (merge is a rare build-time op; slices disjoint by
-    * construction — id-range or hash-sliced — can disable it). If
-    * ANY shard predates the id-bloom asset, the merged index omits
-    * the bloom (prior ids unknown — the no-false-negatives
-    * contract; guards fall back to exact checks). */
+  /** This family's share of the stored-index commit protocol: raw ids
+    * are the exploded bucket id lists, the copied asset is
+    * `buckets/`. */
+  private val Family = StoredIndex.Family("DedupIndex",
+    (spark, dir) => spark.read.parquet(s"$dir/buckets")
+      .select(explode(col("ids")).as("id")),
+    Seq("buckets"))
+
+  /** Merge independently built shard indexes into one
+    * ([[StoredIndex.mergeShards]]): the signature/banding pass needs
+    * nothing from any other slice, so shard [[build]]s run fully in
+    * parallel, and bucket shard FILES then copy into the merged dir —
+    * partial rows per (band, bhash) are exactly the shape [[probe]]
+    * regroups and [[compact]] clusters anyway. The merged index is
+    * probe-identical to a one-shot [[build]] over the union corpus
+    * (the d18 row pins it), and its fingerprint EQUALS the one-shot
+    * fingerprint. */
   def merge(spark: SparkSession, shardDirs: Seq[String],
             outDir: String, checkIds: Boolean = true,
-            version: Option[String] = None): Unit = {
-    require(shardDirs.nonEmpty, "DedupIndex.merge: no shards")
-    StoredIndex.requireDisjointDirs(spark, outDir, shardDirs,
-      "DedupIndex.merge")
-    val metas = shardDirs.map(d =>
-      StoredIndex.readMeta(spark, d).getOrElse(
-        throw new IllegalStateException(
-          s"DedupIndex.merge: shard $d has no committed meta — " +
-            "finish (or rerun) its build before merging")))
-    if (checkIds && shardDirs.size > 1) {
-      val dup = shardDirs.map(d =>
-          spark.read.parquet(s"$d/buckets")
-            .select(explode(col("ids")).as("id")).distinct())
-        .reduce(_ unionByName _)
-        .groupBy("id").count().filter(col("count") > 1)
-        .limit(1).count()
-      require(dup == 0L,
-        "DedupIndex.merge: shards share raw id(s) — slices must be " +
-          "disjoint (tombstoned ids included: a tombstone in one " +
-          "shard would filter the same id live in another)")
-    }
-    // meta first (commit marker), then the wipe: a crash mid-delete
-    // must leave a validation-failing dir, never stale meta over a
-    // half-removed asset tree
-    StoredIndex.invalidate(spark, outDir)
-    StoredIndex.fsOf(spark, outDir)
-      .delete(new org.apache.hadoop.fs.Path(outDir), true)
-    shardDirs.zipWithIndex.foreach { case (d, i) =>
-      StoredIndex.copyAssetFiles(spark, s"$d/buckets",
-        s"$outDir/buckets", s"s${i}_")
-      StoredIndex.copyAssetFiles(spark, s"$d/deletes",
-        s"$outDir/deletes", s"s${i}_")
-    }
-    val blooms = shardDirs.map(d =>
-      StoredIndex.readIdBloomAsset(spark, d))
-    if (blooms.forall(_.isDefined)) // else: a pre-bloom shard — omit
-      StoredIndex.writeBloomBytes(spark, outDir,
-        blooms.flatMap(_.get) match {
-          case Nil => null // every shard provably empty
-          case live => StoredIndex.mergedBloomBytes(live)
-        })
-    StoredIndex.writeFoldedMeta(spark, outDir, metas, version)
-  }
+            version: Option[String] = None): Unit =
+    StoredIndex.mergeShards(spark, Family, shardDirs, outDir, checkIds,
+      version)
 
-  /** Ingest a built shard index INTO a live index in place — the
-    * O(batch) tail of continuous bulk loading, where [[merge]] is
-    * the O(total) one-shot: an hourly slice builds as its own job
-    * (signature/banding pass, the expensive part, runs off the
-    * serving path), then lands in the serving index as an
-    * O(shard-files) copy + meta fold — the big index's bucket files
-    * are never read, never rewritten. Equivalent to [[append]] of
-    * the shard's corpus but without re-deriving signatures, and
-    * equivalent to [[merge]] of the two but without copying the
-    * large side. The shard's pending tombstones ride along.
-    *
-    * Guard, crash posture, and bloom algebra mirror [[append]]:
-    * the raw-id disjointness check is bloom-gated to O(shard) for
-    * the common all-new slice; the commit marker drops before the
-    * first copy, so a crash mid-absorb leaves a validation-failing
-    * index (the next ensure() rebuilds), never a half-union; the
-    * target's bloom unions with the shard's driver-side — unless
-    * the SHARD predates the bloom asset (its ids unknown), in which
-    * case the target's bloom is dropped rather than left claiming
-    * coverage it no longer has (the no-false-negatives contract).
-    * The target's version is cleared: absorbed content invalidates
-    * any caller-pinned corpus version, exactly as [[append]] keeps
-    * only what still holds. The shard dir is left untouched and
-    * servable; delete it after a successful absorb. */
+  /** Ingest a built shard index INTO a live index in place
+    * ([[StoredIndex.absorbShard]]): an hourly slice builds as its own
+    * job (the banding pass runs off the serving path) and lands as an
+    * O(shard-files) copy + meta fold — [[append]] of the shard's
+    * corpus without re-deriving signatures, [[merge]] of the two
+    * without copying the large side. */
   def absorb(spark: SparkSession, shardDir: String, dir: String,
-             checkIds: Boolean = true): Unit = {
-    require(shardDir != dir, "DedupIndex.absorb: shard IS the target")
-    val dirMeta = StoredIndex.readMeta(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"DedupIndex.absorb: target $dir has no committed meta — " +
-          "build it first (or use merge into a fresh dir)"))
-    val shardMeta = StoredIndex.readMeta(spark, shardDir).getOrElse(
-      throw new IllegalStateException(
-        s"DedupIndex.absorb: shard $shardDir has no committed meta — " +
-          "finish (or rerun) its build before absorbing"))
-    if (checkIds)
-      StoredIndex.requireNewIds(spark, dir,
-        spark.read.parquet(s"$shardDir/buckets")
-          .select(explode(col("ids")).as("id")),
-        spark.read.parquet(s"$dir/buckets")
-          .select(explode(col("ids")).as("id")),
-        "DedupIndex.absorb")
-    val shardBloom = StoredIndex.readIdBloomAsset(spark, shardDir)
-    StoredIndex.invalidate(spark, dir) // commit marker
-    StoredIndex.copyAssetFiles(spark, s"$shardDir/buckets",
-      s"$dir/buckets", "ab_")
-    StoredIndex.copyAssetFiles(spark, s"$shardDir/deletes",
-      s"$dir/deletes", "ab_")
-    (StoredIndex.readIdBloomAsset(spark, dir), shardBloom) match {
-      case (None, _) => () // pre-bloom target stays pre-bloom
-      case (Some(_), None) => // pre-bloom shard: target bloom would
-        // now miss the shard's ids — drop the asset entirely
-        StoredIndex.fsOf(spark, dir)
-          .delete(new org.apache.hadoop.fs.Path(s"$dir/idbloom"), true)
-      case (Some(a), Some(b)) =>
-        StoredIndex.writeBloomBytes(spark, dir,
-          (a.toList ++ b.toList) match {
-            case Nil => null // both provably empty
-            case one :: Nil => one
-            case both => StoredIndex.mergedBloomBytes(both)
-          })
-    }
-    StoredIndex.writeFoldedMeta(spark, dir, Seq(dirMeta, shardMeta),
-      version = None)
-  }
+             checkIds: Boolean = true): Unit =
+    StoredIndex.absorbShard(spark, Family, shardDir, dir, checkIds)
 
   /** Live indexed ids: every id in the stored shards minus the
     * tombstones — keys-only, index-sized. Public because takedown
@@ -358,8 +223,7 @@ object DedupIndex {
 
   private def liveIds(spark: SparkSession, dir: String): DataFrame =
     StoredIndex.filterTombstones(spark, dir,
-      spark.read.parquet(s"$dir/buckets")
-        .select(explode(col("ids")).as("id")).distinct(), "id")
+      Family.rawIds(spark, dir).distinct(), "id")
 
   /** Retract documents from the index WITHOUT rewriting the shards —
     * [[AnnIndex.remove]]'s contract verbatim (see there for the LSM

@@ -90,9 +90,6 @@ object KeywordIndex {
                        idCol: String): DataFrame =
     StoredIndex.identityOf(corpus, col(idCol).cast("long"), col(textCol))
 
-  private def idsOf(df: DataFrame, idCol: String): DataFrame =
-    df.select(col(idCol).cast("long").as("id"))
-
   /** (term, id, tf) term frequencies: ONE tokenize pass
     * ([[TextAnalysis.tokens]], the same whitespace split every text
     * operator and oracle uses), then a (term, id)-keyed count. */
@@ -867,16 +864,6 @@ object KeywordIndex {
     org.apache.spark.sql.graftshim.TinyParquetShim.overwriteDir(
       spark, schema, rows, s"$dir/tstats")
 
-  /** Fold a per-tenant delta into the stored gauge asset in place —
-    * the lifecycle callers whose crash window is already guarded by
-    * the meta commit marker ([[remove]]'s beforeMeta hook,
-    * [[absorb]]'s invalidate-first protocol). */
-  private def foldTenantGauges(spark: SparkSession, dir: String,
-                               delta: DataFrame): Unit = {
-    val (schema, rows) = foldedTenantGauges(spark, dir, delta)
-    writeTstats(spark, dir, schema, rows)
-  }
-
   /** The doclens slice of a batch-sized id frame — id IN literals
     * riding the (id-sorted after [[compact]]) files under the cap,
     * broadcast semi-join above it. */
@@ -959,7 +946,9 @@ object KeywordIndex {
           .join(tHit.select("id", "tenant"), Seq("id")))
       .select(col("tenant"), (-col("n_docs")).as("n_docs"),
         (-col("sum_dl")).as("sum_dl"))
-    foldTenantGauges(spark, dir, delta)
+    // in place: remove()'s meta commit marker already guards the window
+    val (schema, rows) = foldedTenantGauges(spark, dir, delta)
+    writeTstats(spark, dir, schema, rows)
   }
 
   /** The live id set of one registered tenant — the candidate
@@ -1379,72 +1368,54 @@ object KeywordIndex {
     phrasePage(phrase, StoredIndex.filterTombstones(dels, granted, "id"))
   }
 
-  /** Append a batch of NEW documents — O(batch) end-to-end: one
-    * tokenize pass over the batch, two shard appends, the additive
-    * stats fold, XOR meta merge, driver-side bloom union; the corpus
-    * and the stored assets are never rewritten. Batch ids must be
-    * new ([[DedupIndex.append]]'s contract and bloom-gated guard —
-    * the id list read on suspicion is `doclens`, one row per doc,
-    * not the postings). */
+  /** Append a batch of NEW documents ([[StoredIndex.appendBatch]]) —
+    * O(batch) end-to-end: one tokenize pass over the batch, the
+    * shard appends and the additive stats fold; the corpus and the
+    * stored assets are never rewritten. The id list the guard reads
+    * on suspicion is `doclens`, one row per doc, not the postings. */
   def append(batch: DataFrame, dir: String,
              textCol: String = "text", idCol: String = "doc_id",
-             checkIds: Boolean = true): Unit = {
-    val spark = batch.sparkSession
-    if (checkIds)
-      StoredIndex.requireNewIds(spark, dir, idsOf(batch, idCol),
-        spark.read.parquet(s"$dir/doclens").select("id"),
-        "KeywordIndex.append")
-    val oldMeta = StoredIndex.readMeta(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"KeywordIndex.append: no committed meta at $dir"))
-    val oldStats = readStatsRow(spark, dir)
-    // identity + batch bloom in ONE batch pass (was two), started
-    // async so it overlaps the tokenize checkpoints (§2.6); joined
-    // before the empty-batch refusal, which must precede the marker
-    val bidF = StoredIndex.async(StoredIndex.identityAndBloomOf(batch,
-      col(idCol).cast("long"), col(textCol), col(idCol)))
-    // batch-sized materialization so the postings/doclens/stats
-    // derivations reuse the one tokenize pass instead of re-running
-    // it; dl rides the aggregate ([[positionsWithDlOf]]), so the
-    // postings projection is row-local — the former second
-    // checkpoint and its id-keyed window shuffle are gone
-    val posShard = positionsWithDlOf(batch, textCol, idCol)
-      .localCheckpoint()
-    val shard = postingsOfWithDl(posShard)
-    val shardLens = doclensOfWithDl(posShard)
-    val delta = statsRowOf(shardLens) // batch Σ — the additive fold
-    val bid = bidF()
-    require(bid.getLong(0) > 0L && !bid.isNullAt(1) && !bid.isNullAt(2),
-      "KeywordIndex.append: batch is empty or has non-integral ids")
-    StoredIndex.invalidate(spark, dir) // commit marker
-    // the three asset appends derive from the checkpointed shards
-    // and are unordered between the markers — overlapped (§2.6)
-    StoredIndex.inParallel(
-      // same pinned order as clusterPostings — every part file in
-      // the asset must agree or the merged read schema goes listing-
-      // order-dependent (see clusterPostings)
-      () => shard.select("term", "id", "tf", "dl")
-        .write.mode("append").parquet(s"$dir/postings"),
-      // a pre-positions index (older layout state) stays positions-
-      // free: appending a partial positions asset would silently
-      // serve phrase pages missing the older docs — fail-closed
-      // instead (probePhrase is loud; rebuild to gain the capability)
-      () => if (hasPositions(spark, dir))
-        posShard.select("term", "id", "positions")
-          .write.mode("append").parquet(s"$dir/positions"),
-      () => shardLens.select("id", "dl")
-        .write.mode("append").parquet(s"$dir/doclens"))
-    writeStats(spark, dir, oldStats.getLong(0) + delta.getLong(0),
-      oldStats.getLong(1) + delta.getLong(1))
-    StoredIndex.mergeIdBloomBytes(spark, dir,
-      bid.getAs[Array[Byte]]("bf"))
-    StoredIndex.writeMergedMeta(spark, dir, oldMeta, bid)
-  }
+             checkIds: Boolean = true): Unit =
+    StoredIndex.appendBatch(Family, batch, dir, col(idCol).cast("long"),
+        col(textCol), idCol, checkIds) {
+      val spark = batch.sparkSession
+      val oldStats = readStatsRow(spark, dir)
+      // batch-sized materialization so the postings/doclens/stats
+      // derivations reuse the one tokenize pass; dl rides the
+      // aggregate ([[positionsWithDlOf]]), so the postings projection
+      // is row-local — no id-keyed window shuffle
+      val posShard = positionsWithDlOf(batch, textCol, idCol)
+        .localCheckpoint()
+      val shardLens = doclensOfWithDl(posShard)
+      val delta = statsRowOf(shardLens) // batch Σ — the additive fold
+      () => {
+        // the three asset appends derive from the checkpointed shard
+        // and are unordered between the markers — overlapped (§2.6)
+        StoredIndex.inParallel(
+          // same pinned order as clusterPostings — every part file in
+          // the asset must agree or the merged read schema goes
+          // listing-order-dependent (see clusterPostings)
+          () => postingsOfWithDl(posShard).select("term", "id", "tf", "dl")
+            .write.mode("append").parquet(s"$dir/postings"),
+          // a pre-positions index (older layout state) stays
+          // positions-free: appending a partial positions asset would
+          // silently serve phrase pages missing the older docs —
+          // fail-closed instead (probePhrase is loud; rebuild to gain
+          // the capability)
+          () => if (hasPositions(spark, dir))
+            posShard.select("term", "id", "positions")
+              .write.mode("append").parquet(s"$dir/positions"),
+          () => shardLens.select("id", "dl")
+            .write.mode("append").parquet(s"$dir/doclens"))
+        writeStats(spark, dir, oldStats.getLong(0) + delta.getLong(0),
+          oldStats.getLong(1) + delta.getLong(1))
+      }
+    }
 
   /** Live indexed ids — doclens (one row per doc) minus tombstones. */
   def liveIndexedIds(spark: SparkSession, dir: String): DataFrame =
-    StoredIndex.filterTombstones(spark, dir,
-      spark.read.parquet(s"$dir/doclens").select("id"), "id")
+    StoredIndex.filterTombstones(spark, dir, Family.rawIds(spark, dir),
+      "id")
 
   /** Retract documents WITHOUT rewriting the assets —
     * [[AnnIndex.remove]]'s contract verbatim (tombstone LSM split,
@@ -1538,152 +1509,52 @@ object KeywordIndex {
     p || pos || d || t
   }
 
-  /** Merge independently built shard indexes into one —
-    * [[DedupIndex.merge]]'s protocol on this family's assets: file
-    * copies for postings/doclens/deletes, summed stats gauges,
-    * driver-side bloom union, folded meta. Shards must not share raw
-    * doc ids; the default guard distinct-counts the (cheap,
-    * one-row-per-doc) doclens ids. `outDir` must be path-disjoint
-    * from every shard (not merely unequal): the merge deletes outDir
-    * recursively, so a nested overlap in either direction would
-    * destroy shard assets mid-merge. */
+  /** This family's share of the stored-index commit protocol: raw
+    * ids are the doclens ids (one row per doc), the copied assets are
+    * `postings/` and `doclens/`, and `positions/` survives a union
+    * only when every input carries it (probePhrase is loud on the
+    * result otherwise; rebuild to regain it). The fold sums the
+    * inputs' `stats/` gauges, and their per-tenant `tstats/` gauges
+    * by tenant over the inputs that carry an overlay (ids are
+    * disjoint, so nothing double-counts); an input without one
+    * contributes untenanted docs, so an absorb whose shard has none
+    * leaves the target's gauges as they are. */
+  private val Family = StoredIndex.Family("KeywordIndex",
+    (spark, dir) => spark.read.parquet(s"$dir/doclens").select("id"),
+    Seq("postings", "doclens"), allOrNone = Seq("positions"),
+    fold = (spark, out, inputs) => {
+      val stats = inputs.map(readStatsRow(spark, _))
+      val tenanted = inputs.filter(TenantOverlay.has(spark, _))
+      val gauges =
+        if (tenanted.forall(_ == out)) None
+        else {
+          val g = tenanted.map(d => spark.read.parquet(s"$d/tstats"))
+            .reduce(_ unionByName _).groupBy("tenant")
+            .agg(sum(col("n_docs")).as("n_docs"),
+              sum(col("sum_dl")).as("sum_dl"))
+          Some((g.schema, g.collect().toSeq))
+        }
+      () => {
+        writeStats(spark, out, stats.map(_.getLong(0)).sum,
+          stats.map(_.getLong(1)).sum)
+        gauges.foreach { case (schema, rows) =>
+          writeTstats(spark, out, schema, rows) }
+      }
+    })
+
+  /** Merge independently built shard indexes into one
+    * ([[StoredIndex.mergeShards]] on this family's assets). */
   def merge(spark: SparkSession, shardDirs: Seq[String],
             outDir: String, checkIds: Boolean = true,
-            version: Option[String] = None): Unit = {
-    require(shardDirs.nonEmpty, "KeywordIndex.merge: no shards")
-    StoredIndex.requireDisjointDirs(spark, outDir, shardDirs,
-      "KeywordIndex.merge")
-    val metas = shardDirs.map(d =>
-      StoredIndex.readMeta(spark, d).getOrElse(
-        throw new IllegalStateException(
-          s"KeywordIndex.merge: shard $d has no committed meta — " +
-            "finish (or rerun) its build before merging")))
-    if (checkIds && shardDirs.size > 1) {
-      val dup = shardDirs.map(d =>
-          spark.read.parquet(s"$d/doclens").select("id"))
-        .reduce(_ unionByName _)
-        .groupBy("id").count().filter(col("count") > 1)
-        .limit(1).count()
-      require(dup == 0L,
-        "KeywordIndex.merge: shards share raw doc id(s) — slices " +
-          "must be disjoint (tombstoned ids included)")
-    }
-    val stats = shardDirs.map(d => readStatsRow(spark, d))
-    StoredIndex.invalidate(spark, outDir)
-    StoredIndex.fsOf(spark, outDir)
-      .delete(new org.apache.hadoop.fs.Path(outDir), true)
-    // positions merge only when EVERY shard carries the asset — a
-    // partial positional index would silently serve phrase pages
-    // missing some shards' docs; fail-closed (the merged index
-    // simply has no positions; probePhrase is loud, rebuild to gain)
-    val allPositions = shardDirs.forall(hasPositions(spark, _))
-    shardDirs.zipWithIndex.foreach { case (d, i) =>
-      StoredIndex.copyAssetFiles(spark, s"$d/postings",
-        s"$outDir/postings", s"s${i}_")
-      if (allPositions)
-        StoredIndex.copyAssetFiles(spark, s"$d/positions",
-          s"$outDir/positions", s"s${i}_")
-      StoredIndex.copyAssetFiles(spark, s"$d/doclens",
-        s"$outDir/doclens", s"s${i}_")
-      StoredIndex.copyAssetFiles(spark, s"$d/deletes",
-        s"$outDir/deletes", s"s${i}_")
-      TenantOverlay.copy(spark, d, outDir, s"s${i}_")
-    }
-    writeStats(spark, outDir, stats.map(_.getLong(0)).sum,
-      stats.map(_.getLong(1)).sum)
-    // per-tenant gauges sum by tenant across the shards that carry
-    // an overlay (shard ids are disjoint, so the union double-counts
-    // nothing); shards without one simply contribute untenanted docs
-    val tGauges = shardDirs.filter(TenantOverlay.has(spark, _))
-      .map(d => spark.read.parquet(s"$d/tstats"))
-    if (tGauges.nonEmpty) {
-      val g = tGauges.reduce(_ unionByName _).groupBy("tenant")
-        .agg(sum(col("n_docs")).as("n_docs"),
-          sum(col("sum_dl")).as("sum_dl"))
-      writeTstats(spark, outDir, g.schema, g.collect().toSeq)
-    }
-    val blooms = shardDirs.map(d =>
-      StoredIndex.readIdBloomAsset(spark, d))
-    if (blooms.forall(_.isDefined)) // else: a pre-bloom shard — omit
-      StoredIndex.writeBloomBytes(spark, outDir,
-        blooms.flatMap(_.get) match {
-          case Nil => null // every shard provably empty
-          case live => StoredIndex.mergedBloomBytes(live)
-        })
-    StoredIndex.writeFoldedMeta(spark, outDir, metas, version)
-  }
+            version: Option[String] = None): Unit =
+    StoredIndex.mergeShards(spark, Family, shardDirs, outDir, checkIds,
+      version)
 
-  /** Ingest a built shard index INTO a live index in place —
-    * [[DedupIndex.absorb]]'s O(shard) bulk-load tail on this
-    * family's assets; guard, crash posture, stats fold and bloom
-    * algebra identical. */
+  /** Ingest a built shard index INTO a live index in place
+    * ([[StoredIndex.absorbShard]] on this family's assets). */
   def absorb(spark: SparkSession, shardDir: String, dir: String,
-             checkIds: Boolean = true): Unit = {
-    StoredIndex.requireDisjointDirs(spark, dir, Seq(shardDir),
-      "KeywordIndex.absorb")
-    val dirMeta = StoredIndex.readMeta(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"KeywordIndex.absorb: target $dir has no committed meta — " +
-          "build it first (or use merge into a fresh dir)"))
-    val shardMeta = StoredIndex.readMeta(spark, shardDir).getOrElse(
-      throw new IllegalStateException(
-        s"KeywordIndex.absorb: shard $shardDir has no committed meta — " +
-          "finish (or rerun) its build before absorbing"))
-    if (checkIds)
-      StoredIndex.requireNewIds(spark, dir,
-        spark.read.parquet(s"$shardDir/doclens").select("id"),
-        spark.read.parquet(s"$dir/doclens").select("id"),
-        "KeywordIndex.absorb")
-    val dirStats = readStatsRow(spark, dir)
-    val shardStats = readStatsRow(spark, shardDir)
-    val shardBloom = StoredIndex.readIdBloomAsset(spark, shardDir)
-    StoredIndex.invalidate(spark, dir) // commit marker
-    StoredIndex.copyAssetFiles(spark, s"$shardDir/postings",
-      s"$dir/postings", "ab_")
-    // positions survive only when BOTH sides carry them (merge's
-    // fail-closed rule): a positions-free shard would leave the
-    // target's phrase pages silently missing its docs — drop the
-    // asset instead (probePhrase is loud; rebuild to regain)
-    if (hasPositions(spark, dir) && hasPositions(spark, shardDir))
-      StoredIndex.copyAssetFiles(spark, s"$shardDir/positions",
-        s"$dir/positions", "ab_")
-    else StoredIndex.fsOf(spark, dir)
-      .delete(new org.apache.hadoop.fs.Path(s"$dir/positions"), true)
-    StoredIndex.copyAssetFiles(spark, s"$shardDir/doclens",
-      s"$dir/doclens", "ab_")
-    StoredIndex.copyAssetFiles(spark, s"$shardDir/deletes",
-      s"$dir/deletes", "ab_")
-    TenantOverlay.copy(spark, shardDir, dir, "ab_")
-    writeStats(spark, dir,
-      dirStats.getLong(0) + shardStats.getLong(0),
-      dirStats.getLong(1) + shardStats.getLong(1))
-    // fold the shard's per-tenant gauges: sum-by-tenant when both
-    // sides carry an overlay, adopt the shard's when only it does
-    // (the target's docs are simply untenanted), no-op otherwise
-    if (TenantOverlay.has(spark, shardDir)) {
-      val shardGauges = spark.read.parquet(s"$shardDir/tstats")
-      if (StoredIndex.fsOf(spark, dir)
-          .exists(new org.apache.hadoop.fs.Path(s"$dir/tstats")))
-        foldTenantGauges(spark, dir, shardGauges)
-      else writeTstats(spark, dir, shardGauges.schema,
-        shardGauges.collect().toSeq)
-    }
-    (StoredIndex.readIdBloomAsset(spark, dir), shardBloom) match {
-      case (None, _) => () // pre-bloom target stays pre-bloom
-      case (Some(_), None) =>
-        StoredIndex.fsOf(spark, dir)
-          .delete(new org.apache.hadoop.fs.Path(s"$dir/idbloom"), true)
-      case (Some(a), Some(b)) =>
-        StoredIndex.writeBloomBytes(spark, dir,
-          (a.toList ++ b.toList) match {
-            case Nil => null
-            case one :: Nil => one
-            case both => StoredIndex.mergedBloomBytes(both)
-          })
-    }
-    StoredIndex.writeFoldedMeta(spark, dir, Seq(dirMeta, shardMeta),
-      version = None)
-  }
+             checkIds: Boolean = true): Unit =
+    StoredIndex.absorbShard(spark, Family, shardDir, dir, checkIds)
 
   /** Operational health report — the families' shared (metric,
     * value) frame over this index's assets (corpus text never read):

@@ -10,12 +10,15 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 
-/** The shared construction style of the stored-index family
-  * ([[AnnIndex]] x9, [[DedupIndex]] d15): path/meta/fingerprint/
-  * commit-marker mechanics live HERE once; the families keep only
-  * their asset builders (IVFADC postings vs LSH bucket shards).
+/** The shared construction style of the stored-index families
+  * ([[AnnIndex]] x9, [[DedupIndex]] d15, [[KeywordIndex]]):
+  * path/meta/fingerprint/commit-marker mechanics and the append,
+  * retract, compact, staged-swap and shard-union protocols live HERE
+  * once; the families keep only their asset builders (IVFADC
+  * postings, LSH bucket shards, BM25 postings) and hand the protocols
+  * a [[Family]] descriptor.
   *
-  * The contract both families share:
+  * The contract the families share:
   *  - `meta/` (n_rows, max_id, fingerprint, version) is written LAST
   *    and deleted FIRST around any mutation — the commit marker. A
   *    crash mid-build/append/compact leaves a validation-failing
@@ -130,6 +133,21 @@ object StoredIndex {
     org.apache.spark.sql.graftshim.TinyParquetShim
       .readRows(spark, s"$dir/meta").flatMap(_.headOption)
 
+  /** [[readMeta]] of an index a mutation needs committed: loud
+    * (IllegalStateException naming `what`) when the marker is
+    * missing — a never-built dir, or a crash inside a mutation. */
+  private[graft] def committedMeta(spark: SparkSession, dir: String,
+                                   what: String): Row =
+    readMeta(spark, dir).getOrElse(throw new IllegalStateException(
+      s"$what: no committed meta at $dir — build it (or finish its " +
+        "build) first"))
+
+  /** Whether `dir` carries a commit marker — a path probe, no read:
+    * the check the streaming ingests branch on (seed refusal, crash
+    * recovery, keyword serving) without naming the marker's path. */
+  def isCommitted(spark: SparkSession, dir: String): Boolean =
+    fsOf(spark, dir).exists(new Path(s"$dir/meta"))
+
   /** Freshness check behind every `ensure`: version posture = one
     * 1-row meta read, zero corpus scans; content posture = the
     * fingerprint scan (`identityRow` is by-name so the version
@@ -150,18 +168,6 @@ object StoredIndex {
           (0 to 2).forall(k => m.get(k) == i.get(k))
       }
     }
-
-  /** Write the commit marker — the LAST step of build. The identity
-    * aggregate still runs as a Spark job (it scans the corpus); only
-    * the 1-row WRITE moves driver-side (TinyParquetShim) — dropping
-    * the per-build write action + commit protocol. */
-  def writeMeta(identityDf: DataFrame, version: Option[String],
-                dir: String): Unit = {
-    val df = identityDf
-      .withColumn("version", lit(version.orNull).cast("string"))
-    org.apache.spark.sql.graftshim.TinyParquetShim.overwriteDir(
-      df.sparkSession, df.schema, df.collect().toSeq, s"$dir/meta")
-  }
 
   /** Driver-side write of an all-literal meta row — the append/
     * retract/fold markers are computed on the driver already, so no
@@ -185,8 +191,8 @@ object StoredIndex {
   /** Write the merged commit marker — the LAST step of append. The
     * XOR/max/sum algebra is what makes append O(batch): no corpus
     * scan recomputes the fingerprint. */
-  def writeMergedMeta(spark: SparkSession, dir: String, old: Row,
-                      batch: Row): Unit = {
+  private def writeMergedMeta(spark: SparkSession, dir: String, old: Row,
+                              batch: Row): Unit = {
     // a fully-retracted index carries (n_rows=0, max_id=null,
     // fingerprint=0): appending into it must not NPE on the null
     // max — the batch's own max is the union max (and 0 XOR f = f)
@@ -361,8 +367,8 @@ object StoredIndex {
     * former 1-row write job also embedded the filter as a plan
     * literal, paying a bloom-sized task binary and a bloom-sized hex
     * render of the plan description per call. */
-  def writeBloomBytes(spark: SparkSession, dir: String,
-                      bytes: Array[Byte]): Unit = {
+  private def writeBloomBytes(spark: SparkSession, dir: String,
+                              bytes: Array[Byte]): Unit = {
     import org.apache.spark.sql.types._
     org.apache.spark.sql.graftshim.TinyParquetShim.overwriteDir(
       spark,
@@ -371,21 +377,13 @@ object StoredIndex {
       Seq(Row(bytes)), s"$dir/idbloom")
   }
 
-  /** Persist the id bloom (1 binary row) from a long `id` column.
-    * Written BEFORE meta in build/append, so a committed index
-    * always carries a bloom covering every indexed id — false
-    * positives possible, false negatives never. */
-  def writeIdBloom(spark: SparkSession, dir: String,
-                   ids: DataFrame): Unit =
-    writeBloomBytes(spark, dir, bloomBytesOf(ids))
-
   /** The bloom asset with its three states kept distinct — the
     * no-false-negatives contract's load-bearing edge (see
-    * [[mergeIdBloom]]): outer None = asset MISSING (a pre-bloom
+    * [[writeIdBloomUnion]]): outer None = asset MISSING (a pre-bloom
     * index whose prior ids are unknown), Some(None) = present with a
     * null filter (a provably EMPTY prior corpus), Some(Some(b)) = a
     * live filter. */
-  def readIdBloomAsset(spark: SparkSession, dir: String)
+  private def readIdBloomAsset(spark: SparkSession, dir: String)
       : Option[Option[Array[Byte]]] =
     org.apache.spark.sql.graftshim.TinyParquetShim
       .readRows(spark, s"$dir/idbloom")
@@ -398,51 +396,36 @@ object StoredIndex {
   def readIdBloom(spark: SparkSession, dir: String): Option[Array[Byte]] =
     readIdBloomAsset(spark, dir).flatten
 
-  /** Merge a batch's ids into the stored bloom (driver-side
-    * mergeInPlace of two fixed-geometry filters — O(bloom bytes),
-    * corpus never read).
-    *
-    * The bloom's correctness contract is NO FALSE NEGATIVES over
-    * indexed ids, so the two absent-ish cases differ:
-    *  - bloom ASSET present with a null filter = a provably empty
-    *    prior corpus (an empty-corpus build writes null) → the batch
-    *    bloom alone covers every indexed id; write it.
-    *  - bloom ASSET missing = a pre-bloom index whose prior ids are
-    *    UNKNOWN → writing a batch-only bloom would rule those ids
-    *    "definitely new" and let a later duplicate append corrupt
-    *    the index silently. Leave the asset absent; the guards keep
-    *    falling back to the exact check. */
-  def mergeIdBloom(spark: SparkSession, dir: String,
-                   batchIds: DataFrame): Unit =
-    mergeIdBloomBytes(spark, dir, bloomBytesOf(batchIds))
-
-  /** [[mergeIdBloom]] on already-aggregated batch bloom bytes — the
-    * appends fuse the bloom aggregate into their identity scan
-    * ([[identityAndBloomOf]]), so no second batch pass runs here. */
-  def mergeIdBloomBytes(spark: SparkSession, dir: String,
-                        batchBytes: Array[Byte]): Unit = {
-    readIdBloomAsset(spark, dir) match {
-      case None => () // pre-bloom index: see scaladoc
-      case Some(prior) =>
-        val merged = (prior, Option(batchBytes)) match {
-          case (Some(a), Some(b)) => mergedBloomBytes(Seq(a, b))
-          case (Some(a), None) => a
-          case (None, b) => b.orNull
-        }
-        writeBloomBytes(spark, dir, merged)
-    }
-  }
-
-  /** Driver-side union of serialized fixed-geometry blooms —
-    * O(bloom bytes × filters), no data read. */
-  def mergedBloomBytes(blooms: Seq[Array[Byte]]): Array[Byte] = {
-    val bf = BloomFilter.readFrom(new ByteArrayInputStream(blooms.head))
-    blooms.tail.foreach(b =>
-      bf.mergeInPlace(BloomFilter.readFrom(new ByteArrayInputStream(b))))
-    val out = new ByteArrayOutputStream()
-    bf.writeTo(out)
-    out.toByteArray
-  }
+  /** Write `dir`'s id bloom as the union of `blooms` (each a
+    * [[readIdBloomAsset]] result: an index's asset, or a batch's
+    * filter as `Some(Option(bytes))`) — the one bloom rule of append,
+    * merge and absorb. The contract is NO FALSE NEGATIVES over
+    * indexed ids, so a missing asset (a pre-bloom input whose ids are
+    * UNKNOWN) differs from a null filter (a provably empty input):
+    * when every input carries the asset the union covers every id
+    * (null when all are empty); when any lacks it, the result must
+    * not claim coverage it cannot vouch for — a bloom ruling those
+    * ids "definitely new" would let a later duplicate append corrupt
+    * the index silently — so the asset is omitted (or dropped) and
+    * the guards fall back to the exact check. Driver-side
+    * mergeInPlace of fixed-geometry filters: O(bloom bytes), no data
+    * read. */
+  private def writeIdBloomUnion(spark: SparkSession, dir: String,
+                                blooms: Seq[Option[Option[Array[Byte]]]])
+      : Unit =
+    if (!blooms.forall(_.isDefined))
+      fsOf(spark, dir).delete(new Path(s"$dir/idbloom"), true)
+    else writeBloomBytes(spark, dir, blooms.flatMap(_.get) match {
+      case Seq() => null
+      case Seq(one) => one
+      case live =>
+        val bf = BloomFilter.readFrom(new ByteArrayInputStream(live.head))
+        live.tail.foreach(b =>
+          bf.mergeInPlace(BloomFilter.readFrom(new ByteArrayInputStream(b))))
+        val out = new ByteArrayOutputStream()
+        bf.writeTo(out)
+        out.toByteArray
+    })
 
   /** Append's duplicate-id guard, bloom-gated to O(batch) for the
     * common all-new batch: ids the stored bloom rules out never
@@ -451,9 +434,9 @@ object StoredIndex {
     * the bloom's FPP) take the exact broadcast semi-join with an
     * existence-only `limit(1)`. Indexes without a bloom asset fall
     * back to the exact check over the full batch id set. */
-  def requireNewIds(spark: SparkSession, dir: String,
-                    batchIds: DataFrame,
-                    storedIds: => DataFrame, what: String): Unit = {
+  private def requireNewIds(spark: SparkSession, dir: String,
+                            batchIds: DataFrame,
+                            storedIds: => DataFrame, what: String): Unit = {
     val distinctIds = batchIds.select(col("id")).distinct()
     val suspects = readIdBloom(spark, dir) match {
       case Some(bytes) =>
@@ -472,17 +455,6 @@ object StoredIndex {
     }
   }
 
-  /** Crash-safe in-place asset rewrite — the shared spine of both
-    * families' `compact`: the remedy for small-file accretion under
-    * long append chains. `rewrite` produces the clustered form
-    * (content-identical by the caller's contract), staged into
-    * `<asset>_compact`; only after it is fully written do the
-    * renames run, so the unreadable window is two metadata ops, not
-    * the rewrite. Meta is deleted BEFORE the swap and restored
-    * verbatim after (content is unchanged, so the fingerprint still
-    * holds): a crash mid-compaction leaves a validation-failing
-    * index — the next ensure() rebuilds — never a valid meta over a
-    * half-swapped asset dir. */
   // ----------------------------------------------------- tombstones
 
   /** A tombstone id set read ONCE per operation, in whichever form
@@ -728,9 +700,7 @@ object StoredIndex {
                                ids: Tombstones, removedMeta: Row,
                                liveIds: DataFrame, what: String,
                                beforeMeta: () => Unit = () => ()): Unit = {
-    val storedMeta = readMeta(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"$what: no committed meta at $dir"))
+    val storedMeta = committedMeta(spark, dir, what)
     require(removedMeta.getLong(0) > 0L,
       s"$what: retraction batch is empty — nothing to remove at $dir")
     // the held set is distinct by construction: its size is the
@@ -806,8 +776,9 @@ object StoredIndex {
     * in O(batch); max_id cannot be un-maxed algebraically, so the
     * caller recomputes it over the LIVE id set (keys-only, index-
     * sized, never the corpus) and passes it in. */
-  def writeRemovedMeta(spark: SparkSession, dir: String, old: Row,
-                       removed: Row, liveMaxId: java.lang.Long): Unit = {
+  private def writeRemovedMeta(spark: SparkSession, dir: String, old: Row,
+                               removed: Row,
+                               liveMaxId: java.lang.Long): Unit = {
     val n = old.getLong(0) - removed.getLong(0)
     // retracting EVERYTHING leaves the empty-corpus identity, whose
     // bit_xor aggregate is NULL — write null (not the XOR-cancelled
@@ -900,7 +871,19 @@ object StoredIndex {
       s"stageSwapAsset: rename $stage -> $live failed")
   }
 
-  /** `liveIdsOf`, when set, maps the STAGED compacted asset to its
+  /** Crash-safe in-place asset rewrite — the shared spine of the
+    * families' `compact`: the remedy for small-file accretion under
+    * long append chains. `rewrite` produces the clustered form
+    * (content-identical by the caller's contract), staged into
+    * `<asset>_compact`; only after it is fully written do the
+    * renames run, so the unreadable window is two metadata ops, not
+    * the rewrite. Meta is deleted BEFORE the swap and restored
+    * verbatim after (content is unchanged, so the fingerprint still
+    * holds): a crash mid-compaction leaves a validation-failing
+    * index — the next ensure() rebuilds — never a valid meta over a
+    * half-swapped asset dir.
+    *
+    * `liveIdsOf`, when set, maps the STAGED compacted asset to its
     * live id column ("id") and the id bloom is re-derived from it
     * inside the same commit window — the free refresh a compaction
     * that materializes deletions should take: without it, retracted
@@ -919,10 +902,7 @@ object StoredIndex {
     // meta is 1 row: hold it on the driver across the swap instead
     // of localCheckpoint-ing a frame (one job) and re-writing it
     // through another (TinyParquetShim on both sides)
-    val meta = org.apache.spark.sql.graftshim.TinyParquetShim
-      .readRows(spark, s"$dir/meta")
-      .getOrElse(throw new IllegalStateException(
-        s"compact: no committed meta at $dir"))
+    val meta = committedMeta(spark, dir, "compact")
     val staged = new Path(s"$dir/${asset}_compact")
     rewrite(spark.read.parquet(s"$dir/$asset"))
       .write.mode("overwrite").parquet(staged.toString)
@@ -943,7 +923,7 @@ object StoredIndex {
     dropAssets.foreach(a => fs.delete(new Path(s"$dir/$a"), true))
     freshBloom.foreach(b => writeBloomBytes(spark, dir, b))
     org.apache.spark.sql.graftshim.TinyParquetShim.overwriteDir(
-      spark, meta.head.schema, meta, s"$dir/meta")
+      spark, meta.schema, Seq(meta), s"$dir/meta")
   }
 
   // -------------------------------------------- staged rebuild/swap
@@ -987,7 +967,7 @@ object StoredIndex {
                  assets: Seq[String]): Unit = {
     val fs = fsOf(spark, dir)
     val staging = stagingDirOf(dir)
-    require(fs.exists(new Path(s"$staging/meta")),
+    require(isCommitted(spark, staging),
       s"swapStaged: no complete staged build at $staging — " +
         "meta commit marker missing")
     invalidate(spark, dir) // swap window opens
@@ -1004,17 +984,175 @@ object StoredIndex {
     fs.delete(new Path(staging), true)
   }
 
-  // ----------------------------------------------------- shard merge
+  // ------------------------------------- shard union and append
+
+  /** What a family hands the shared commit protocol of [[appendBatch]],
+    * [[mergeShards]] and [[absorbShard]]:
+    *  - `name`: the message prefix (`<name>.merge`, …);
+    *  - `rawIds`: an index dir's RAW indexed ids as column `id` —
+    *    tombstoned ids included (see [[mergeShards]] for why raw);
+    *  - `assets`: the id-keyed assets a union copies file by file
+    *    (`deletes/` and the [[TenantOverlay]] always ride along);
+    *  - `allOrNone`: assets a union keeps only when EVERY input
+    *    carries them, and otherwise omits (merge) or drops (absorb) —
+    *    a partial asset would serve pages silently missing some
+    *    inputs' docs, so fail closed (the keyword family's
+    *    `positions/`);
+    *  - `preCheck`: a refusal over the input dirs, run after their
+    *    metas are read and before the id guard (the dense family's
+    *    shared-quantization-assets check);
+    *  - `fold`: reads what the family's additive gauges need from the
+    *    inputs BEFORE the commit marker drops, and returns the write
+    *    that lands inside the window (out dir, input dirs). */
+  private[ext] final case class Family(
+      name: String,
+      rawIds: (SparkSession, String) => DataFrame,
+      assets: Seq[String],
+      allOrNone: Seq[String] = Nil,
+      preCheck: (SparkSession, Seq[String], String) => Unit =
+        (_, _, _) => (),
+      fold: (SparkSession, String, Seq[String]) => () => Unit =
+        (_, _, _) => () => ())
+
+  /** Append a batch of NEW rows — the O(batch) tail every family's
+    * `append` shares: no corpus scan, because the fingerprint is an
+    * XOR fold (fingerprint(old ∪ batch) = fingerprint(old) XOR
+    * fingerprint(batch)), so a content ensure() over the union still
+    * validates fresh. Batch ids must be new: a re-appended id would
+    * double its asset rows AND cancel its fingerprint term.
+    * `checkIds` runs the bloom-gated guard ([[requireNewIds]]) beside
+    * the batch's identity + bloom pass (one batch scan, async);
+    * callers whose batches already passed an incremental-dedup
+    * anti-join disable it. `stage` derives the family's batch-sized
+    * assets BEFORE the marker and returns their writes. An empty
+    * batch, or ids that null the long cast, refuses before the
+    * marker drops; a crash inside the window leaves a
+    * validation-failing index, never half a batch. */
+  private[ext] def appendBatch(f: Family, batch: DataFrame, dir: String,
+                               id: Column, content: Column,
+                               idCol: String, checkIds: Boolean)(
+      stage: => () => Unit): Unit = {
+    val spark = batch.sparkSession
+    val what = s"${f.name}.append"
+    val old = committedMeta(spark, dir, what)
+    val bidF = async(identityAndBloomOf(batch, id, content, col(idCol)))
+    if (checkIds)
+      requireNewIds(spark, dir, batch.select(col(idCol).cast("long")
+        .as("id")), f.rawIds(spark, dir), what)
+    val write = stage
+    val bid = bidF()
+    require(bid.getLong(0) > 0L && !bid.isNullAt(1) && !bid.isNullAt(2),
+      s"$what: batch is empty or has non-integral ids")
+    invalidate(spark, dir) // commit marker
+    write()
+    writeIdBloomUnion(spark, dir, Seq(readIdBloomAsset(spark, dir),
+      Some(Option(bid.getAs[Array[Byte]]("bf")))))
+    writeMergedMeta(spark, dir, old, bid)
+  }
+
+  /** Merge independently built shard indexes into a fresh `outDir` —
+    * how an index gets BUILT at scale: slice the corpus, build every
+    * slice as its own job (no cross-shard shuffle), then union in
+    * O(assets): the family's asset FILES copy (no decode, no
+    * shuffle, no parquet rewrite), pending tombstones and tenant
+    * overlays copy, id blooms union ([[writeIdBloomUnion]]) and metas
+    * fold by the append algebra ([[writeFoldedMeta]]) — so a content
+    * ensure() over the union corpus validates without rebuilding.
+    *
+    * Shards must not share RAW ids — raw, not live: a tombstoned id
+    * in one shard would otherwise filter the same id LIVE in another
+    * through the unioned `deletes/`. The guard (`checkIds`) is one
+    * keys-only distinct-count pass over the shards' id lists; slices
+    * disjoint by construction can skip it. `outDir` must be
+    * path-disjoint from every shard ([[requireDisjointDirs]]): the
+    * merge wipes it. Crash posture: every read and guard runs before
+    * the commit marker drops; the marker goes before the wipe and
+    * the first copy, so a crash anywhere after leaves a
+    * validation-failing dir (the next ensure() rebuilds), never a
+    * half-union. */
+  private[ext] def mergeShards(spark: SparkSession, f: Family,
+                               shardDirs: Seq[String], outDir: String,
+                               checkIds: Boolean,
+                               version: Option[String]): Unit = {
+    val what = s"${f.name}.merge"
+    require(shardDirs.nonEmpty, s"$what: no shards")
+    requireDisjointDirs(spark, outDir, shardDirs, what)
+    val metas = shardDirs.map(committedMeta(spark, _, what))
+    f.preCheck(spark, shardDirs, what)
+    if (checkIds && shardDirs.size > 1) {
+      val dup = shardDirs.map(f.rawIds(spark, _).distinct())
+        .reduce(_ unionByName _)
+        .groupBy("id").count().filter(col("count") > 1)
+        .limit(1).count()
+      require(dup == 0L,
+        s"$what: shards share raw id(s) — slices must be disjoint " +
+          "(tombstoned ids included: a tombstone in one shard would " +
+          "filter the same id live in another)")
+    }
+    unionInto(spark, f, outDir, shardDirs,
+      shardDirs.zipWithIndex.map { case (d, i) => (d, s"s${i}_") },
+      metas, version)
+  }
+
+  /** Ingest a built shard index INTO a committed index in place — the
+    * O(shard) tail of continuous bulk loading ([[mergeShards]] is the
+    * O(total) one-shot): the shard's files copy in, the target's are
+    * never read or rewritten. [[mergeShards]]' raw-id rule and crash
+    * posture, with the disjointness guard bloom-gated to O(shard)
+    * ([[requireNewIds]]). The target's version is cleared (absorbed
+    * content invalidates a pinned corpus version). A shard that is
+    * the target under any spelling of its path refuses. The shard
+    * dir stays servable; delete it after a successful absorb. */
+  private[ext] def absorbShard(spark: SparkSession, f: Family,
+                               shardDir: String, dir: String,
+                               checkIds: Boolean): Unit = {
+    val what = s"${f.name}.absorb"
+    requireDisjointDirs(spark, dir, Seq(shardDir), what)
+    val metas = Seq(dir, shardDir).map(committedMeta(spark, _, what))
+    f.preCheck(spark, Seq(dir, shardDir), what)
+    if (checkIds)
+      requireNewIds(spark, dir, f.rawIds(spark, shardDir),
+        f.rawIds(spark, dir), what)
+    unionInto(spark, f, dir, Seq(dir, shardDir), Seq((shardDir, "ab_")),
+      metas, None)
+  }
+
+  /** The union's commit window: `out` becomes the union of `inputs`
+    * (a merge's fresh dir is not among them and is wiped after the
+    * marker drops), taking the files of `copies` under their name
+    * prefixes. */
+  private def unionInto(spark: SparkSession, f: Family, out: String,
+                        inputs: Seq[String], copies: Seq[(String, String)],
+                        metas: Seq[Row], version: Option[String]): Unit = {
+    val fs = fsOf(spark, out)
+    val kept = f.allOrNone.filter(a =>
+      inputs.forall(d => fsOf(spark, d).exists(new Path(s"$d/$a"))))
+    val foldWrite = f.fold(spark, out, inputs)
+    val blooms = inputs.map(readIdBloomAsset(spark, _))
+    invalidate(spark, out) // commit marker
+    if (!inputs.contains(out)) fs.delete(new Path(out), true)
+    copies.foreach { case (d, prefix) =>
+      (f.assets ++ kept :+ "deletes").foreach(a =>
+        copyAssetFiles(spark, s"$d/$a", s"$out/$a", prefix))
+      TenantOverlay.copy(spark, d, out, prefix)
+    }
+    f.allOrNone.diff(kept).foreach(a => fs.delete(new Path(s"$out/$a"), true))
+    foldWrite()
+    writeIdBloomUnion(spark, out, blooms)
+    writeFoldedMeta(spark, out, metas, version)
+  }
 
   /** Reject an `outDir` that equals, contains, or is contained in
-    * any shard dir — the families' merge deletes outDir recursively
-    * before the file copies, so ANY path overlap (not just equality)
-    * would destroy shard assets mid-merge. Qualified-path compare,
-    * so relative/absolute/scheme-prefixed spellings of the same
+    * any shard dir — a merge deletes outDir recursively before the
+    * file copies, and an absorb into itself would copy the index's
+    * files into itself and fold its meta twice, so ANY path overlap
+    * (not just equality) refuses. Qualified-path compare, so
+    * relative/absolute/scheme-prefixed/trailing-slash spellings of the same
     * location agree; the trailing-slash guard keeps `/a/b` from
     * matching `/a/bc` as a prefix. */
-  def requireDisjointDirs(spark: SparkSession, outDir: String,
-                          shardDirs: Seq[String], what: String): Unit = {
+  private def requireDisjointDirs(spark: SparkSession, outDir: String,
+                                  shardDirs: Seq[String],
+                                  what: String): Unit = {
     def qualified(p: String): String =
       fsOf(spark, p).makeQualified(new Path(p)).toString
         .stripSuffix("/") + "/"
@@ -1022,9 +1160,8 @@ object StoredIndex {
     shardDirs.foreach { d =>
       val s = qualified(d)
       require(!out.startsWith(s) && !s.startsWith(out),
-        s"$what: outDir $outDir overlaps shard dir $d — the merge " +
-          "deletes outDir recursively, so the paths must be disjoint " +
-          "(no nesting in either direction)")
+        s"$what: $outDir overlaps shard dir $d — the paths must be " +
+          "disjoint (no nesting in either direction)")
     }
   }
 
@@ -1054,16 +1191,16 @@ object StoredIndex {
     true
   }
 
-  /** Fold shard meta rows with [[writeMergedMeta]]'s append algebra
+  /** Fold input meta rows with [[writeMergedMeta]]'s append algebra
     * (sum n_rows, null-safe max id, XOR fingerprint — XOR's
-    * associativity/commutativity is why shard order cannot matter)
-    * and write the result as `dir`'s commit marker. Each shard meta
+    * associativity/commutativity is why input order cannot matter)
+    * and write the result as `dir`'s commit marker. Each input meta
     * already un-mixes its own pending retractions, so the fold
     * equals what a one-shot build over the union LIVE corpus
-    * writes — a content ensure() over that union validates the
-    * merged index without rebuilding. */
-  def writeFoldedMeta(spark: SparkSession, dir: String,
-                      metas: Seq[Row], version: Option[String]): Unit = {
+    * writes. */
+  private def writeFoldedMeta(spark: SparkSession, dir: String,
+                              metas: Seq[Row],
+                              version: Option[String]): Unit = {
     val maxes = metas.filter(!_.isNullAt(1)).map(_.getLong(1))
     val fps = metas.filter(!_.isNullAt(2)).map(_.getLong(2))
     writeMetaRow(spark, dir, metas.map(_.getLong(0)).sum,

@@ -4648,14 +4648,14 @@ object ExtQueries {
           .head.getDouble(0).toLong
         graft.ext.AnnIndex.ensure(
           embs.filter(col("vec_id") < half), ix, version = Some(v))
-        val before = s.read.parquet(s"$ix/meta").head
+        val before = graft.ext.StoredIndex.committedMeta(s, ix, "x10s")
         val offset = before.getLong(1) + 1L
         graft.ext.AnnIndex.append(
           embs.filter(col("vec_id") >= half)
             .withColumn("vec_id",
               col("vec_id") - lit(half) + lit(offset)), ix)
         graft.ext.AnnIndex.maybeCompact(s, ix, maxFiles = 256)
-        val after = s.read.parquet(s"$ix/meta").head
+        val after = graft.ext.StoredIndex.committedMeta(s, ix, "x10s")
         s.range(1).select(
           lit(after.getLong(0) - before.getLong(0)).as("n_appended"))
       },

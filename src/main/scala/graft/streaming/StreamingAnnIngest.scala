@@ -126,7 +126,7 @@ final class StreamingAnnIngest(spark: SparkSession, indexDir: String,
         spark.sparkContext.hadoopConfiguration).exists(storePath),
       s"seed: vector store already exists at $dir — seeding is " +
         "bootstrap-only; ingest new vectors through the stream")
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/meta")),
+    require(!StoredIndex.isCommitted(spark, indexDir),
       s"seed: index already exists at $indexDir")
     val fresh = dropRetracted(df.dropDuplicates("vec_id"))
       .localCheckpoint()
@@ -270,8 +270,7 @@ final class StreamingAnnIngest(spark: SparkSession, indexDir: String,
     // check below must run regardless, or a batch whose rows were
     // all retracted/duplicate would commit its checkpoint while
     // leaving a meta-less (crashed-append) index unrepaired
-    val metaPath = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
-    if (!fs.exists(metaPath)) {
+    if (!StoredIndex.isCommitted(spark, indexDir)) {
       val orphaned = Seq("postings", "centroids", "codebook").filter(a =>
         fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/$a")))
       val storeExists = storeDir.exists { d =>

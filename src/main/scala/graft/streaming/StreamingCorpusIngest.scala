@@ -209,8 +209,7 @@ final class StreamingCorpusIngest(spark: SparkSession, root: String,
     val corpusPath = new org.apache.hadoop.fs.Path(s"$root/corpus")
     if (!fs.exists(corpusPath)) return // virgin: nothing accepted yet
     val to = text.maxLandedBatch()
-    val metaP = new org.apache.hadoop.fs.Path(s"$keywordDir/meta")
-    if (!fs.exists(metaP)) {
+    if (!StoredIndex.isCommitted(spark, keywordDir)) {
       // virgin index — or a crash mid-append left assets without
       // their commit marker: both rebuild from the corpus, the
       // coordinator's ground truth (never from a delta slice)
@@ -254,8 +253,7 @@ final class StreamingCorpusIngest(spark: SparkSession, root: String,
     val corpusPath = new org.apache.hadoop.fs.Path(s"$root/corpus")
     if (!fs.exists(corpusPath)) return
     val to = text.maxLandedBatch()
-    val metaP = new org.apache.hadoop.fs.Path(s"$keywordDir/meta")
-    if (!fs.exists(metaP)) {
+    if (!StoredIndex.isCommitted(spark, keywordDir)) {
       KeywordIndex.build(text.corpus(), keywordDir)
       writeMarkAt(kwMarkDir, to)
       return
@@ -524,7 +522,7 @@ final class StreamingCorpusIngest(spark: SparkSession, root: String,
     * lexical un-mix and every guard below them work from it. */
   private[streaming] def retractHeld(want: Tombstones): Unit = {
     val kwIndexed = keywordServing &&
-      fs.exists(new org.apache.hadoop.fs.Path(s"$keywordDir/meta"))
+      StoredIndex.isCommitted(spark, keywordDir)
     // the keyword un-mix needs the retracted rows' (id, text)
     // identity, and the text half purges exactly that — it returns
     // the corpus rows it fetched BEFORE its purge (driver-internal;
@@ -637,12 +635,12 @@ final class StreamingCorpusIngest(spark: SparkSession, root: String,
     * dir absent — e.g. text seeded but vectors never synced) reads
     * as empty rather than erroring: that IS a reportable drift. */
   def alignment(): DataFrame = {
-    def orEmpty(dir: String)(read: => DataFrame) =
-      if (fs.exists(new org.apache.hadoop.fs.Path(dir))) read
-      else spark.range(0).select(col("id").as("doc_id"))
+    def orEmpty(present: Boolean)(read: => DataFrame) =
+      if (present) read else spark.range(0).select(col("id").as("doc_id"))
+    def exists(dir: String) = fs.exists(new org.apache.hadoop.fs.Path(dir))
     // the family reads (heal-first) when the store exists
-    val c = orEmpty(s"$root/corpus")(text.corpus().select("doc_id"))
-    val v = orEmpty(s"$root/vectors")(
+    val c = orEmpty(exists(s"$root/corpus"))(text.corpus().select("doc_id"))
+    val v = orEmpty(exists(s"$root/vectors"))(
       vectors.store().select(col("vec_id").as("doc_id")))
     val textVsVectors = c.join(v, Seq("doc_id"), "left_anti")
       .select(lit("corpus_only").as("side"), col("doc_id"))
@@ -651,7 +649,7 @@ final class StreamingCorpusIngest(spark: SparkSession, root: String,
     val withKeyword =
       if (!keywordServing) textVsVectors
       else {
-        val k = orEmpty(s"$keywordDir/meta")(
+        val k = orEmpty(StoredIndex.isCommitted(spark, keywordDir))(
           graft.ext.KeywordIndex.liveIndexedIds(spark, keywordDir)
             .withColumnRenamed("id", "doc_id"))
         textVsVectors
@@ -674,8 +672,7 @@ final class StreamingCorpusIngest(spark: SparkSession, root: String,
       concat(lit("ann_"), col("metric")).as("metric"), col("value"))
     val base = t.unionByName(a)
     val withKw =
-      if (keywordServing && fs.exists(
-          new org.apache.hadoop.fs.Path(s"$keywordDir/meta")))
+      if (keywordServing && StoredIndex.isCommitted(spark, keywordDir))
         base.unionByName(
           graft.ext.KeywordIndex.health(spark, keywordDir).select(
             concat(lit("kw_"), col("metric")).as("metric"),

@@ -168,7 +168,7 @@ final class StreamingDedupIngest(spark: SparkSession, indexDir: String,
         spark.sparkContext.hadoopConfiguration).exists(corpusPath),
       s"seed: corpus store already exists at $corpusDir — seeding is " +
         "bootstrap-only; ingest new documents through the stream")
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/meta")),
+    require(!StoredIndex.isCommitted(spark, indexDir),
       s"seed: index already exists at $indexDir")
     val fresh = dropRetracted(df.dropDuplicates("doc_id"))
       .localCheckpoint()
@@ -643,8 +643,7 @@ final class StreamingDedupIngest(spark: SparkSession, indexDir: String,
     // check below must run regardless, or a batch whose rows were
     // all retracted/duplicate would commit its checkpoint while
     // leaving a meta-less (crashed-append) index unrepaired
-    val metaPath = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
-    if (!fs.exists(metaPath)) {
+    if (!StoredIndex.isCommitted(spark, indexDir)) {
       val orphaned = Seq("buckets", "idbloom").filter(a =>
         fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/$a")))
       val corpusPath = new org.apache.hadoop.fs.Path(corpusDir)

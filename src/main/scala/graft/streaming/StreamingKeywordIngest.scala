@@ -93,7 +93,7 @@ final class StreamingKeywordIngest(spark: SparkSession, indexDir: String,
         spark.sparkContext.hadoopConfiguration).exists(storePath),
       s"seed: text store already exists at $dir — seeding is " +
         "bootstrap-only; ingest new documents through the stream")
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/meta")),
+    require(!StoredIndex.isCommitted(spark, indexDir),
       s"seed: index already exists at $indexDir")
     val fresh = dropRetracted(df.dropDuplicates("doc_id"))
       .localCheckpoint()
@@ -239,8 +239,7 @@ final class StreamingKeywordIngest(spark: SparkSession, indexDir: String,
       .localCheckpoint()
     // no early return on an empty batch — the crash-recovery check
     // must run regardless (StreamingAnnIngest's NOTE applies)
-    val metaPath = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
-    if (!fs.exists(metaPath)) {
+    if (!StoredIndex.isCommitted(spark, indexDir)) {
       val orphaned = Seq("postings", "doclens", "stats").filter(a =>
         fs.exists(new org.apache.hadoop.fs.Path(s"$indexDir/$a")))
       val storeExists = storeDir.exists { d =>

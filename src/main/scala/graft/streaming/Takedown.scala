@@ -113,13 +113,6 @@ private[streaming] object Takedown {
       .filter(cond).select(idCol).distinct())
   }
 
-  /** The takedown id set as driver-side literals when the request is
-    * small enough to become a pushdown-friendly predicate — None
-    * above the cap (fall back to the semi-join). */
-  private[streaming] def idLiterals(ids: DataFrame, idCol: String,
-                                    cap: Int): Option[Seq[Long]] =
-    StoredIndex.holdIds(ids, idCol, cap).litIds
-
   /** `a` minus `b`: a driver diff when both are literals, otherwise a
     * materialized anti-join. */
   private[streaming] def minus(spark: SparkSession, a: Tombstones,

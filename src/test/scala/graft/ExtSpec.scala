@@ -2236,4 +2236,50 @@ class ExtSpec extends SparkTestBase {
       .exists(_.rule == "global-window"),
       "rrfFuseMany must not plan a global window")
   }
+
+  test("self-absorb through another spelling of the target's path " +
+      "refuses in every stored-index family and leaves it fresh") {
+    import graft.ext.{AnnIndex, DedupIndex, KeywordIndex}
+    val text = docs.select("doc_id", "text").localCheckpoint()
+    val embs = spark.read.parquet(s"$sf001/embeddings.parquet")
+      .select("vec_id", "embedding").filter($"vec_id" < 200)
+      .localCheckpoint()
+    // (family, build, absorb(shard, target), content ensure)
+    val families = Seq[(String, String => Unit, (String, String) => Unit,
+        String => Boolean)](
+      ("DedupIndex", DedupIndex.build(text, _),
+        DedupIndex.absorb(spark, _, _, checkIds = false),
+        DedupIndex.ensure(text, _)),
+      ("AnnIndex", AnnIndex.build(embs, _),
+        AnnIndex.absorb(spark, _, _, checkIds = false),
+        AnnIndex.ensure(embs, _)),
+      ("KeywordIndex", KeywordIndex.build(text, _),
+        KeywordIndex.absorb(spark, _, _, checkIds = false),
+        KeywordIndex.ensure(text, _)))
+    for ((name, build, absorb, ensure) <- families) {
+      val dir = java.nio.file.Files.createTempDirectory(name).toString
+      build(dir)
+      for (same <- Seq(dir + "/", s"file:$dir"))
+        intercept[IllegalArgumentException](absorb(same, dir))
+      assert(!ensure(dir),
+        s"$name: a refused self-absorb must leave the index fresh")
+    }
+  }
+
+  test("AnnIndex.append refuses an all-null-id batch before the " +
+      "commit marker") {
+    import graft.ext.AnnIndex
+    val embs = spark.read.parquet(s"$sf001/embeddings.parquet")
+      .select("vec_id", "embedding").filter($"vec_id" < 200)
+      .localCheckpoint()
+    val dir = java.nio.file.Files.createTempDirectory("x9null").toString
+    AnnIndex.build(embs, dir)
+    val ex = intercept[IllegalArgumentException] {
+      AnnIndex.append(
+        embs.limit(3).withColumn("vec_id", lit(null).cast("long")), dir)
+    }
+    assert(ex.getMessage.contains("non-integral"))
+    assert(!AnnIndex.ensure(embs, dir),
+      "a refused append must leave the index committed and fresh")
+  }
 }

@@ -20,6 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    shipped source)
   *  - no `println` in library code (mains and the debug-print
   *    StageLog are the sanctioned output surfaces)
+  *  - the stored indexes' commit-marker, id-bloom and tombstone paths
+  *    are spelled only in `ext/StoredIndex.scala` (callers go through
+  *    its helpers, e.g. `isCommitted`)
   */
 class LintSpec extends AnyFunSuite {
 
@@ -76,6 +79,14 @@ class LintSpec extends AnyFunSuite {
       p.toString.startsWith("src/main") &&
         !PrintlnAllowed(p.getFileName.toString) &&
         l.contains("println("))
+  }
+
+  test("commit-protocol asset paths only in StoredIndex") {
+    val paths = Seq("/meta\"", "/idbloom", "/deletes\"")
+    check("stored-index-paths")((p, _, l) =>
+      p.toString.startsWith("src/main") &&
+        !p.endsWith(Paths.get("ext", "StoredIndex.scala")) &&
+        paths.exists(l.contains))
   }
 
   test("files end with a newline") {

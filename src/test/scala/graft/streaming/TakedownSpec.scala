@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 
-/** The takedown pushdown split (Takedown.idLiterals): a
+/** The takedown pushdown split (StoredIndex.holdIds): a
   * compliance-scale id request becomes an IN predicate the parquet
   * reader prunes row groups with (footer-bound discovery over the
   * ingests' id-sorted batch files), while an over-cap request falls
@@ -28,9 +28,9 @@ class TakedownSpec extends graft.SparkTestBase {
     // the split itself: small requests collect to literals, over-cap
     // requests return None (semi-join fallback)
     val small = spark.range(5).select(($"id" + 10).as("doc_id"))
-    assert(Takedown.idLiterals(small, "doc_id", 10000)
+    assert(graft.ext.StoredIndex.holdIds(small, "doc_id", 10000).litIds
       .map(_.sorted).contains(Seq(10L, 11L, 12L, 13L, 14L)))
-    assert(Takedown.idLiterals(small, "doc_id", 3).isEmpty)
+    assert(graft.ext.StoredIndex.holdIds(small, "doc_id", 3).litIds.isEmpty)
 
     // scan posture of the literal path: the IN predicate reaches the
     // parquet reader (PushedFilters), so the sorted batch files'
