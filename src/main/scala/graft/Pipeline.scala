@@ -68,7 +68,7 @@ object Pipeline {
     p.meta.ledger.show(20, truncate = false)
     Seq("vendor_metrics", "monthly_metrics", "payment_metrics").foreach { g =>
       println(s"=== gold.$g ===")
-      spark.read.parquet(s"$warehouse/gold/$g").show(20, truncate = false)
+      spark.table(s"gold_$g").show(20, truncate = false)
     }
     spark.stop()
   }

@@ -2,6 +2,7 @@ package graft.silver
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.Ops
 import graft.schema.Schemas
@@ -18,9 +19,8 @@ final class SilverRefresh(spark: SparkSession, warehouse: String) {
   private def dimPath(name: String) = s"$warehouse/silver/$name"
   private val factPath = s"$warehouse/silver/yellow_taxi"
 
-  private def bronze: DataFrame = spark.read
-    .schema(Schemas.bronze.add("pickup_month", "string"))
-    .parquet(bronzePath)
+  private def bronze: DataFrame =
+    read(Schemas.bronze.add("pickup_month", "string"), bronzePath)
 
   /** Build all three dims + the fact; full refresh (overwrite). */
   def refresh(): Unit = {
@@ -59,10 +59,16 @@ final class SilverRefresh(spark: SparkSession, warehouse: String) {
       .write.mode("overwrite").partitionBy("pickup_month")
       .parquet(factPath)
 
-  def fact: DataFrame = spark.read.parquet(factPath)
-  def vendorDim: DataFrame = spark.read.parquet(dimPath("vendor"))
-  def paymentTypeDim: DataFrame = spark.read.parquet(dimPath("payment_type"))
-  def ratecodeDim: DataFrame = spark.read.parquet(dimPath("ratecode"))
+  /** The silver tables, read with their declared schemas: no
+    * schema-inference job, and an empty fact dir reads as 0 rows. */
+  def fact: DataFrame = read(Schemas.silverFact, factPath)
+  def vendorDim: DataFrame = read(Schemas.vendorDim, dimPath("vendor"))
+  def paymentTypeDim: DataFrame =
+    read(Schemas.paymentTypeDim, dimPath("payment_type"))
+  def ratecodeDim: DataFrame = read(Schemas.ratecodeDim, dimPath("ratecode"))
+
+  private def read(schema: StructType, path: String): DataFrame =
+    spark.read.schema(schema).parquet(path)
 }
 
 object SilverRefresh {

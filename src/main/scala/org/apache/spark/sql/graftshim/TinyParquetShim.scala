@@ -19,17 +19,19 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.types._
 
-/** Driver-side parquet I/O for BOUNDED control-plane assets (1-row
-  * commit-marker metas, 1-row id blooms, ≤ k-row gauge states, ≤ bins
-  * histogram states): each such asset previously paid a full Spark
-  * action per read/write — analysis, AQE planning, task scheduling,
-  * plan-description rendering, commit protocol — for a handful of
-  * rows. At any corpus scale these assets stay O(k)/O(bins)/O(1) by
-  * construction (the operator scaladocs argue each bound), so moving
-  * the I/O onto the driver removes a per-mutation constant without
-  * touching any data-plane path (guide §1.2 step 1: stop doing work
-  * that isn't needed — the cluster round-trip here never carried
-  * data-sized payloads).
+/** Driver-side parquet I/O for BOUNDED assets: control-plane assets
+  * (1-row commit-marker metas, 1-row id blooms, ≤ k-row gauge states,
+  * ≤ bins histogram states, the run ledger) and bounded result tables
+  * already collected on the driver (the ≤ 25-row gold tables of
+  * `graft.gold.GoldViews`). Each such asset previously paid a full
+  * Spark action per read/write — analysis, AQE planning, task
+  * scheduling, plan-description rendering, commit protocol — for a
+  * handful of rows. At any data scale these assets stay
+  * O(k)/O(bins)/O(groups) by construction (the callers' scaladocs
+  * argue each bound), so moving the I/O onto the driver removes a
+  * per-call constant without touching any data-plane path (guide §1.2
+  * step 1: stop doing work that isn't needed — the cluster round-trip
+  * here never carried data-sized payloads).
   *
   * Lives in the `org.apache.spark.sql` namespace because the write
   * path reuses Spark's own `ParquetWriteSupport` (`private[sql]`) —

@@ -23,6 +23,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the stored indexes' commit-marker, id-bloom and tombstone paths
   *    are spelled only in `ext/StoredIndex.scala` (callers go through
   *    its helpers, e.g. `isCommitted`)
+  *  - the medallion layers (bronze, silver, gold, meta) read parquet
+  *    only with a declared schema: a schema-less `.read.parquet(`
+  *    pays a schema-inference Spark job per read
   */
 class LintSpec extends AnyFunSuite {
 
@@ -87,6 +90,19 @@ class LintSpec extends AnyFunSuite {
       p.toString.startsWith("src/main") &&
         !p.endsWith(Paths.get("ext", "StoredIndex.scala")) &&
         paths.exists(l.contains))
+  }
+
+  test("medallion layers read parquet only with a declared schema") {
+    val layers = Seq("bronze", "silver", "gold", "meta")
+      .map(l => Paths.get("src", "main", "scala", "graft", l))
+    val schemaLess = "\\.read\\s*\\.parquet\\(".r
+    // matched over the whole text: the call may span a line break
+    val hits = for {
+      (p, text) <- sources if layers.exists(p.startsWith)
+      m <- schemaLess.findAllMatchIn(text)
+    } yield s"$p:${text.take(m.start).count(_ == '\n') + 1}"
+    assert(hits.isEmpty,
+      s"schema-less-parquet-read violated at:\n  ${hits.mkString("\n  ")}")
   }
 
   test("files end with a newline") {

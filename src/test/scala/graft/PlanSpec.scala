@@ -117,6 +117,23 @@ class PlanSpec extends SparkTestBase {
     assert(!plan.contains("SortMergeJoin"), plan)
   }
 
+  test("gold build: one aggregate over both broadcast dim joins (S7 plan)") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_plan_gold_").toString
+    Setup.setup(spark, wh)
+    graft.taxi.TaxiFixtures.monthBatch(spark, 2024, 1, rows = 50)
+      .withColumn("pickup_month", date_format(col("tpep_pickup_datetime"), "yyyy-MM"))
+      .write.partitionBy("pickup_month").parquet(s"$wh/bronze/yellow_taxi_raw")
+    val silver = new graft.silver.SilverRefresh(spark, wh)
+    silver.refresh()
+    val plan = executed(graft.gold.GoldViews.allMetrics(
+      silver.fact, silver.vendorDim, silver.paymentTypeDim))
+    def count(node: String) = node.r.findAllIn(plan).size
+    assert(count("BroadcastHashJoin") == 2, plan)
+    assert(count("Expand") == 1, plan)
+    assert(count("Exchange hashpartitioning") == 1, plan)
+    assert(!plan.contains("SortMergeJoin"), plan)
+  }
+
   test("full-row dedup is a hash aggregate, not a window (W1)") {
     val plan = executed(Ops.dedupExact(docs))
     assert(plan.contains("HashAggregate") || plan.contains("Aggregate"), plan)
