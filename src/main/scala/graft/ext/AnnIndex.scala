@@ -43,6 +43,12 @@ import org.apache.spark.sql.functions._
   * roundDet'd LUT + score), so the stored path is DuckDB-oracle-able
   * with x8's own SQL — and [[probeTopK]] runs [[Similarity
   * .ivfPqProbe]], literally the same query-side code.
+  *
+  * A serve reads every asset with its declared footer schema
+  * ([[StoredIndex.readAsset]]: no schema-inference job) and keeps the
+  * query side ONE row per query: the ADC lookup table is a projection
+  * over that row and the broadcast codebook, not an aggregate, and
+  * rides the probed (qid, cid) rows into the candidate join.
   */
 object AnnIndex {
 
@@ -170,7 +176,7 @@ object AnnIndex {
     build(corpus, staging, stride, m, dim, maxCentroids, vecCol,
       idCol, version)
     TenantOverlay.carry(spark, dir, staging,
-      spark.read.parquet(s"$staging/postings").select(col("nid").as("id")),
+      readAsset(spark, staging, "postings").select(col("nid").as("id")),
       None)
     StoredIndex.swapStaged(spark, dir,
       Seq("centroids", "codebook", "postings") ++ TenantOverlay.assets(None))
@@ -201,8 +207,8 @@ object AnnIndex {
     StoredIndex.appendBatch(Family, batch, dir, col(idCol), col(vecCol),
         idCol, checkIds) {
       val spark = batch.sparkSession
-      val cents = spark.read.parquet(s"$dir/centroids")
-      val cb = spark.read.parquet(s"$dir/codebook")
+      val cents = readAsset(spark, dir, "centroids")
+      val cb = readAsset(spark, dir, "codebook")
       // codes + assignment in ONE scan (Similarity.pqEncodeAssign)
       () => Similarity.pqEncodeAssign(batch, cents, cb, m, dim, vecCol,
           idCol)
@@ -251,8 +257,8 @@ object AnnIndex {
         s"$shardDir/codebook", "t_"),
       s"AnnIndex.shardFrom: trainer at $trainerDir has no " +
         "centroids/codebook assets — build it first")
-    val cents = spark.read.parquet(s"$shardDir/centroids")
-    val cb = spark.read.parquet(s"$shardDir/codebook")
+    val cents = readAsset(spark, shardDir, "centroids")
+    val cb = readAsset(spark, shardDir, "codebook")
     // identity + id bloom in ONE slice pass (was two), overlapped
     // with the encode+write (§2.6); joined before the meta marker
     val ib = StoredIndex.async(StoredIndex.identityAndBloomOf(slice,
@@ -277,10 +283,10 @@ object AnnIndex {
       Option(df.head.getAs[Any]("fingerprint"))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
     (fp(StoredIndex.identityOf(
-        spark.read.parquet(s"$dir/centroids"),
+        readAsset(spark, dir, "centroids"),
         col("cid"), col("cvec"))),
      fp(StoredIndex.identityOf(
-        spark.read.parquet(s"$dir/codebook"),
+        readAsset(spark, dir, "codebook"),
         lit(0L), col("cb"))))
   }
 
@@ -293,7 +299,7 @@ object AnnIndex {
     * those shared assets once, from the first shard. */
   private val Family = StoredIndex.Family("AnnIndex",
     (spark, dir) =>
-      spark.read.parquet(s"$dir/postings").select(col("nid").as("id")),
+      readAsset(spark, dir, "postings").select(col("nid").as("id")),
     Seq("postings"),
     preCheck = (spark, dirs, what) => {
       val fps = dirs.map(assetFingerprint(spark, _))
@@ -333,12 +339,18 @@ object AnnIndex {
              checkIds: Boolean = true): Unit =
     StoredIndex.absorbShard(spark, Family, shardDir, dir, checkIds)
 
+  /** An asset of the index at `dir`, read with its declared footer
+    * schema ([[StoredIndex.readAsset]]) — no schema-inference job. */
+  private def readAsset(spark: SparkSession, dir: String,
+                        name: String): DataFrame =
+    StoredIndex.readAsset(spark, "AnnIndex", dir, name)
+
   /** Postings with tombstoned rows filtered out — what every probe
     * searches. The tombstone side is retraction-sized (broadcast). */
   private def livePostings(spark: SparkSession,
                            dir: String): DataFrame =
     StoredIndex.filterTombstones(spark, dir,
-      spark.read.parquet(s"$dir/postings"), "nid")
+      readAsset(spark, dir, "postings"), "nid")
 
   /** Live indexed ids: every posting id minus the tombstones —
     * keys-only, index-sized, the embeddings are never read. Public
@@ -447,8 +459,8 @@ object AnnIndex {
                 idCol: String = "vec_id",
                 excludeSelf: Boolean = true): DataFrame =
     Similarity.ivfPqProbe(
-      spark.read.parquet(s"$dir/centroids"),
-      spark.read.parquet(s"$dir/codebook"),
+      readAsset(spark, dir, "centroids"),
+      readAsset(spark, dir, "codebook"),
       livePostings(spark, dir),
       queries, k, nprobe, m, dim, vecCol, idCol,
       excludeSelf = excludeSelf)
@@ -466,8 +478,8 @@ object AnnIndex {
                  dim: Int = 64, vecCol: String = "embedding",
                  idCol: String = "vec_id"): DataFrame =
     Similarity.ivfPqRange(
-      spark.read.parquet(s"$dir/centroids"),
-      spark.read.parquet(s"$dir/codebook"),
+      readAsset(spark, dir, "centroids"),
+      readAsset(spark, dir, "codebook"),
       livePostings(spark, dir),
       queries, threshold, nprobe, m, dim, vecCol, idCol)
 
@@ -500,9 +512,13 @@ object AnnIndex {
     * whose probed buckets hold fewer than k allowed candidates
     * returns fewer than k rows — the honest answer; selective
     * filters raise `nprobe` to widen the searched buckets, the
-    * standard dial. `broadcastAllowed` fits the contract-small
-    * allowlist case (license tags, a tenant's ids); disable it for
-    * data-sized predicates and the join stays keyed on nid. */
+    * standard dial. An allowed set of at most
+    * [[StoredIndex.HeldIdCap]] ids rides the postings scan as sorted
+    * `nid IN (…)` literals (a held, local frame collects without a
+    * job); above the cap it semi-joins, and `broadcastAllowed` fits
+    * the contract-small allowlist case (license tags, a tenant's
+    * ids) — disable it for data-sized predicates and the join stays
+    * keyed on nid. */
   def probeTopKFiltered(spark: SparkSession, dir: String,
                         queries: DataFrame, allowed: DataFrame,
                         k: Int, nprobe: Int = 12, m: Int = 4,
@@ -510,14 +526,29 @@ object AnnIndex {
                         idCol: String = "vec_id",
                         broadcastAllowed: Boolean = true): DataFrame = {
     val ids = allowed.select(col(idCol).cast("long").as("nid"))
-      .distinct()
-    val postings = livePostings(spark, dir)
-      .join(if (broadcastAllowed) broadcast(ids) else ids,
-        Seq("nid"), "left_semi")
+      .filter(col("nid").isNotNull)
     Similarity.ivfPqProbe(
-      spark.read.parquet(s"$dir/centroids"),
-      spark.read.parquet(s"$dir/codebook"),
-      postings, queries, k, nprobe, m, dim, vecCol, idCol)
+      readAsset(spark, dir, "centroids"),
+      readAsset(spark, dir, "codebook"),
+      grantedPostings(spark, dir, ids, StoredIndex.HeldIdCap,
+        f => if (broadcastAllowed) broadcast(f.distinct()) else f.distinct()),
+      queries, k, nprobe, m, dim, vecCol, idCol)
+  }
+
+  /** Live postings restricted to a grant (`nid` column) — the
+    * literal-or-frame split of [[StoredIndex.idLiterals]]: sorted
+    * distinct `nid IN (…)` literals riding the postings scan when the
+    * grant has at most `cap` rows (no job for a held, local grant),
+    * otherwise a keyed semi-join against `frameSide(grant)`. */
+  private def grantedPostings(spark: SparkSession, dir: String,
+                              grant: DataFrame, cap: Int,
+                              frameSide: DataFrame => DataFrame)
+      : DataFrame = {
+    val live = livePostings(spark, dir)
+    StoredIndex.idLiterals(grant, cap) match {
+      case Some(l) => live.filter(col("nid").isin(l.distinct: _*))
+      case None => live.join(frameSide(grant), Seq("nid"), "left_semi")
+    }
   }
 
   /** Batched filtered serve — [[probeTopKFiltered]] with PER-QUERY
@@ -526,7 +557,7 @@ object AnnIndex {
     * side of the retrieval matrix): each qid's page is the exact
     * IVFADC top-k of allowed(qid) within ITS probed buckets — the
     * (qid, nid) restriction semi-joins the candidate slice BEFORE
-    * the LUT join and the ADC fold, so disallowed candidates never
+    * the ADC fold, so disallowed candidates never
     * cost a score, and every rank window stays qid-partitioned (the
     * probe chain's own shape — no global window exists to begin
     * with). `allowed` carries (qid, id) pairs; a qid with no allowed
@@ -549,8 +580,8 @@ object AnnIndex {
       col(idCol).cast("long").as("nid")).distinct()
     val pairs = if (broadcastAllowed) broadcast(pairs0) else pairs0
     Similarity.ivfPqProbe(
-      spark.read.parquet(s"$dir/centroids"),
-      spark.read.parquet(s"$dir/codebook"),
+      readAsset(spark, dir, "centroids"),
+      readAsset(spark, dir, "codebook"),
       livePostings(spark, dir), queries, k, nprobe, m, dim, vecCol,
       idCol, restrict = _.join(pairs, Seq("qid", "nid"), "left_semi"),
       excludeSelf = excludeSelf)
@@ -608,8 +639,8 @@ object AnnIndex {
     * .probeTopKTenant]]'s shape on this family, closing the dense ×
     * tenant cell of the serve matrix): top-k among the tenant's live
     * vectors only, pre-filter semantics (the grant restricts the
-    * candidate slice BEFORE the LUT join and the ADC fold, so
-    * out-of-tenant candidates never cost a score). Below the cap
+    * candidate slice BEFORE the ADC fold, so out-of-tenant
+    * candidates never cost a score). Below the cap
     * the grant rides the postings scan as sorted `nid IN (…)`
     * literals; above it the restriction stays a keyed semi-join
     * with the strategy left to Catalyst/AQE (a tenant's corpus
@@ -626,8 +657,8 @@ object AnnIndex {
     TenantOverlay.requireRegistered(spark, dir, "AnnIndex.probeTopKTenant",
       " (ad-hoc subsets: probeTopKFiltered)")
     Similarity.ivfPqProbe(
-      spark.read.parquet(s"$dir/centroids"),
-      spark.read.parquet(s"$dir/codebook"),
+      readAsset(spark, dir, "centroids"),
+      readAsset(spark, dir, "codebook"),
       tenantPostings(spark, dir, tenant, pushdownCap),
       queries, k, nprobe, m, dim, vecCol, idCol)
   }
@@ -640,15 +671,10 @@ object AnnIndex {
     * [[probeRangeTenant]] threshold-filters it. */
   private def tenantPostings(spark: SparkSession, dir: String,
                              tenant: String,
-                             pushdownCap: Int): DataFrame = {
-    val tIds = tenantLiveIds(spark, dir, tenant)
-    StoredIndex.idLiterals(tIds, pushdownCap) match {
-      case Some(l) => livePostings(spark, dir)
-        .filter(col("nid").isin(l: _*))
-      case None => livePostings(spark, dir)
-        .join(tIds.select(col("id").as("nid")), Seq("nid"), "left_semi")
-    }
-  }
+                             pushdownCap: Int): DataFrame =
+    grantedPostings(spark, dir,
+      tenantLiveIds(spark, dir, tenant).select(col("id").as("nid")),
+      pushdownCap, f => f)
 
   /** Threshold serve within a REGISTERED tenant — [[probeRange]]'s
     * semantics composed with the [[probeTopKTenant]] grant path,
@@ -659,7 +685,7 @@ object AnnIndex {
     * join→score→filter with NO rank window (the quality-gate shape:
     * "all of this tenant's vectors within distance ε of the
     * query"). The grant restricts the candidate slice BEFORE the
-    * LUT join and the ADC fold (pre-filter semantics — out-of-
+    * ADC fold (pre-filter semantics — out-of-
     * tenant candidates never cost a score): `nid IN (…)` literals
     * under the cap, keyed semi-join above. ADC uses no corpus
     * statistics, so no gauge is involved; same approximation
@@ -675,8 +701,8 @@ object AnnIndex {
     TenantOverlay.requireRegistered(spark, dir, "AnnIndex.probeRangeTenant",
       " (ad-hoc subsets: probeRange over a caller-filtered postings view)")
     Similarity.ivfPqRange(
-      spark.read.parquet(s"$dir/centroids"),
-      spark.read.parquet(s"$dir/codebook"),
+      readAsset(spark, dir, "centroids"),
+      readAsset(spark, dir, "codebook"),
       tenantPostings(spark, dir, tenant, pushdownCap),
       queries, threshold, nprobe, m, dim, vecCol, idCol)
   }
@@ -708,8 +734,8 @@ object AnnIndex {
     val pairs = TenantOverlay.livePairs(spark, dir, tenants)
       .select(col("qid"), col("id").as("nid"))
     Similarity.ivfPqProbe(
-      spark.read.parquet(s"$dir/centroids"),
-      spark.read.parquet(s"$dir/codebook"),
+      readAsset(spark, dir, "centroids"),
+      readAsset(spark, dir, "codebook"),
       livePostings(spark, dir), queries, k, nprobe, m, dim, vecCol,
       idCol, restrict = _.join(pairs, Seq("qid", "nid"), "left_semi"),
       excludeSelf = excludeSelf)
@@ -724,7 +750,7 @@ object AnnIndex {
     val parts = Seq("centroids", "codebook", "postings")
     parts.map { p =>
       spark.range(1).select(lit(p).as("part"),
-        lit(spark.read.parquet(s"$dir/$p").count()).as("n_rows"))
+        lit(readAsset(spark, dir, p).count()).as("n_rows"))
     }.reduce(_ unionByName _).orderBy("part")
   }
 
@@ -754,7 +780,7 @@ object AnnIndex {
     * SQL); tombstone-bearing states are spec-gated (ExtSpec). */
   def health(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.Ops.roundDet
-    val postings = spark.read.parquet(s"$dir/postings")
+    val postings = readAsset(spark, dir, "postings")
     val deletes = StoredIndex.readDeleteIds(spark, dir)
     val live = StoredIndex.filterTombstones(deletes, postings, "nid")
     val perCid = live.groupBy("cid").agg(count(lit(1L)).as("n"))
@@ -767,9 +793,9 @@ object AnnIndex {
       metricRow("max_bucket", perCid, max(col("n"))),
       metricRow("n_cids_live", perCid, count(lit(1L))),
       metricRow("n_centroids",
-        spark.read.parquet(s"$dir/centroids"), count(lit(1L))),
+        readAsset(spark, dir, "centroids"), count(lit(1L))),
       metricRow("n_codebook",
-        spark.read.parquet(s"$dir/codebook"), count(lit(1L))),
+        readAsset(spark, dir, "codebook"), count(lit(1L))),
       metricRow("n_live", live, count(lit(1L))),
       metricRow("n_postings", postings, count(lit(1L))),
       tombstoneMetricRow(spark, dir),

@@ -261,7 +261,7 @@ object KeywordIndex {
     val staging = StoredIndex.freshStaging(spark, dir)
     build(corpus, staging, textCol, idCol, version)
     TenantOverlay.carry(spark, dir, staging,
-      spark.read.parquet(s"$staging/doclens").select("id"),
+      readAsset(spark, staging, "doclens").select("id"),
       Some(TenantGauge))
     StoredIndex.swapStaged(spark, dir,
       Seq("postings", "positions", "doclens", "stats") ++
@@ -288,11 +288,17 @@ object KeywordIndex {
                           dels: Option[StoredIndex.Tombstones], terms: Seq[String],
                           idPred: Option[org.apache.spark.sql.Column])
       : DataFrame = {
-    val scan = spark.read.parquet(s"$dir/postings")
+    val scan = readAsset(spark, dir, "postings")
       .filter(col("term").isin(terms: _*))
     StoredIndex.filterTombstones(dels,
       idPred.fold(scan)(scan.filter), "id")
   }
+
+  /** An asset of the index at `dir`, read with its declared footer
+    * schema ([[StoredIndex.readAsset]]) — no schema-inference job. */
+  private def readAsset(spark: SparkSession, dir: String,
+                        name: String): DataFrame =
+    StoredIndex.readAsset(spark, "KeywordIndex", dir, name)
 
   /** The [min, max] hull of an allowed id set that was too large to
     * enumerate as literals: two driver values, ALWAYS sound as a
@@ -519,7 +525,7 @@ object KeywordIndex {
       statsSource(spark, dir), terms, k1, b)
     rankedPage(cand,
       StoredIndex.filterTombstones(dels,
-        spark.read.parquet(s"$dir/doclens"), "id"),
+        readAsset(spark, dir, "doclens"), "id"),
       topN, zeroFill)
   }
 
@@ -733,13 +739,17 @@ object KeywordIndex {
                         pushdownCap: Int = StoredIndex.HeldIdCap,
                         broadcastAllowed: Boolean = true): DataFrame = {
     requireQueryTerms(terms, "KeywordIndex.probeTopKFiltered")
-    val ids = allowed.select(col(idCol).cast("long").as("id"))
-      .na.drop().distinct()
-    val lits = StoredIndex.idLiterals(ids, pushdownCap)
+    val keys = allowed.select(col(idCol).cast("long").as("id")).na.drop()
+    val ids = keys.distinct()
+    // the un-deduplicated frame first, as StoredIndex.holdIds does: a
+    // local (held) grant collects without a job; only a grant naming
+    // more than the cap rows pays the distinct
+    val lits = StoredIndex.idLiterals(keys, pushdownCap)
+      .orElse(StoredIndex.idLiterals(ids, pushdownCap)).map(_.distinct)
     // above the cap: the set is un-enumerable but its [min, max]
     // hull still rides both scans beneath the semi-join
     val hull =
-      if (lits.isEmpty && pushdownCap > 0) allowedIdHull(ids) else None
+      if (lits.isEmpty && pushdownCap > 0) allowedIdHull(keys) else None
     val dels = StoredIndex.readDeleteIds(spark, dir)
     val slice = sliceOf(spark, dir, dels, terms)
     // above-cap allowed frame, hinted only when the caller vouches
@@ -757,7 +767,7 @@ object KeywordIndex {
     }
     // by-name: the global-stats, no-zero-fill plan never reads it
     lazy val lens = {
-      val raw = spark.read.parquet(s"$dir/doclens")
+      val raw = readAsset(spark, dir, "doclens")
       StoredIndex.filterTombstones(dels, lits match {
         case Some(l) => raw.filter(col("id").isin(l: _*))
         case None => hull.fold(raw)(raw.filter)
@@ -806,7 +816,7 @@ object KeywordIndex {
     def derive(spark: SparkSession, dir: String,
                assigned: DataFrame): () => Unit = {
       val lens = StoredIndex.filterTombstones(spark, dir,
-        spark.read.parquet(s"$dir/doclens"), "id")
+        readAsset(spark, dir, "doclens"), "id")
       val g = tenantGaugesOf(assigned.join(lens, Seq("id")))
       val rows = g.collect().toSeq
       () => writeTstats(spark, dir, g.schema, rows)
@@ -870,7 +880,7 @@ object KeywordIndex {
   private def doclensSliceOf(spark: SparkSession, dir: String,
                              dels: Option[StoredIndex.Tombstones],
                              ids: DataFrame): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/doclens")
+    val raw = readAsset(spark, dir, "doclens")
     StoredIndex.filterTombstones(dels,
       StoredIndex.idLiterals(ids, StoredIndex.HeldIdCap) match {
         case Some(l) => raw.filter(col("id").isin(l: _*))
@@ -1520,7 +1530,7 @@ object KeywordIndex {
     * contributes untenanted docs, so an absorb whose shard has none
     * leaves the target's gauges as they are. */
   private val Family = StoredIndex.Family("KeywordIndex",
-    (spark, dir) => spark.read.parquet(s"$dir/doclens").select("id"),
+    (spark, dir) => readAsset(spark, dir, "doclens").select("id"),
     Seq("postings", "doclens"), allOrNone = Seq("positions"),
     fold = (spark, out, inputs) => {
       val stats = inputs.map(readStatsRow(spark, _))
@@ -1579,11 +1589,11 @@ object KeywordIndex {
   def health(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.Ops.roundDet
     import StoredIndex.{litMetricRow, metricRow, tombstoneMetricRow}
-    val raw = spark.read.parquet(s"$dir/postings")
+    val raw = readAsset(spark, dir, "postings")
     val deletes = StoredIndex.readDeleteIds(spark, dir)
     val entries = StoredIndex.filterTombstones(deletes, raw, "id")
     val lens = StoredIndex.filterTombstones(deletes,
-      spark.read.parquet(s"$dir/doclens"), "id")
+      readAsset(spark, dir, "doclens"), "id")
     val perTerm = entries.groupBy("term").agg(count(lit(1L)).as("df"))
     val gauge = spark.read.parquet(s"$dir/stats")
     val bloomPresent =

@@ -656,7 +656,7 @@ object Similarity {
     val enc = pqEncode(corpus, cb, m, dim, vecCol, idCol)
       .repartition(col("nid"))
 
-    val lut = pqLut(queries, cb, m, sub, vecCol, idCol)
+    val lut = pqLut(queries, cb, sub, vecCol, idCol)
     val wPart = Window.partitionBy(col("qid"), col("__pid"))
       .orderBy(col("score").desc, col("nid").asc)
     val w = Window.partitionBy(col("qid"))
@@ -673,9 +673,14 @@ object Similarity {
   }
 
   /** Per-query ADC lookup table as ONE FLAT array (subspace-major,
-    * cid-ordered): explode the broadcast codebook row to (subspace,
-    * codeword), dot each against the query's matching subvector,
-    * regroup, flatten. Flat on purpose — an earlier 2-level
+    * cid-ordered), one row per query: a single projection over the
+    * queries × the broadcast one-row codebook — for each subspace mi
+    * and each of its codewords, the roundDet(6) dot of the query's
+    * matching subvector with the codeword, flattened. No aggregate:
+    * the codebook's array positions already ARE the (mi, cid) ranks
+    * by [[pqCodebook]]'s construction, so walking the arrays in
+    * order lays the entries out exactly as regrouping sorted
+    * (mi, cid) keys would. Flat on purpose — an earlier 2-level
     * array-of-arrays shape made every lookup
     * `element_at(element_at(lut, m), code)`, and the INNER
     * element_at materializes a copy of the 2 KB subspace array per
@@ -685,25 +690,19 @@ object Similarity {
     * A flat array lookup is a direct getDouble — nothing to copy —
     * so the score stays cheap no matter how many times the plan
     * re-evaluates it. */
-  private[ext] def pqLut(queries: DataFrame, cb: DataFrame, m: Int, sub: Int,
-                         vecCol: String, idCol: String): DataFrame =
+  private[graft] def pqLut(queries: DataFrame, cb: DataFrame, sub: Int,
+                           vecCol: String, idCol: String): DataFrame =
     normalized(queries, vecCol, idCol)
       .join(broadcast(cb))
-      .select(col("id").as("qid"), col("vn"),
-        posexplode(col("cb")).as(Seq("mi", "cands")))
-      .select(col("qid"), col("mi"),
-        explode(col("cands")).as("c"), col("vn"))
-      .withColumn("v", graft.ops.Ops.roundDet(
-        dot(slice(col("vn"), col("mi") * sub + 1, lit(sub)),
-          col("c.cvec")), 6))
-      .groupBy("qid", "mi")
-      .agg(transform(
-        array_sort(collect_list(struct(col("c.cid").as("cid"), col("v")))),
-        s => s.getField("v")).as("lv"))
-      .groupBy("qid")
-      .agg(flatten(transform(
-        array_sort(collect_list(struct(col("mi"), col("lv")))),
-        s => s.getField("lv"))).as("lut"))
+      .select(col("id").as("qid"),
+        lutOf(col("vn"), col("cb"), sub).as("lut"))
+
+  /** [[pqLut]]'s column over an L2-normalized query vector `vn` and
+    * the codebook column `cb` of the same row. */
+  private def lutOf(vn: Column, cb: Column, sub: Int): Column =
+    flatten(transform(cb, (cands, mi) => transform(cands, c =>
+      graft.ops.Ops.roundDet(
+        dot(slice(vn, mi * sub + 1, lit(sub)), c.getField("cvec")), 6))))
 
   /** ADC score against a flat [[pqLut]] column: K is read from the
     * lut's own length (size/m), so the expression needs no
@@ -748,7 +747,11 @@ object Similarity {
 
   /** The QUERY side of [[ivfPqTopK]], taking the three index assets
     * as frames: probe the nprobe nearest centroids per query, ADC-
-    * score only the probed buckets' postings, rank. Factored out so
+    * score only the probed buckets' postings, rank. The query side is
+    * ONE row per query until the centroid probe: its [[pqLut]] is a
+    * projection over that row and the broadcast codebook, not an
+    * aggregate, and rides the probed (qid, cid) rows into the
+    * candidate join (no LUT shuffle, no LUT broadcast). Factored out so
     * the in-query path (x8) and the stored-index path
     * ([[AnnIndex.probeTopK]], x9) run LITERALLY the same chain — the
     * build-once/serve-many split is a storage decision, never a
@@ -756,9 +759,9 @@ object Similarity {
     * [[pqEncode]]×[[ivfAssign]] join, whether computed in-query or
     * read back from parquet. `restrict` (identity by default — the
     * plan is unchanged for every existing caller) hooks a
-    * per-(qid, nid) candidate restriction in BEFORE the LUT join and
-    * the ADC fold — the batched-filtered serve's per-query allowed
-    * subsets, applied where disallowed candidates cost nothing.
+    * per-(qid, nid) candidate restriction in BEFORE the ADC fold —
+    * the batched-filtered serve's per-query allowed subsets, applied
+    * where disallowed candidates cost nothing.
     * `excludeSelf` (default true — the near-dup/self-search posture,
     * where queries ARE corpus vectors and a vector must not match
     * itself) drops candidates with nid == qid; set it false when the
@@ -772,29 +775,42 @@ object Similarity {
                  idCol: String = "vec_id",
                  restrict: DataFrame => DataFrame = df => df,
                  excludeSelf: Boolean = true): DataFrame = {
-    val sub = dim / m
-    val q = queries.select(col(idCol).as("qid"),
-      col(vecCol).cast("array<double>").as("qvec"))
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("qcos").desc, col("cid").asc)
-    val probed = q.join(broadcast(cents))
-      .withColumn("qcos", cosine(col("qvec"), col("cvec")))
-      .withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= nprobe)
-      .select("qid", "cid")
-
-    val lut = pqLut(queries, cb, m, sub, vecCol, idCol)
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("score").desc, col("nid").asc)
-    val cand0 = probed.join(index, Seq("cid"))
+    val cand0 = probedWithLut(cents, cb, queries, nprobe, dim / m, vecCol,
+      idCol).join(index, Seq("cid"))
     restrict(if (excludeSelf) cand0.filter(col("qid") =!= col("nid"))
         else cand0)
-      .join(broadcast(lut), Seq("qid"))
       .withColumn("score", graft.ops.Ops.roundDet(pqScore(m), 4))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("qid", "rank", "nid", "score")
       .orderBy("qid", "rank")
+  }
+
+  /** The query side [[ivfPqProbe]] and [[ivfPqRange]] share: ONE row
+    * per query carries its [[pqLut]] column (computed before the
+    * centroid broadcast), then the nprobe nearest centroids per query
+    * (cosine desc, ties to the lower cid) — (qid, cid, lut) rows, so
+    * the candidate join hands every posting its query's LUT with no
+    * LUT aggregate, shuffle or broadcast join. */
+  private def probedWithLut(cents: DataFrame, cb: DataFrame,
+                            queries: DataFrame, nprobe: Int, sub: Int,
+                            vecCol: String, idCol: String): DataFrame = {
+    val q = queries.select(col(idCol).as("qid"),
+        col(vecCol).cast("array<double>").as("qvec"),
+        graft.functions.GraftFunctions.l2_normalize(
+          col(vecCol).cast("array<double>")).as("vn"))
+      .join(broadcast(cb))
+      .select(col("qid"), col("qvec"),
+        lutOf(col("vn"), col("cb"), sub).as("lut"))
+    val wq = Window.partitionBy(col("qid"))
+      .orderBy(col("qcos").desc, col("cid").asc)
+    q.join(broadcast(cents))
+      .withColumn("qcos", cosine(col("qvec"), col("cvec")))
+      .withColumn("qrank", row_number().over(wq))
+      .filter(col("qrank") <= nprobe)
+      .select("qid", "cid", "lut")
   }
 
   /** RANGE (threshold) search over the same IVFADC chain as
@@ -805,30 +821,20 @@ object Similarity {
     * function: the per-query ROW_NUMBER rank is the one piece of
     * [[ivfPqProbe]] a threshold filter makes unnecessary, so the
     * plan is join→score→filter, fully pipelined, no per-qid sort
-    * shuffle. Same approximation contract as top-k: candidates
-    * outside the nprobe probed buckets are not seen. */
+    * shuffle. The query side is [[ivfPqProbe]]'s: one row per query,
+    * its LUT a projection carried on the probed (qid, cid) rows. Same
+    * approximation contract as top-k: candidates outside the nprobe
+    * probed buckets are not seen. */
   def ivfPqRange(cents: DataFrame, cb: DataFrame, index: DataFrame,
                  queries: DataFrame, threshold: Double,
                  nprobe: Int = 12, m: Int = 4, dim: Int = 64,
                  vecCol: String = "embedding",
-                 idCol: String = "vec_id"): DataFrame = {
-    val sub = dim / m
-    val q = queries.select(col(idCol).as("qid"),
-      col(vecCol).cast("array<double>").as("qvec"))
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("qcos").desc, col("cid").asc)
-    val probed = q.join(broadcast(cents))
-      .withColumn("qcos", cosine(col("qvec"), col("cvec")))
-      .withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= nprobe)
-      .select("qid", "cid")
-    val lut = pqLut(queries, cb, m, sub, vecCol, idCol)
-    probed.join(index, Seq("cid"))
+                 idCol: String = "vec_id"): DataFrame =
+    probedWithLut(cents, cb, queries, nprobe, dim / m, vecCol, idCol)
+      .join(index, Seq("cid"))
       .filter(col("qid") =!= col("nid"))
-      .join(broadcast(lut), Seq("qid"))
       .withColumn("score", graft.ops.Ops.roundDet(pqScore(m), 4))
       .filter(col("score") >= threshold)
       .select("qid", "nid", "score")
       .orderBy("qid", "nid")
-  }
 }

@@ -455,6 +455,30 @@ object StoredIndex {
     }
   }
 
+  // ------------------------------------------ declared asset schemas
+
+  /** The footer schemas the families' builds write, by (family,
+    * asset) — read back with [[readAsset]] so a serve plans its scans
+    * without a schema-inference job per asset (one Spark job each:
+    * three per dense probe before). Declared all-nullable: a file
+    * source reads every column nullable, inferred or not, so the
+    * plans are the ones inference gave. */
+  private val AssetSchemas: Map[(String, String), StructType] = Map(
+    ("AnnIndex", "centroids") -> "cid BIGINT, cvec ARRAY<DOUBLE>",
+    ("AnnIndex", "codebook") ->
+      "cb ARRAY<ARRAY<STRUCT<cid: BIGINT, cvec: ARRAY<DOUBLE>>>>",
+    ("AnnIndex", "postings") -> "nid BIGINT, codes ARRAY<BIGINT>, cid BIGINT",
+    ("KeywordIndex", "postings") ->
+      "term STRING, id BIGINT, tf BIGINT, dl BIGINT",
+    ("KeywordIndex", "doclens") -> "id BIGINT, dl BIGINT"
+  ).map { case (k, ddl) => k -> StructType.fromDDL(ddl) }
+
+  /** `dir/asset` of a `family` index, read with its declared schema. */
+  private[graft] def readAsset(spark: SparkSession, family: String,
+                               dir: String, asset: String): DataFrame =
+    spark.read.schema(AssetSchemas((family, asset)))
+      .parquet(s"$dir/$asset")
+
   // ----------------------------------------------------- tombstones
 
   /** A tombstone id set read ONCE per operation, in whichever form

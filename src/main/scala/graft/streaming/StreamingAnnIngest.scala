@@ -317,7 +317,7 @@ final class StreamingAnnIngest(spark: SparkSession, indexDir: String,
     // anti-join. Pre-bloom indexes fall back to the full anti-join.
     val newOnly = graft.ext.StoredIndex.bloomGatedNewOnly(
       spark, indexDir, fresh, "vec_id",
-      spark.read.parquet(s"$indexDir/postings")
+      StoredIndex.readAsset(spark, "AnnIndex", indexDir, "postings")
         .select(col("nid").as("vec_id")))
       .localCheckpoint()
     if (!newOnly.isEmpty) {

@@ -222,7 +222,7 @@ final class StreamingCorpusIngest(spark: SparkSession, root: String,
     val delta = text.corpusDelta(from, to).localCheckpoint()
     val newOnly = StoredIndex.bloomGatedNewOnly(spark, keywordDir,
         delta, "doc_id",
-        spark.read.parquet(s"$keywordDir/doclens")
+        StoredIndex.readAsset(spark, "KeywordIndex", keywordDir, "doclens")
           .select(col("id").as("doc_id")))
       .localCheckpoint()
     if (!newOnly.isEmpty)
@@ -377,19 +377,24 @@ final class StreamingCorpusIngest(spark: SparkSession, root: String,
     * corpus text / embeddings tables are never scanned. A tenant
     * frame registered with [[graft.ext.KeywordIndex
     * .registerTenants]] can hand its id slice in as `allowed`
-    * (KeywordIndex.tenantLiveIds). */
+    * (KeywordIndex.tenantLiveIds). The grant is resolved once
+    * ([[graft.ext.StoredIndex.holdIds]]) and the held set restricts
+    * both families: under the cap neither page plan scans `allowed`
+    * again. */
   def probeHybridFiltered(terms: Seq[String], queryVec: DataFrame,
                           allowed: DataFrame, topN: Int,
                           pageSize: Int = 20,
                           idCol: String = "doc_id"): DataFrame = {
     requireKeywordServing("probeHybridFiltered")
+    // the grant resolved ONCE: held driver literals (as a local frame)
+    // under the cap, so neither family re-derives or re-scans it
+    val grant = StoredIndex.holdIds(allowed, idCol).frame()
     val lex = graft.ext.KeywordIndex.probeTopKFiltered(spark,
-      keywordDir, terms, pageSize, allowed, scopedStats = false,
-      idCol = idCol)
+      keywordDir, terms, pageSize, grant, scopedStats = false,
+      idCol = "id")
     val dense = graft.ext.AnnIndex
       .probeTopKFiltered(spark, s"$root/ann_index", queryVec,
-        allowed.select(col(idCol).cast("long").as("vec_id")),
-        k = pageSize)
+        grant.select(col("id").as("vec_id")), k = pageSize)
       .select(col("nid").as("doc_id"), col("rank"))
     graft.ext.Relevance.rrfFuse(lex, dense, topN)
   }

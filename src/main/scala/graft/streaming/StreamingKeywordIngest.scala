@@ -270,7 +270,7 @@ final class StreamingKeywordIngest(spark: SparkSession, indexDir: String,
     // one-row-per-doc doclens asset, never the postings
     val newOnly = graft.ext.StoredIndex.bloomGatedNewOnly(
       spark, indexDir, fresh, "doc_id",
-      spark.read.parquet(s"$indexDir/doclens")
+      StoredIndex.readAsset(spark, "KeywordIndex", indexDir, "doclens")
         .select(col("id").as("doc_id")))
       .localCheckpoint()
     if (!newOnly.isEmpty) {

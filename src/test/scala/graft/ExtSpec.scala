@@ -1751,6 +1751,46 @@ class ExtSpec extends SparkTestBase {
       s"flat-LUT vs explicit-join diverge:\n got=${got.collect().mkString(",")}\nwant=${want.collect().mkString(",")}")
   }
 
+  test("pqLut: the one-row-per-query projection equals the two-" +
+      "aggregate formulation element for element (gapped corpus)") {
+    // the LUT used to be built by exploding each query against every
+    // (subspace, codeword), dotting, and regrouping twice by sorted
+    // (qid, mi) and (qid, cid) keys — kept here as the reference the
+    // projection must match bit for bit, on the gapped corpus whose
+    // sampled ids are not multiples of the stride
+    val sub = 16
+    val embs = spark.read.parquet(s"$sf001/embeddings.parquet")
+    val corpus = embs.filter($"vec_id" =!= 40 && $"vec_id" =!= 200)
+    val queries = corpus.filter($"vec_id" < 8 || $"vec_id" === 41)
+    val cb = Similarity.pqCodebook(corpus, stride = 20, m = 4, dim = 64)
+      .localCheckpoint()
+    val got = Similarity.pqLut(queries, cb, sub, "embedding", "vec_id")
+    val want = queries.select($"vec_id".as("qid"),
+        graft.functions.GraftFunctions.l2_normalize(
+          $"embedding".cast("array<double>")).as("vn"))
+      .join(broadcast(cb))
+      .select($"qid", $"vn", posexplode($"cb").as(Seq("mi", "cands")))
+      .select($"qid", $"mi", explode($"cands").as("c"), $"vn")
+      .withColumn("v", graft.ops.Ops.roundDet(Similarity.dot(
+        slice($"vn", $"mi" * sub + 1, lit(sub)), $"c.cvec"), 6))
+      .groupBy("qid", "mi")
+      .agg(transform(
+        array_sort(collect_list(struct($"c.cid".as("cid"), $"v"))),
+        s => s.getField("v")).as("lv"))
+      .groupBy("qid")
+      .agg(flatten(transform(
+        array_sort(collect_list(struct($"mi", $"lv"))),
+        s => s.getField("lv"))).as("lut"))
+    def bits(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
+        .map { case (q, l) => (q, l.map(java.lang.Double.doubleToLongBits)) }
+    val (g, w) = (bits(got), bits(want))
+    assert(g.size == 9 && g.map(_._1) == w.map(_._1), s"qids: $g vs $w")
+    val lutLen = cb.select(size(flatten($"cb"))).head.getInt(0)
+    assert(g.forall(_._2.size == lutLen), "LUT length must be m·K")
+    assert(g == w, "projected LUT differs from the two-aggregate LUT")
+  }
+
   test("semantic outlier pruning flags the planted outlier first") {
     // label 0: three near-identical vectors + one near-opposite; the
     // elementwise median tracks the majority, so the opposite vector

@@ -26,6 +26,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the medallion layers (bronze, silver, gold, meta) read parquet
   *    only with a declared schema: a schema-less `.read.parquet(`
   *    pays a schema-inference Spark job per read
+  *  - under ext and streaming, the stored-index assets `centroids`,
+  *    `codebook` and `postings` are read only through
+  *    `StoredIndex.readAsset` (a declared schema), never by a
+  *    schema-less `.read.parquet(` of their path
   */
 class LintSpec extends AnyFunSuite {
 
@@ -103,6 +107,19 @@ class LintSpec extends AnyFunSuite {
     } yield s"$p:${text.take(m.start).count(_ == '\n') + 1}"
     assert(hits.isEmpty,
       s"schema-less-parquet-read violated at:\n  ${hits.mkString("\n  ")}")
+  }
+
+  test("stored-index serves read their assets with a declared schema") {
+    val dirs = Seq("ext", "streaming")
+      .map(d => Paths.get("src", "main", "scala", "graft", d))
+    val schemaLess =
+      "\\.read\\s*\\.parquet\\(\\s*s?\"[^\"]*/(centroids|codebook|postings)\"".r
+    val hits = for {
+      (p, text) <- sources if dirs.exists(p.startsWith)
+      m <- schemaLess.findAllMatchIn(text)
+    } yield s"$p:${text.take(m.start).count(_ == '\n') + 1}"
+    assert(hits.isEmpty,
+      s"schema-less-asset-read violated at:\n  ${hits.mkString("\n  ")}")
   }
 
   test("files end with a newline") {

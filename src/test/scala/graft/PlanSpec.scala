@@ -759,6 +759,24 @@ Location: InMemoryFileIndex [file:/tmp/other/lineitem.parquet]"""
       s"tenant serve touches corpus text in:\n$plan")
   }
 
+  test("IVFADC serve: the query side is one row per query — no LUT " +
+      "aggregate, no exchange keyed on (qid, mi) (x9 plan)") {
+    import graft.ext.AnnIndex
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_ann_planlut").toString + "/ix"
+    AnnIndex.build(embs, dir)
+    val q = embs.filter(col("vec_id") < 5)
+    for (plan <- Seq(
+        executed(AnnIndex.probeTopK(spark, dir, q, k = 3)),
+        executed(AnnIndex.probeRange(spark, dir, q, threshold = 0.3)))) {
+      assert(!plan.contains("ObjectHashAggregate"),
+        s"LUT built by an aggregate in:\n$plan")
+      assert("Exchange hashpartitioning\\(qid#\\d+L?, mi#".r
+        .findFirstIn(plan).isEmpty,
+        s"exchange keyed on (qid, mi) in:\n$plan")
+    }
+  }
+
   test("dense tenant serve: grant as pushed nid IN literals under " +
       "the cap (no join against the overlay at all), honest " +
       "semi-join above it, tenant= pushed to the overlay scan " +

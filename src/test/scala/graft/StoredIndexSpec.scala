@@ -64,6 +64,31 @@ class StoredIndexSpec extends SparkTestBase {
     assert(kept.contains(61L))
   }
 
+  test("declared asset schemas read what schema inference reads, " +
+      "after a build and after an append") {
+    val root = Files.createTempDirectory("graft_schemas_").toString
+    val embs = spark.read.parquet(s"$sf001/embeddings.parquet")
+    graft.ext.AnnIndex.build(embs.filter($"vec_id" < 300), s"$root/ann")
+    graft.ext.AnnIndex.append(
+      embs.filter($"vec_id" >= 300 && $"vec_id" < 320), s"$root/ann")
+    KeywordIndex.build(docs.filter($"doc_id" < 100), s"$root/kw")
+    KeywordIndex.append(
+      docs.filter($"doc_id" >= 100 && $"doc_id" < 120), s"$root/kw")
+    for ((family, dir, asset) <- Seq(
+        ("AnnIndex", "ann", "centroids"), ("AnnIndex", "ann", "codebook"),
+        ("AnnIndex", "ann", "postings"), ("KeywordIndex", "kw", "postings"),
+        ("KeywordIndex", "kw", "doclens"))) {
+      val declared = StoredIndex.readAsset(spark, family, s"$root/$dir",
+        asset)
+      val inferred = spark.read.parquet(s"$root/$dir/$asset")
+      assert(declared.schema == inferred.schema,
+        s"$family $asset: ${declared.schema} vs ${inferred.schema}")
+      assert(declared.collect().toSeq.map(_.toString).sorted ==
+        inferred.collect().toSeq.map(_.toString).sorted,
+        s"$family $asset: rows differ")
+    }
+  }
+
   test("the overlap pool runs each task in its submitter's job group") {
     val sc = spark.sparkContext
     val groups = mutable.ArrayBuffer.empty[String]

@@ -267,14 +267,20 @@ class CorpusIngestSpec extends graft.SparkTestBase {
     assert(surfaced.subsetOf(ids(joint.text.corpus())) &&
       surfaced.forall(_ % 3 == 0) && !surfaced.exists(Set(6L, 9L)),
       "page must surface only live tenant docs")
-    // plan shape: the overlay slice is the only tenant-side read —
-    // tenant= pushed to the clustered overlay scan; no doclens (the
-    // lexical side is the global-stats posture), no corpus text
+    // plan shape: the overlay slice is the only tenant-side read,
+    // resolved once into a held grant before the page plans — its
+    // read pushes tenant= to the clustered overlay scan, and the page
+    // plan scans neither the overlay, nor doclens (the lexical side
+    // is the global-stats posture), nor corpus text
+    val grantPlan = KeywordIndex.tenantLiveIds(spark, joint.keywordDir,
+      "t0").queryExecution.executedPlan.toString
+    assert("tenants[^\\n]*PushedFilters: \\[[^\\n]*EqualTo\\(tenant".r
+      .findFirstIn(grantPlan).isDefined,
+      s"tenant= not pushed to the overlay scan in:\n$grantPlan")
     val plan = joint.probeHybridTenant(terms, qv, "t0", topN = 8)
       .queryExecution.executedPlan.toString
-    assert("tenants[^\\n]*PushedFilters: \\[[^\\n]*EqualTo\\(tenant".r
-      .findFirstIn(plan).isDefined,
-      s"tenant= not pushed to the overlay scan in:\n$plan")
+    assert(!plan.contains("tenants"),
+      s"tenant hybrid re-scans the held grant's overlay in:\n$plan")
     assert(!plan.contains("doclens"),
       s"tenant hybrid reads doclens in:\n$plan")
     assert(!plan.contains("split(") && !plan.contains("text#"),
@@ -626,7 +632,7 @@ class CorpusIngestSpec extends graft.SparkTestBase {
 
   test("joint retract and readmit job budget (keyword serving): at " +
       "most 50 and 62 Spark jobs") {
-    // one document each; observed 45 and 56 jobs (111 and 82 before
+    // one document each; observed 41 and 55 jobs (111 and 82 before
     // each request's ids were resolved once on the driver)
     val root = Files.createTempDirectory("graft_jbudget_").toString
     val joint = new StreamingCorpusIngest(spark, root,
@@ -646,6 +652,39 @@ class CorpusIngestSpec extends graft.SparkTestBase {
     assert(joint.alignment().isEmpty)
     assert(retract.jobs <= 50, retract.bySite)
     assert(readmit.jobs <= 62, readmit.bySite)
+  }
+
+  test("serve job budget: a dense probe at most 7 Spark jobs, a dense " +
+      "tenant probe 8, a filtered hybrid 11 — no schema inference") {
+    // observed 13, 14 and 23 before the declared-schema asset reads,
+    // the one-row-per-query LUT projection and the once-held grant
+    val root = Files.createTempDirectory("graft_sbudget_").toString
+    val joint = new StreamingCorpusIngest(spark, root,
+      keywordServing = true)
+    joint.seed(docs.filter($"doc_id" < 200), embs)
+    val annDir = s"$root/ann_index"
+    AnnIndex.registerTenants(spark, annDir,
+      docs.filter($"doc_id" < 200).select($"doc_id".as("vec_id"),
+        concat(lit("t"), ($"doc_id" % 3).cast("string")).as("tenant")))
+    val qv = embs.filter($"doc_id" === 7L)
+      .select($"doc_id".as("vec_id"), $"embedding").localCheckpoint()
+    val allowed = (0L until 200L by 2L).toDF("doc_id")
+    val budgets = Seq(
+      ("AnnIndex.probeTopK", 7,
+        () => AnnIndex.probeTopK(spark, annDir, qv, k = 20)),
+      ("AnnIndex.probeTopKTenant", 8,
+        () => AnnIndex.probeTopKTenant(spark, annDir, qv, 20, "t0")),
+      ("probeHybridFiltered", 11,
+        () => joint.probeHybridFiltered(Seq("data", "query"), qv,
+          allowed, 10)))
+    budgets.foreach { case (what, budget, page) =>
+      val t = traced(page().collect())
+      info(s"$what ${t.jobs} jobs: ${t.bySite}")
+      assert(t.result.nonEmpty, s"$what served an empty page")
+      assert(t.jobs <= budget, s"$what: ${t.bySite}")
+      assert(!t.sites.exists(_.startsWith("parquet at")),
+        s"$what infers an asset schema: ${t.bySite}")
+    }
   }
 
   test("joint retract and readmit: literal ids ≡ the over-cap frame form") {
